@@ -84,7 +84,6 @@ def cmd_qps() -> None:
     corpus = synth_corpus(spark, n_docs, n_parts=max(4 * cpus, n_docs // 2500)).persist()
     corpus.count()
     idx = build_index(spark, corpus)
-    idx.blocks.persist().count()
     idx.doc_blocks.persist().count()
     idx.term_stats.persist().count()
     base = [
@@ -204,6 +203,8 @@ def cmd_postcache() -> None:
             "hot_terms": cache.n_hot_terms,
             "cache_bytes_used": cache.bytes_used,
         }
+        cache.hot_blocks.unpersist()
+        cache.hot_terms.unpersist()
         print(f"budget {mb}MB: {out['budgets'][mb]}", file=sys.stderr)
     print(json.dumps(out))
 

@@ -91,8 +91,6 @@ def get_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
             "doc_id",
         )
         idx = build_index(spark, docs, id_col="doc_id")
-        idx.blocks = idx.blocks.persist()
-        idx.blocks.count()
         idx.doc_blocks = idx.doc_blocks.persist()
         idx.doc_blocks.count()
         _INDEX_CACHE[key] = idx
@@ -312,7 +310,7 @@ def _q_block_roundtrip(spark, sf_dir):
     from .operators.blocks import unpack_blocks
 
     idx = get_index(spark, sf_dir)
-    return unpack_blocks(idx.blocks).select(
+    return unpack_blocks(idx.doc_blocks).select(
         "term", F.col("doc_id").cast("long"), F.col("tf").cast("long"), F.col("doclen").cast("long")
     )
 

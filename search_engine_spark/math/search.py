@@ -38,19 +38,14 @@ from __future__ import annotations
 
 import math as _math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import scoring as S
+from ..plans import serve
 from ..plans.build import InvertedIndex
-from ..plans.query import (
-    _candidate_rows,
-    _prox_col,
-    _prox_frame,
-    _qterms_idf_df,
-    _score_frame,
-    digest_query,
-    top_k,
-)
+from ..plans.query import digest_query, top_k
 from .index import extract_math_spans
 from .texparse import tex_subpaths
 
@@ -154,11 +149,10 @@ def _mnc_per_exp(
     sortWithinPartitions alone gives the kernel its contiguous groups. A
     multi-branch query (concrete + wildcard paths) unions per-branch copies
     of the partitioning, so the exchange stays. Saved lr tables are
-    partitioned by lseg_bucket (NOT by doc) — callers loading from storage
-    must leave this False.
+    partitioned by lseg_bucket (NOT by doc), so the flag is ignored on a
+    table that carries that column: trusting it there would emit duplicate
+    partial rows per doc.
     """
-    import pandas as pd
-
     from .mnc import order_query_paths
     from .texparse import tex_lr_paths
 
@@ -379,7 +373,11 @@ def _mnc_per_exp(
             )
 
     npart = spark.sparkContext.defaultParallelism
-    skip_exchange = assume_doc_partitioned and len(branches) == 1
+    skip_exchange = (
+        assume_doc_partitioned
+        and len(branches) == 1
+        and "lseg_bucket" not in lr_postings.columns
+    )
     if per_doc:
         arranged = (
             matched
@@ -471,8 +469,9 @@ def split_query(qtext: str) -> tuple[list[str], list[str]]:
     return terms, texes
 
 
-# Above this BYTE budget the per-doc math results stay as DataFrames (the
-# shuffle-join combine) instead of broadcasting into the term kernel — a
+# Above this BYTE budget the per-doc math results are not collected for a
+# broadcast into the term kernel; each math candidate is routed to the
+# serving shard that owns its doc id instead (_mixed_routed_search) — a
 # hostile query matching a large corpus slice (or one with pathological
 # position lists) must not materialize on the driver. The budget is
 # measured IN-PLAN before anything is collected (count + sum(size(_mpos))
@@ -484,6 +483,14 @@ def split_query(qtext: str) -> tuple[list[str], list[str]]:
 MAX_BROADCAST_MATH_BYTES = 64 << 20
 _MDOC_BYTES = 48  # per-doc payload overhead (key + score + list header)
 _MPOS_BYTES = 8  # per matched-expression position
+
+_MIXED_SCHEMA = (
+    "doc_id long, bm25 double, match_dim double, max_math double, "
+    "prox double, score double"
+)
+_MIXED_COLS = ["doc_id", "bm25", "match_dim", "max_math", "prox", "score"]
+_MIXED_DTYPES = dict(zip(_MIXED_COLS, ["int64"] + ["float64"] * 5))
+_MATH_COLS = ["doc_id", "kw_idx", "math_score", "_mpos"]
 
 
 def mixed_search(
@@ -516,26 +523,23 @@ def mixed_search(
     extra keyword per TEX keyword (reference search/search.c:215-237) — a
     doc whose only adjacency is term<->math gets prox != ln 0.3.
 
-    Serving shape: when the index carries doc-sharded blocks and the math
-    candidate payload fits ``broadcast_budget_bytes`` (measured in-plan
-    BEFORE any collect), the per-doc math scores +
-    matched positions BROADCAST into the doc-sharded serving kernel, which
-    computes the complete mixed total in-shard with a local top-k — the
-    term side pays ZERO shuffle, exactly like term-only serving
-    (_mixed_shard_search; the reference merges its transient math postings
-    into the same DAAT loop as the term iterators, search/search.c:374).
-    Otherwise the set-oriented join/aggregate combine runs.
+    Serving shape: every term-bearing doc is scored by the doc-sharded
+    serving scorer (plans/serve._batch_score_shard) with a per-doc math
+    channel — the reference merges its transient math postings into the
+    same DAAT loop as the term iterators (search/search.c:374). When the
+    math candidate payload fits ``broadcast_budget_bytes`` (measured
+    in-plan BEFORE any collect) the channel is BROADCAST to every shard and
+    the term side pays ZERO shuffle (_mixed_shard_search); otherwise each
+    math candidate is routed to the shard that owns its doc id
+    (_mixed_routed_search), which is also how a math-only query is scored.
     """
     terms, texes = split_query(qtext)
     n_terms = len(terms)
-    # probe = the in-kernel broadcast path is on the table: the per-tex
-    # frames are then persisted so the byte-budget measurement job and the
-    # subsequent collect (or the fallback combine) share one evaluation
-    probe = bool(terms) and index.doc_blocks is not None
 
-    # per-TEX-keyword per-doc frames: (doc_id, math_score, [exp_pos...])
-    per_tex: list[tuple[int, DataFrame]] = []
+    # per-TEX-keyword per-doc frames: (doc_id, kw_idx, math_score, [exp_pos...])
+    per_tex: list[DataFrame] = []
     for ti, tex in enumerate(texes):
+        kw_idx = F.lit(n_terms + ti).alias("kw_idx")
         if math_lr_postings is not None:
             from .texparse import tex_lr_paths
 
@@ -552,6 +556,7 @@ def mixed_search(
                 continue
             mdf = pe.select(
                 "doc_id",
+                kw_idx,
                 (F.col("mnc_score") / F.lit(100.0 * n_q)).alias("math_score"),
                 F.col("exp_pos_list").alias("_mpos"),
             )
@@ -566,127 +571,84 @@ def mixed_search(
                     F.max("sim").alias("math_score"),
                     F.collect_list("exp_pos").alias("_mpos"),
                 )
+                .select("doc_id", kw_idx, "math_score", "_mpos")
             )
-        if probe:
+        if terms:
+            # the byte-budget measurement job and the collect (or the routed
+            # plan) then share one evaluation
             mdf = mdf.persist()
-        per_tex.append((ti, mdf))
+        per_tex.append(mdf)
 
-    if probe:
+    if not terms and not per_tex:
+        return spark.createDataFrame([], _MIXED_SCHEMA)
+    kws = []
+    if terms:
+        dfmap = serve.df_lookup(index, terms)
+        kws = [
+            (i, t, S.idf(dfmap.get(t, 0.0), float(index.docN)))
+            for i, t in enumerate(terms)
+        ]
         # byte-budget the candidate payload IN-PLAN (count + position
         # volume over the cached frames) BEFORE collecting anything; only a
         # payload that provably fits is materialized for the broadcast
-        small = True
         spent = 0
-        for _, mdf in per_tex:
+        for mdf in per_tex:
             m = mdf.agg(
                 F.count(F.lit(1)).alias("nd"),
                 F.coalesce(F.sum(F.size("_mpos")), F.lit(0)).alias("np"),
             ).collect()[0]
             spent += int(m["nd"]) * _MDOC_BYTES + int(m["np"]) * _MPOS_BYTES
             if spent > broadcast_budget_bytes:
-                small = False
                 break
-        if small:
-            minfo: dict[int, list] = {}
-            for ti, mdf in per_tex:
-                for r in mdf.collect():
-                    e = minfo.setdefault(int(r["doc_id"]), [0.0, []])
-                    e[0] = max(e[0], float(r["math_score"]))
-                    e[1].append((n_terms + ti, [int(p) for p in r["_mpos"]]))
-            for _, mdf in per_tex:
+        if spent <= broadcast_budget_bytes:
+            minfo = _minfo(r for mdf in per_tex for r in mdf.collect())
+            for mdf in per_tex:
                 mdf.unpersist()
-            return _mixed_shard_search(
-                spark, index, terms, mode, minfo, n_terms, k, with_prox
-            )
+            return _mixed_shard_search(spark, index, kws, mode, minfo, k, with_prox)
 
-    # ---- set-oriented combine (no terms / no doc-sharded blocks / math
-    # candidate set too large to broadcast) --------------------------------
-    math_df = None
-    math_pos = None
-    for ti, mdf in per_tex:
-        math_df = mdf if math_df is None else math_df.unionByName(mdf)
-        if with_prox:
-            mp = mdf.select(
-                "doc_id",
-                F.lit(n_terms + ti).alias("kw_idx"),
-                F.col("_mpos").alias("positions"),
-            )
-            math_pos = mp if math_pos is None else math_pos.unionByName(mp)
-    if math_df is not None:
-        math_df = math_df.groupBy("doc_id").agg(F.max("math_score").alias("max_math"))
-
-    term_pos = None
+    out = _mixed_routed_search(spark, index, kws, mode, per_tex, k, with_prox)
     if terms:
-        rows = _candidate_rows(index, terms, use_blocks=True, with_positions=with_prox)
-        kw = _qterms_idf_df(spark, index, [("q", i, t) for i, t in enumerate(terms)])
-        per_doc = _score_frame(
-            index, rows, kw, mode, with_prox=False, n_terms_by_qid={"q": len(terms)}
-        ).select("doc_id", "bm25", "match_dim")
-        if with_prox:
-            term_pos = rows.join(
-                F.broadcast(kw.select("term", "kw_idx")), "term"
-            ).select("doc_id", "kw_idx", "positions")
-    else:
-        per_doc = None
-
-    ln03 = float(_math.log(0.3))
-    if per_doc is None and math_df is None:
-        return spark.createDataFrame(
-            [], "doc_id long, bm25 double, match_dim double, max_math double, prox double, score double"
-        )
-    if per_doc is None:
-        combined = math_df.select(
-            "doc_id",
-            F.lit(1.0).alias("bm25"),
-            F.lit(0.0).alias("match_dim"),
-            F.col("max_math"),
-        )
-    elif math_df is None:
-        combined = per_doc.withColumn("max_math", F.lit(0.0))
-    else:
-        # top level is an OR merge in the reference (search/search.c:374);
-        # for mode='and' the term-side predicate already filtered per_doc,
-        # so a left join keeps "all term keywords + optional math" semantics
-        how = "left" if mode == "and" else "full"
-        combined = per_doc.join(math_df, "doc_id", how).select(
-            "doc_id",
-            F.coalesce("bm25", F.lit(1.0)).alias("bm25"),
-            F.coalesce("match_dim", F.lit(0.0)).alias("match_dim"),
-            F.coalesce("max_math", F.lit(0.0)).alias("max_math"),
-        )
-
-    # proximity over the merged term + matched-math position stream
-    pos_all = term_pos
-    if math_pos is not None:
-        pos_all = math_pos if pos_all is None else pos_all.unionByName(math_pos)
-    if with_prox and pos_all is not None:
-        prox_df = _prox_frame(pos_all, ["doc_id"])
-        combined = (
-            combined.join(prox_df, "doc_id", "left")
-            .withColumn("prox", _prox_col())
-            .drop("min_dist")
-        )
-    else:
-        combined = combined.withColumn("prox", F.lit(ln03))
-
-    total = (
-        F.col("prox")
-        + (F.lit(1.0) + F.col("max_math")) / F.lit(2.0) * F.col("bm25")
-        + F.lit(S.MATCH_DIM_WEIGHT)
-        * (F.col("match_dim") + F.when(F.col("max_math") > 0, 1.0).otherwise(0.0))
-    )
-    scored = combined.withColumn("score", total)
-    out = top_k(scored, k).select(
-        "doc_id", "bm25", "match_dim", "max_math", "prox", "score"
-    )
-    if probe:
-        # the fallback plan reads the persisted per-tex frames; the caller
+        # the routed plan reads the persisted per-tex frames; the caller
         # frees them after materializing (operators.dedup.release pattern)
-        out._cached_inputs = [mdf for _, mdf in per_tex]
+        out._cached_inputs = per_tex
     return out
 
 
-def _solo_prox(plist: list, ln03: float) -> float:
+def _minfo(rows) -> dict[int, list]:
+    """(doc_id, kw_idx, math_score, positions) rows ->
+    doc_id -> [max_math, [(kw_idx, [positions...])...]]."""
+    minfo: dict[int, list] = {}
+    for doc, kw_idx, score, pos in rows:
+        e = minfo.setdefault(int(doc), [0.0, []])
+        e[0] = max(e[0], float(score))
+        e[1].append((int(kw_idx), [int(p) for p in pos]))
+    return minfo
+
+
+def _math_channel(minfo: dict[int, list]):
+    """minfo -> the scorer's math channel (plans/serve._batch_score_shard):
+    sorted doc ids, their max math score, and one (kw_idx, doc ids,
+    positions) stream per TEX keyword."""
+    docs = sorted(minfo)
+    by_kw: dict[int, tuple[list, list]] = {}
+    for d in docs:
+        for kw_idx, pl in minfo[d][1]:
+            sdoc, spos = by_kw.setdefault(kw_idx, ([], []))
+            sdoc += [d] * len(pl)
+            spos += pl
+    streams = [
+        (kw_idx, np.asarray(sdoc, dtype=np.int64), np.asarray(spos, dtype=np.int64))
+        for kw_idx, (sdoc, spos) in by_kw.items()
+        if sdoc
+    ]
+    return (
+        np.asarray(docs, dtype=np.int64),
+        np.asarray([minfo[d][0] for d in docs], dtype=np.float64),
+        streams,
+    )
+
+
+def _solo_prox(plist: list) -> float:
     """Proximity of a MATH-ONLY doc: min adjacent cross-keyword gap within
     the matched expression positions alone (>= 2 TEX keywords needed)."""
     arr = sorted((p, kwi) for kwi, pl in plist for p in pl)
@@ -695,172 +657,189 @@ def _solo_prox(plist: list, ln03: float) -> float:
         if k1 != k2 and (best is None or p2 - p1 < best):
             best = p2 - p1
     if best is None:
-        return ln03
+        return S.LN_03
     return float(_math.log(0.3 + _math.exp(-float(best))))
+
+
+def _solo_frame(minfo: dict[int, list], with_prox: bool, skip=frozenset()) -> pd.DataFrame:
+    """Math-only docs (no term postings): bm25 = 1, match_dim = 0, prox from
+    their matched expression positions alone."""
+    rows = []
+    for d, (s, plist) in minfo.items():
+        if d in skip:
+            continue
+        prox = _solo_prox(plist) if with_prox else S.LN_03
+        rows.append((d, 1.0, 0.0, s, prox, prox + (1.0 + s) / 2.0 + S.MATCH_DIM_WEIGHT))
+    return pd.DataFrame(rows, columns=_MIXED_COLS).astype(_MIXED_DTYPES)
+
+
+def _score_shard(batches, kws, mode, k, with_prox, avgdl, channel) -> pd.DataFrame | None:
+    """One shard's term blocks + math channel -> its local top-k plus every
+    term-matched math doc (the serving scorer), or None without term hits."""
+    decoded = serve._decode_partition(batches, want_pos=with_prox)
+    if not decoded:
+        return None
+    for _, res in serve._batch_score_shard(
+        [("q", kws, mode)], decoded, avgdl, k, with_prox, math=channel
+    ):
+        udoc, bm25, match_dim, _, prox, total, mm = res
+        return pd.DataFrame(
+            {
+                "doc_id": udoc,
+                "bm25": bm25,
+                "match_dim": match_dim,
+                "max_math": mm,
+                "prox": prox,
+                "score": total,
+            }
+        )
+    return None
 
 
 def _mixed_shard_search(
     spark: SparkSession,
     index: InvertedIndex,
-    terms: list[str],
+    kws: list[tuple[int, str, float]],
     mode: str,
     minfo: dict[int, list],
-    n_terms: int,
     k: int,
     with_prox: bool,
 ) -> DataFrame:
-    """Mixed serving through the doc-sharded kernel (zero term-side shuffle).
+    """Mixed serving with the math channel BROADCAST to every shard (zero
+    term-side shuffle).
 
-    ``minfo``: doc_id -> [max_math, [(kw_idx, [positions...])...]] —
-    broadcast to every shard. Each shard decodes its term blocks once,
-    computes the COMPLETE reference total per doc (prox over merged
-    term+math positions, (1+max_math)/2 * bm25, match-dim bonus incl. the
-    math dimension, search/search.c:253-274) and emits its local top-k
-    PLUS every math-matched doc it term-matched (so the driver-side
-    math-only branch can be deduped exactly: a kernel row exists for every
-    term∩math doc, and a kernel row always carries the true total). Rows
-    moved per query: n_shards*k + |math∩term| — same order as term-only
-    serving. Math-only docs (no term postings anywhere) become a tiny
-    driver-built frame with bm25=1; a doc-keyed priority window keeps the
-    kernel row when both exist. mode='and' keeps reference semantics (all
-    term keywords required; math optional) so no math-only branch applies.
+    ``minfo``: doc_id -> [max_math, [(kw_idx, [positions...])...]]. Each
+    shard decodes its term blocks once, scores the COMPLETE reference total
+    per doc and emits its local top-k PLUS every math-matched doc it
+    term-matched (so the math-only branch can be deduped exactly: a kernel
+    row exists for every term∩math doc, and a kernel row always carries the
+    true total). Rows moved per query: n_shards*k + |math∩term| — same
+    order as term-only serving. Math-only docs (no term postings anywhere)
+    become a tiny locally built frame with bm25=1; a doc-keyed priority
+    window keeps the kernel row when both exist.
+    mode='and' keeps reference semantics (all term keywords required; math
+    optional) so no math-only branch applies.
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..plans.serve import _decode_partition
-
-    ln03 = float(_math.log(0.3))
-    from ..plans.serve import df_lookup
-
-    dfmap = df_lookup(index, terms)
-    kws = [
-        (i, t, S.idf(dfmap.get(t, 0.0), float(index.docN)))
-        for i, t in enumerate(terms)
-    ]
     avgdl = float(index.avgdl)
-    bc = spark.sparkContext.broadcast(minfo)
-    from ..plans.serve import serving_coalesce
-
-    blocks = serving_coalesce(index.doc_blocks, docN=index.docN).filter(F.col("term").isin(terms))
-    schema = (
-        "doc_id long, bm25 double, match_dim double, max_math double, "
-        "prox double, score double"
+    bc = spark.sparkContext.broadcast(_math_channel(minfo))
+    hot_pool = index.hot_pool_bc
+    term_set = {t for _, t, _ in kws}
+    blocks = serve.serving_coalesce(index.doc_blocks, docN=index.docN).filter(
+        F.col("term").isin(sorted(term_set))
     )
-    k1, b = S.BM25_K1, S.BM25_B
-    frac = S.BM25_K1 / avgdl
-    mdw = S.MATCH_DIM_WEIGHT
 
     def kernel(batches):
-        decoded = _decode_partition(batches, want_pos=with_prox)
-        if not decoded:
-            return
-        row_doc, row_kw, row_score = [], [], []
-        rp_doc, rp_kw, rp_pos = [], [], []
-        for kw_idx, term, idf in kws:
-            got = decoded.get(term)
-            if got is None:
-                continue
-            ids, tfs, dls, pos = got
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            sc = idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + frac * dl))
-            row_doc.append(ids)
-            row_kw.append(np.full(len(ids), kw_idx, dtype=np.int64))
-            row_score.append(sc)
-            if with_prox and pos is not None and len(pos):
-                rp_doc.append(np.repeat(ids, tfs))
-                rp_kw.append(np.repeat(np.int64(kw_idx), int(tfs.sum())))
-                rp_pos.append(pos)
-        if not row_doc:
-            return
-        doc = np.concatenate(row_doc)
-        score = np.concatenate(row_score)
-        udoc, inv = np.unique(doc, return_inverse=True)
-        n = len(udoc)
-        bm25 = np.full(n, 1.0)
-        nz = score != 0.0
-        np.add.at(bm25, inv[nz], score[nz])
-        match_dim = np.zeros(n)
-        np.add.at(match_dim, inv[nz], 1.0)
-        n_matched = np.zeros(n, dtype=np.int64)
-        np.add.at(n_matched, inv, 1)
+        if hot_pool is not None:
+            batches = iter(serve.with_hot_pool(batches, hot_pool, term_set))
+        out = _score_shard(batches, kws, mode, k, with_prox, avgdl, bc.value)
+        if out is not None:
+            yield out
 
-        # math component for docs present in this shard (vectorized key probe)
-        mv = bc.value
-        mm = np.zeros(n)
-        if mv:
-            keys = np.fromiter(mv.keys(), dtype=np.int64, count=len(mv))
-            ins = np.searchsorted(udoc, keys)
-            ok = (ins < n) & (udoc[np.minimum(ins, n - 1)] == keys)
-            for key, slot in zip(keys[ok], ins[ok]):
-                s, plist = mv[int(key)]
-                mm[slot] = s
-                if with_prox:
-                    for kwi, pl in plist:
-                        if pl:
-                            rp_doc.append(np.full(len(pl), key, dtype=np.int64))
-                            rp_kw.append(np.full(len(pl), kwi, dtype=np.int64))
-                            rp_pos.append(np.asarray(pl, dtype=np.int64))
-
-        if with_prox and rp_doc:
-            pdoc = np.concatenate(rp_doc)
-            pkw = np.concatenate(rp_kw)
-            ppos = np.concatenate(rp_pos)
-            order = np.lexsort((ppos, pdoc))
-            pdoc, pkw, ppos = pdoc[order], pkw[order], ppos[order]
-            sel = (pdoc[1:] == pdoc[:-1]) & (pkw[1:] != pkw[:-1])
-            mind = np.full(n, np.inf)
-            if sel.any():
-                gidx = np.searchsorted(udoc, pdoc[1:][sel])
-                np.minimum.at(mind, gidx, (ppos[1:] - ppos[:-1])[sel].astype(np.float64))
-            prox = np.log(0.3 + np.exp(-mind))
-        else:
-            prox = np.full(n, ln03)
-
-        if mode == "and":
-            keep = n_matched == n_terms
-            if not keep.any():
-                return
-            udoc, bm25, match_dim, prox, mm = (
-                udoc[keep], bm25[keep], match_dim[keep], prox[keep], mm[keep]
-            )
-        total = prox + (1.0 + mm) / 2.0 * bm25 + mdw * (match_dim + (mm > 0))
-        order = np.lexsort((udoc, -total))
-        emit = np.zeros(len(udoc), dtype=bool)
-        emit[order[:k]] = True
-        emit |= mm > 0  # every math∩term doc, for exact driver-side dedup
-        yield pd.DataFrame(
-            {
-                "doc_id": udoc[emit],
-                "bm25": bm25[emit],
-                "match_dim": match_dim[emit],
-                "max_math": mm[emit],
-                "prox": prox[emit],
-                "score": total[emit],
-            }
-        )
-
-    local = blocks.mapInPandas(kernel, schema)
-    solo_rows = []
-    if mode != "and":
-        for d, (s, plist) in minfo.items():
-            prox = _solo_prox(plist, ln03) if with_prox else ln03
-            solo_rows.append(
-                (int(d), 1.0, 0.0, float(s), prox, prox + (1.0 + s) / 2.0 + mdw)
-            )
-    if solo_rows:
-        solo = spark.createDataFrame(solo_rows, schema)
+    local = blocks.mapInPandas(kernel, _MIXED_SCHEMA)
+    if mode != "and" and minfo:
+        solo = spark.createDataFrame(_solo_frame(minfo, with_prox), _MIXED_SCHEMA)
         w = Window.partitionBy("doc_id").orderBy("_prio")
-        combined = (
+        local = (
             local.withColumn("_prio", F.lit(0))
             .unionByName(solo.withColumn("_prio", F.lit(1)))
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_prio", "_rn")
         )
-    else:
-        combined = local
-    return top_k(combined, k).select(
-        "doc_id", "bm25", "match_dim", "max_math", "prox", "score"
+    return top_k(local, k).select(*_MIXED_COLS)
+
+
+def _mixed_routed_search(
+    spark: SparkSession,
+    index: InvertedIndex,
+    kws: list[tuple[int, str, float]],
+    mode: str,
+    per_tex: list[DataFrame],
+    k: int,
+    with_prox: bool,
+) -> DataFrame:
+    """Mixed serving with each math candidate ROUTED to its doc's shard.
+
+    For a math candidate set too large to broadcast: every math row goes to
+    the serving shard that owns its doc id — the doc-id runs of
+    plans/cache.partition_doc_ranges over the serving layout — and the
+    shard's term blocks meet it in one cogrouped pandas kernel that runs
+    the same scorer as the broadcast path. Both sides are keyed by the
+    same content lookup (a block's first doc id pins its shard), so each
+    doc is scored by exactly one group and no dedup window is needed:
+    term-matched docs get the full mixed total, math-only docs bm25 = 1.
+    A math-only query (no term keywords) has no term side and spreads its
+    math rows over hash buckets of the doc id instead.
+    """
+    from ..plans.cache import partition_doc_ranges, run_owner
+
+    avgdl = float(index.avgdl)
+    solo = mode != "and" or not kws
+    hot_pool = index.hot_pool_bc
+    term_set = {t for _, t, _ in kws}
+    math_rows = per_tex[0]
+    for mdf in per_tex[1:]:
+        math_rows = math_rows.unionByName(mdf)
+
+    def score(key, blocks: pd.DataFrame, mrows: pd.DataFrame) -> pd.DataFrame:
+        mrows = mrows[mrows["doc_id"] >= 0]  # drop the group placeholders
+        minfo = _minfo(mrows[_MATH_COLS].itertuples(index=False, name=None))
+        frames = [blocks]
+        if hot_pool is not None:
+            frames.insert(0, serve.pool_rows(hot_pool, int(key[0]), term_set))
+        out = _score_shard(
+            (f for f in frames if f is not None),
+            kws, mode, k, with_prox, avgdl, _math_channel(minfo),
+        )
+        frames = [] if out is None else [out]
+        if solo:
+            seen = set() if out is None else set(out["doc_id"][out["max_math"] > 0].tolist())
+            frames.append(_solo_frame(minfo, with_prox, skip=seen))
+        return pd.concat(frames, ignore_index=True) if frames else _solo_frame({}, with_prox)
+
+    if not kws:
+        bucket = F.pmod(F.xxhash64("doc_id"), F.lit(spark.sparkContext.defaultParallelism))
+        local = math_rows.groupBy(bucket.alias("_shard")).applyInPandas(
+            lambda key, mrows: score(key, pd.DataFrame(), mrows), _MIXED_SCHEMA
+        )
+        return top_k(local, k).select(*_MIXED_COLS)
+
+    serving = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
+    blocks = serving.filter(F.col("term").isin(sorted(term_set)))
+    # an attached posting cache carries the runs of the FULL serving layout
+    # (its pool is keyed by them); the cold view alone would miss hot docs.
+    # Without one, the runs of the query terms' blocks suffice: a math doc
+    # outside them has no query-term posting and is scored math-only.
+    owner = run_owner(
+        hot_pool.value[1] if hot_pool is not None else partition_doc_ranges(blocks)
     )
+
+    @F.pandas_udf("long")
+    def shard_of(doc: pd.Series) -> pd.Series:
+        return pd.Series(owner(doc.to_numpy()))
+
+    blocks = blocks.withColumn("_shard", shard_of("first_doc_id"))
+    math_rows = math_rows.withColumn("_shard", shard_of("doc_id"))
+    if hot_pool is not None:
+        # a shard whose query postings all sit in the pool may have neither
+        # a cold block nor a math row, and cogroup forms no group for it:
+        # one placeholder math row (doc_id -1) per pooled shard forces one
+        types = {f.name: f.dataType for f in math_rows.schema.fields}
+        pids = spark.createDataFrame(
+            [(int(p),) for p in sorted(hot_pool.value[0])], "_shard long"
+        )
+        math_rows = math_rows.unionByName(
+            pids.select(
+                F.lit(-1).cast(types["doc_id"]).alias("doc_id"),
+                F.lit(-1).cast(types["kw_idx"]).alias("kw_idx"),
+                F.lit(0.0).cast(types["math_score"]).alias("math_score"),
+                F.array().cast(types["_mpos"]).alias("_mpos"),
+                "_shard",
+            )
+        )
+    local = (
+        blocks.groupBy("_shard")
+        .cogroup(math_rows.groupBy("_shard"))
+        .applyInPandas(score, _MIXED_SCHEMA)
+    )
+    return top_k(local, k).select(*_MIXED_COLS)

@@ -264,42 +264,22 @@ def _doc_meta_sentinel(doc_ids: np.ndarray, lens: np.ndarray):
 def pack_blocks(
     postings_with_doclen: DataFrame,
     block: int = DEFAULT_BLOCK,
-    num_partitions: int | None = None,
-    layout: str = "term",
-    assume_doc_partitioned: bool = False,
 ) -> DataFrame:
     """(term, doc_id, tf, positions, doclen) -> packed block rows.
 
-    ``layout``:
-    - "term": range-partition on (term, doc_id) — co-locates each term's
-      posting run (split across partitions for skewed terms); the layout
-      for WAND metadata sweeps and bulk analytics over posting lists.
-    - "doc": range-partition on doc_id ONLY — every term of a given doc
-      lives in the same shard. This is the classic document-sharded
-      serving layout: a query becomes a narrow per-shard DAAT kernel with
-      local top-k and a tiny global merge — ZERO shuffle per query
-      (plans/serve.py). Real-world distributed engines (incl. the
-      reference behind a sharding proxy) serve this way.
+    The rows are range-partitioned on doc_id ONLY — every term of a given
+    doc lives in the same shard. This is the classic document-sharded
+    serving layout: a query becomes a narrow per-shard DAAT kernel with
+    local top-k and a tiny global merge — ZERO shuffle per query
+    (plans/serve.py). Real-world distributed engines (incl. the reference
+    behind a sharding proxy) serve this way.
     """
     sc = postings_with_doclen.sparkSession.sparkContext
     # 4 partitions per core: smaller per-task sorts pipeline better and stay
     # in execution memory (measured 23s -> 14s at local[32], 23M rows)
-    nparts = num_partitions or 4 * sc.defaultParallelism
-    if layout == "doc":
-        if assume_doc_partitioned:
-            # inverted rows inherit the corpus's doc-range partitioning
-            # (assign_doc_ids range-partitions by url == doc order; the
-            # tokenizer is narrow) — reuse it: sort within partitions only,
-            # NO exchange at all for the serving layout
-            arranged = postings_with_doclen.sortWithinPartitions("term", "doc_id")
-        else:
-            arranged = postings_with_doclen.repartitionByRange(
-                nparts, "doc_id"
-            ).sortWithinPartitions("term", "doc_id")
-    else:
-        arranged = postings_with_doclen.repartitionByRange(
-            nparts, "term", "doc_id"
-        ).sortWithinPartitions("term", "doc_id")
+    arranged = postings_with_doclen.repartitionByRange(
+        4 * sc.defaultParallelism, "doc_id"
+    ).sortWithinPartitions("term", "doc_id")
 
     def pack(batches) -> Iterator["pa.RecordBatch"]:
         # mapInArrow: the positions list column is consumed through its flat
@@ -472,7 +452,7 @@ def invert_pack_blocks(
     bound evaluated at serve time) and each doc chunk additionally emits a
     DOC_META_TERM sentinel row carrying its (doc_id, doclen) pairs, from
     which docN/avgdl/doc_meta all derive downstream — no doclen pre-pass.
-    Semantics match inverted_frame + pack_blocks(layout="doc") exactly
+    Semantics match inverted_frame + pack_blocks exactly
     (modulo the sentinel rows, filtered by every decoder): same tokenizer,
     same tf cap (2048 + position slice), same block packing; only the
     block boundaries may differ (per Arrow batch rather than per cached

@@ -52,18 +52,6 @@ def doc_meta(tokens: DataFrame, docs_with_ids: DataFrame) -> DataFrame:
     )
 
 
-def doc_meta_from_inverted(inverted: DataFrame, docs_with_ids: DataFrame) -> DataFrame:
-    """(doc_id, doclen) from the map-side inverted frame (doclen is
-    replicated on every posting row; max() collapses it). Zero-token docs
-    emit no posting rows and are recovered from the corpus by left join."""
-    lens = inverted.groupBy("doc_id").agg(F.max("doclen").alias("doclen"))
-    return (
-        docs_with_ids.select("doc_id")
-        .join(lens, "doc_id", "left")
-        .select("doc_id", F.coalesce("doclen", F.lit(0)).cast("int").alias("doclen"))
-    )
-
-
 def term_stats(postings: DataFrame) -> DataFrame:
     """(term, df, cf): document frequency + collection frequency."""
     return postings.groupBy("term").agg(

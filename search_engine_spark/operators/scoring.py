@@ -18,9 +18,9 @@ Formulas (replicated exactly, quirks included, for rank-identity):
 - total = prox + math_factor * bm25 + 10000 * match_dim
                                                      search/search.c:263-274
 
-The reference computes in float32; we keep float32 in the numpy paths and
-offer float64 in the SQL-expression path (used where results are compared
-against a float64 SQL oracle). Partial scores are summed in query-keyword
+The reference computes in float32; the engine's one scorer
+(plans/serve._batch_score_shard) computes in float64, and the parity oracle
+(oracle.py) can run either. Partial scores are summed in query-keyword
 order in the parity oracle.
 """
 
@@ -29,7 +29,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, functions as F
 
 BM25_B = 0.75  # search/bm25-score.h:4
 BM25_K1 = 1.5  # search/bm25-score.h:5
@@ -41,28 +40,6 @@ LN_03 = math.log(0.3)
 
 def idf(df: float, docN: float) -> float:
     return math.log((docN - df + 0.5) / (df + 0.5))
-
-
-def idf_col(df: Column, docN: float) -> Column:
-    return F.log((F.lit(float(docN)) - df + F.lit(0.5)) / (df + F.lit(0.5)))
-
-
-def tf_norm_col(tf: Column, doclen: Column, avgdl: float) -> Column:
-    """tf*(k1+1)/(tf + k1*(1-b+frac*doclen)), frac = k1/avgdl (the quirk)."""
-    frac = BM25_K1 / avgdl
-    num = tf * F.lit(BM25_K1 + 1.0)
-    den = tf + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B) + F.lit(frac) * doclen)
-    return num / den
-
-
-def tf_norm_np(tf: np.ndarray, doclen: np.ndarray, avgdl: float) -> np.ndarray:
-    """float32 numpy twin of tf_norm_col (used for block-max metadata)."""
-    k1 = np.float32(BM25_K1)
-    b = np.float32(BM25_B)
-    frac = np.float32(BM25_K1) / np.float32(avgdl)
-    tf = tf.astype(np.float32)
-    dl = doclen.astype(np.float32)
-    return (tf * (k1 + np.float32(1.0))) / (tf + k1 * (np.float32(1.0) - b + frac * dl))
 
 
 def prox_min_dist(pos_lists: list[np.ndarray]) -> int:

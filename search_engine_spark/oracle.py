@@ -6,7 +6,7 @@ idf, the frac=k1/avgDocLen quirk, bm25 = 1.0 + sum of nonzero per-term
 scores summed in query-keyword order, proximity over capped position lists,
 total = prox + 0.5*bm25 + 10000*match_dim, top-155, tie-break
 (score DESC, doc_id ASC). ``float32=True`` mirrors the reference's float
-arithmetic; ``False`` mirrors the engine's SQL-expression (float64) path.
+arithmetic; ``False`` mirrors the engine's float64 scorer.
 """
 
 from __future__ import annotations

@@ -31,9 +31,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.tokenizer import inverted_frame
-from ..operators import postings as P
-from ..operators.blocks import DEFAULT_BLOCK, pack_blocks
+from ..operators.blocks import DEFAULT_BLOCK
 from ..operators.docids import assign_doc_ids
 from ..sources.tables import read_table, write_table
 
@@ -43,13 +41,12 @@ class InvertedIndex:
     """Umbrella handle over the index tables (reference indices/indices.c)."""
 
     postings: DataFrame  # uncompressed posting rows (term, doc_id, tf, positions, doclen)
-    blocks: DataFrame  # packed posting blocks, term-range layout
+    doc_blocks: DataFrame  # packed posting blocks, doc-sharded layout: the one block table
     doc_meta: DataFrame  # (doc_id, doclen)
     term_stats: DataFrame  # (term, df, cf)
     docstore: DataFrame  # (doc_id, url, text)
     docN: int
     avgdl: float
-    doc_blocks: DataFrame | None = None  # packed blocks, doc-sharded layout (serving)
     # posting-cache pool broadcast (pool, bounds) set by
     # plans.cache.attach_posting_cache; carried on the index handle (NOT on
     # a DataFrame attribute, which silently vanishes under any transform)
@@ -61,7 +58,7 @@ class InvertedIndex:
 
     def cache(self) -> "InvertedIndex":
         """Warm the serving path (reference postcache role, indices/postcache.c)."""
-        self.blocks.cache()
+        self.doc_blocks.cache()
         self.term_stats.cache()
         return self
 
@@ -73,8 +70,6 @@ def build_index(
     id_col: str | None = None,
     keep_row_postings: bool = True,
     persist: bool = True,
-    term_layout_blocks: bool = False,
-    fused: bool = True,
 ) -> InvertedIndex:
     """Build all index tables from a corpus DataFrame.
 
@@ -82,13 +77,11 @@ def build_index(
     row_number-over-url docIDs (any stable total order preserves the
     reference's semantics; the default matches FIXTURES.md).
 
-    ``fused`` (default): the ONE-SCAN build — tokenize -> invert ->
-    block-pack as a single map-side Arrow stage (invert_pack_blocks) whose
-    output also carries the doc-meta sentinel rows; docN/avgdl/doc_meta/
-    term_stats all derive from the persisted blocks, so the corpus text is
-    read and tokenized exactly once. ``fused=False`` keeps the two-stage
-    pipeline that materializes the inverted posting rows (required for
-    ``term_layout_blocks``).
+    The build is ONE scan: tokenize -> invert -> block-pack run as a single
+    map-side Arrow stage (invert_pack_blocks) whose output also carries the
+    doc-meta sentinel rows; docN/avgdl/doc_meta/term_stats all derive from
+    the persisted blocks, so the corpus text is read and tokenized exactly
+    once.
 
     ``persist``: cache the frames consumed by several downstream actions;
     without it every action re-runs tokenization. On a real cluster this
@@ -108,65 +101,28 @@ def build_index(
         docs = corpus.withColumn("doc_id", F.col(id_col).cast("long"))
 
     docs = docs.select("doc_id", "url", "text")
-    if fused and not term_layout_blocks:
-        if persist:
-            # feeds the fused pack AND the docstore
-            docs = docs.persist()
-        # docIDs from url-range partitioning leave the corpus doc-range
-        # partitioned -> the serving layout needs no exchange at all
-        doc_blocks = invert_pack_blocks(
-            docs, block=block, assume_doc_partitioned=(id_col is None)
-        )
-        if persist:
-            doc_blocks = doc_blocks.persist()
-        # the one action of the build: materializes the fused scan into the
-        # persisted blocks and reads docN/avgdl off the sentinel metadata
-        stats = collection_stats_from_blocks(doc_blocks)
-        return InvertedIndex(
-            postings=unpack_blocks(doc_blocks) if keep_row_postings else None,
-            blocks=doc_blocks,
-            doc_meta=doc_meta_from_blocks(doc_blocks),
-            term_stats=term_stats_from_blocks(doc_blocks),
-            docstore=docs.select("doc_id", "url", "text"),
-            docN=stats["docN"],
-            avgdl=stats["avgdl"],
-            doc_blocks=doc_blocks,
-            len_sum=stats["len_sum"],
-        )
-
-    # unfused path: materialize inverted posting rows (also the source for
-    # the optional term-clustered layout, which needs a (term, doc_id)
-    # exchange over per-posting rows)
-    rows_dl = inverted_frame(docs)
-    dmeta = P.doc_meta_from_inverted(rows_dl, docs)
     if persist:
-        rows_dl = rows_dl.persist()
-        dmeta = dmeta.persist()
-    stats = P.collection_stats(dmeta)
-    tstats = P.term_stats(rows_dl)
-    doc_blocks = pack_blocks(
-        rows_dl, block=block, layout="doc",
-        assume_doc_partitioned=(id_col is None),
+        # feeds the fused pack AND the docstore
+        docs = docs.persist()
+    # docIDs from url-range partitioning leave the corpus doc-range
+    # partitioned -> the serving layout needs no exchange at all
+    doc_blocks = invert_pack_blocks(
+        docs, block=block, assume_doc_partitioned=(id_col is None)
     )
-    blocks = (
-        pack_blocks(rows_dl, block=block)
-        if term_layout_blocks
-        else doc_blocks
-    )
-    docstore = docs.select("doc_id", "url", "text")
-
+    if persist:
+        doc_blocks = doc_blocks.persist()
+    # the one action of the build: materializes the fused scan into the
+    # persisted blocks and reads docN/avgdl off the sentinel metadata
+    stats = collection_stats_from_blocks(doc_blocks)
     return InvertedIndex(
-        # row-level postings view (positions as array<int>) decodes from the
-        # packed blocks on demand; the raw inverted rows carry varbyte bytes
-        postings=unpack_blocks(blocks) if keep_row_postings else None,
-        blocks=blocks,
-        doc_meta=dmeta,
-        term_stats=tstats,
-        docstore=docstore,
+        postings=unpack_blocks(doc_blocks) if keep_row_postings else None,
+        doc_blocks=doc_blocks,
+        doc_meta=doc_meta_from_blocks(doc_blocks),
+        term_stats=term_stats_from_blocks(doc_blocks),
+        docstore=docs.select("doc_id", "url", "text"),
         docN=stats["docN"],
         avgdl=stats["avgdl"],
-        doc_blocks=doc_blocks,
-        len_sum=stats.get("len_sum"),
+        len_sum=stats["len_sum"],
     )
 
 
@@ -181,16 +137,14 @@ def save_index(index: InvertedIndex, path: str) -> None:
     the layout by hash-repartitioning on ``_shard`` — hashing never splits
     a shard value, and merging whole shards preserves doc disjointness.
     """
-    write_table(index.blocks, f"{path}/blocks", partition_cols=None)
-    if index.doc_blocks is not None:
-        write_table(
-            index.doc_blocks.withColumn("_shard", F.spark_partition_id()),
-            f"{path}/doc_blocks",
-        )
+    write_table(
+        index.doc_blocks.withColumn("_shard", F.spark_partition_id()),
+        f"{path}/doc_blocks",
+    )
     write_table(index.doc_meta, f"{path}/doc_meta")
     write_table(index.term_stats, f"{path}/term_stats")
     write_table(index.docstore, f"{path}/docstore")
-    spark = index.blocks.sparkSession
+    spark = index.doc_blocks.sparkSession
     len_sum = index.len_sum if index.len_sum is not None else -1
     spark.createDataFrame(
         [(index.docN, float(index.avgdl), int(len_sum))],
@@ -253,8 +207,20 @@ def load_index(spark: SparkSession, path: str, with_row_postings: bool = False) 
 
     import os
 
-    blocks = read_table(spark, f"{path}/blocks")
-    if not {"block_max_tf", "block_min_dl"}.issubset(set(blocks.columns)):
+    from pyspark.errors import AnalysisException
+
+    bdir = f"{path}/doc_blocks"
+    try:
+        # through Spark, not os.path: the index may live on any filesystem
+        doc_blocks = read_table(spark, bdir)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e):
+            raise
+        raise ValueError(
+            f"index at {path!r} has no doc_blocks table (an older save "
+            "layout); rebuild the index with this version"
+        ) from e
+    if not {"block_max_tf", "block_min_dl"}.issubset(set(doc_blocks.columns)):
         # pre-round-5 block schema (block_max_tfn, no serve-time extremes):
         # fail HERE with a clear message instead of an opaque missing-column
         # error at serve time
@@ -263,45 +229,40 @@ def load_index(spark: SparkSession, path: str, with_row_postings: bool = False) 
             "block_max_tf/block_min_dl); rebuild the index with this version"
         )
     srow = spark.read.parquet(f"{path}/stats").collect()[0]
-    doc_blocks = None
-    if os.path.exists(f"{path}/doc_blocks"):
-        doc_blocks = read_table(spark, f"{path}/doc_blocks")
-        if "_shard" in doc_blocks.columns:
-            # The serving invariant is only that every doc's blocks land in
-            # ONE partition. A parquet split never crosses a FILE boundary:
-            # splits either take whole files (merging whole shards is
-            # invariant-preserving) or carve a big file at row-group
-            # boundaries (invariant-BREAKING: observed at 400k docs). A file
-            # is never carved when it fits one EFFECTIVE split — computed
-            # the way FilePartition.maxSplitBytes does (openCost + the
-            # bytes-per-core shrink), NOT from maxPartitionBytes alone.
-            # Only then serve straight off the scan (zero per-query
-            # exchange); otherwise restore the layout by repartitioning on
-            # the writing shard id.
-            try:
-                sizes = [
-                    os.path.getsize(os.path.join(f"{path}/doc_blocks", f))
-                    for f in os.listdir(f"{path}/doc_blocks")
-                    if f.endswith(".parquet")
-                ]
-            except OSError:
-                sizes = []
-            eff = _effective_max_split_bytes(spark, sizes) if sizes else None
-            if eff is not None and max(sizes) <= eff:
-                doc_blocks = doc_blocks.drop("_shard")
-            else:
-                n = spark.sparkContext.defaultParallelism * 4
-                doc_blocks = doc_blocks.repartition(n, "_shard").drop("_shard")
+    if "_shard" in doc_blocks.columns:
+        # The serving invariant is only that every doc's blocks land in ONE
+        # partition. A parquet split never crosses a FILE boundary: splits
+        # either take whole files (merging whole shards is
+        # invariant-preserving) or carve a big file at row-group boundaries
+        # (invariant-BREAKING: observed at 400k docs). A file is never
+        # carved when it fits one EFFECTIVE split — computed the way
+        # FilePartition.maxSplitBytes does (openCost + the bytes-per-core
+        # shrink), NOT from maxPartitionBytes alone. Only then serve
+        # straight off the scan (zero per-query exchange); otherwise restore
+        # the layout by repartitioning on the writing shard id.
+        try:
+            sizes = [
+                os.path.getsize(os.path.join(bdir, f))
+                for f in os.listdir(bdir)
+                if f.endswith(".parquet")
+            ]
+        except OSError:
+            sizes = []
+        eff = _effective_max_split_bytes(spark, sizes) if sizes else None
+        if eff is not None and max(sizes) <= eff:
+            doc_blocks = doc_blocks.drop("_shard")
+        else:
+            n = spark.sparkContext.defaultParallelism * 4
+            doc_blocks = doc_blocks.repartition(n, "_shard").drop("_shard")
     len_sum = int(srow["len_sum"]) if "len_sum" in srow.__fields__ else -1
     return InvertedIndex(
-        postings=unpack_blocks(blocks) if with_row_postings else None,
-        blocks=blocks,
+        postings=unpack_blocks(doc_blocks) if with_row_postings else None,
+        doc_blocks=doc_blocks,
         doc_meta=read_table(spark, f"{path}/doc_meta"),
         term_stats=read_table(spark, f"{path}/term_stats"),
         docstore=read_table(spark, f"{path}/docstore"),
         docN=int(srow["docN"]),
         avgdl=float(srow["avgdl"]),
-        doc_blocks=doc_blocks,
         len_sum=None if len_sum < 0 else len_sum,
     )
 
@@ -350,9 +311,7 @@ def merge_indexes(
             raise ValueError("merge_indexes: docID sets overlap")
     from ..operators.blocks import unpack_blocks
 
-    lb = left.doc_blocks if left.doc_blocks is not None else left.blocks
-    rb = right.doc_blocks if right.doc_blocks is not None else right.blocks
-    doc_blocks = lb.unionByName(rb)
+    doc_blocks = left.doc_blocks.unionByName(right.doc_blocks)
     dmeta = left.doc_meta.unionByName(right.doc_meta.select(*left.doc_meta.columns))
     tstats = (
         left.term_stats.select("term", "df", "cf")
@@ -374,12 +333,11 @@ def merge_indexes(
 
     return InvertedIndex(
         postings=unpack_blocks(doc_blocks),
-        blocks=doc_blocks,
+        doc_blocks=doc_blocks,
         doc_meta=dmeta,
         term_stats=tstats,
         docstore=left.docstore.unionByName(right.docstore),
         docN=docN,
         avgdl=avgdl,
-        doc_blocks=doc_blocks,
         len_sum=len_sum,
     )

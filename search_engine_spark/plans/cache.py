@@ -66,7 +66,7 @@ def build_posting_cache(index, budget_bytes: int = DEFAULT_BUDGET) -> PostingCac
     their block rows into the pool frame. Returns the cache handle
     (hot_blocks is persisted; hot_rows is the driver-side pool content,
     bounded by the byte budget)."""
-    blocks = index.doc_blocks if index.doc_blocks is not None else index.blocks
+    blocks = index.doc_blocks
     sizes = blocks.groupBy("term").agg(F.sum(_block_bytes()).alias("term_bytes"))
     ranked = sizes.join(index.term_stats.select("term", "df"), "term")
     w = Window.orderBy(F.desc("df"), F.asc("term")).rowsBetween(
@@ -99,8 +99,7 @@ def served_blocks(index, cache: PostingCache) -> DataFrame:
     filtered out. Narrow plan — the doc-sharded partitioning of the parent
     is preserved. Use ``attach_posting_cache`` to get a servable index; this
     helper only derives the cold view."""
-    blocks = index.doc_blocks if index.doc_blocks is not None else index.blocks
-    return blocks.join(F.broadcast(cache.hot_terms.select("term")), "term", "left_anti")
+    return index.doc_blocks.join(F.broadcast(cache.hot_terms.select("term")), "term", "left_anti")
 
 
 def partition_doc_ranges(blocks: DataFrame) -> dict[int, object]:
@@ -150,6 +149,27 @@ def partition_doc_ranges(blocks: DataFrame) -> dict[int, object]:
     }
 
 
+def run_owner(bounds: dict[int, object]):
+    """``partition_doc_ranges`` output -> a vectorized lookup
+    ``owner(doc ids) -> pid array``, -1 where no partition's run holds the
+    doc."""
+    flat = sorted(
+        (int(lo), int(hi), pid) for pid, iv in bounds.items() for lo, hi in iv
+    )
+    glo = np.asarray([lo for lo, _, _ in flat], dtype=np.int64)
+    ghi = np.asarray([hi for _, hi, _ in flat], dtype=np.int64)
+    gpid = np.asarray([pid for _, _, pid in flat], dtype=np.int64)
+
+    def owner(doc: np.ndarray) -> np.ndarray:
+        if not flat:
+            return np.full(len(doc), -1, dtype=np.int64)
+        at = np.maximum(np.searchsorted(glo, doc, side="right") - 1, 0)
+        ok = (glo[at] <= doc) & (doc <= ghi[at])
+        return np.where(ok, gpid[at], -1)
+
+    return owner
+
+
 def attach_posting_cache(index, cache: PostingCache):
     """index + cache -> a NEW InvertedIndex whose doc_blocks is the cold
     view and whose ``hot_pool_bc`` broadcast carries (pool, bounds):
@@ -159,28 +179,30 @@ def attach_posting_cache(index, cache: PostingCache):
       metadata-column job per attach). Interval sets must be globally
       disjoint — the doc-sharded layout invariant the serving kernel
       requires; overlap raises.
-    - ``pool``: pid -> pandas frame of the hot rows whose doc range falls
-      inside that partition's intervals (np.searchsorted containment — the
-      content-addressed assignment; partition ids recorded at cache-BUILD
-      time never survive to here, so split-conf drift between build and
-      attach is harmless by construction).
+    - ``pool``: pid -> the PICKLED bytes of a pandas frame holding the hot
+      rows whose doc range falls inside that partition's intervals
+      (np.searchsorted containment — the content-addressed assignment;
+      partition ids recorded at cache-BUILD time never survive to here, so
+      split-conf drift between build and attach is harmless by
+      construction). Each shard's frame is pickled on its own, so a task
+      unpickles only its own shard's slice.
 
-    The shard kernel merges pool[pid] ahead of its cold rows and validates
-    the cold rows against bounds[pid], raising on any attach-to-query
-    drift instead of silently mis-scoring (plans/serve.shard_search).
+    The shard kernel unpickles pool[pid], merges it ahead of its cold rows
+    and validates the cold rows against bounds[pid], raising on any
+    attach-to-query drift instead of silently mis-scoring
+    (plans/serve.shard_search).
     """
     import dataclasses
 
     from .serve import serving_coalesce
 
-    blocks = index.doc_blocks if index.doc_blocks is not None else index.blocks
     # normalize to the SERVING layout before measuring bounds: shard_search
     # coalesces the block frame to one shard per core (serve.serving_coalesce,
     # deterministic whole-parent grouping), so the pool's pid keys must be
     # derived from the same layout. ``cold`` is a narrow anti-join over the
     # same parent partitioning, so the identical coalesce target yields the
     # identical pid grouping.
-    blocks = serving_coalesce(blocks, docN=index.docN)
+    blocks = serving_coalesce(index.doc_blocks, docN=index.docN)
     cold = serving_coalesce(served_blocks(index, cache), docN=index.docN)
     bounds = partition_doc_ranges(blocks)
     flat = sorted(
@@ -196,21 +218,12 @@ def attach_posting_cache(index, cache: PostingCache):
     pool: dict[int, object] = {}
     hot = cache.hot_rows
     if hot is not None and len(hot) and flat:
-        glo = np.asarray([lo for lo, _, _ in flat])
-        ghi = np.asarray([hi for _, hi, _ in flat])
-        gpid = np.asarray([pid for _, _, pid in flat])
-
-        def _owner(doc):
-            at = np.searchsorted(glo, doc, side="right") - 1
-            ok = (at >= 0) & (doc <= ghi[np.maximum(at, 0)])
-            return ok, gpid[np.maximum(at, 0)]
-
         # a hot block's FIRST doc pins its owner; the LAST doc must belong
         # to the same partition (both are actual doc ids of the block — a
         # block may span several of its owner's runs, never another's)
-        ok_f, owner = _owner(hot["first_doc_id"].to_numpy())
-        ok_l, owner_l = _owner(hot["last_doc_id"].to_numpy())
-        if not (ok_f & ok_l & (owner == owner_l)).all():
+        lookup = run_owner(bounds)
+        owner = lookup(hot["first_doc_id"].to_numpy())
+        if not ((owner >= 0) & (owner == lookup(hot["last_doc_id"].to_numpy()))).all():
             raise ValueError(
                 "attach_posting_cache: cached block rows fall outside every "
                 "serving partition's doc ranges — the cache was built against "

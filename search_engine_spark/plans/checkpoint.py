@@ -132,15 +132,14 @@ def finalize_index(spark: SparkSession, path: str, n_parts: int = 8, block: int 
     dmeta = docs.select("doc_id", "doclen")
     stats = P.collection_stats(dmeta)
     tstats = P.term_stats(rows.select("term", "doc_id", "tf"))
-    doc_blocks = pack_blocks(rows, block=block, layout="doc")
+    doc_blocks = pack_blocks(rows, block=block)
     return InvertedIndex(
         postings=unpack_blocks(doc_blocks),
-        blocks=doc_blocks,
+        doc_blocks=doc_blocks,
         doc_meta=dmeta,
         term_stats=tstats,
         docstore=docs.select("doc_id", "url", "text"),
         docN=stats["docN"],
         avgdl=stats["avgdl"],
-        doc_blocks=doc_blocks,
         len_sum=stats.get("len_sum"),
     )

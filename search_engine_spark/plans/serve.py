@@ -2,7 +2,7 @@
 
 THE scalable serving design (and how the reference runs distributed in
 practice): the posting blocks are doc-range sharded (every term of a doc in
-one shard, blocks.pack_blocks layout="doc"), so a query is
+one shard, blocks.invert_pack_blocks), so a query is
 
   narrow mapInPandas over term-filtered blocks (per shard: decode ->
   vectorized BM25 + proximity + local bounded top-k, all numpy)
@@ -22,7 +22,9 @@ proximity.c) vectorized over the whole shard instead of doc-at-a-time:
 - local heap: lexsort take-k (minheap.c role), ties (score DESC, doc ASC).
 
 Batch mode scores many queries in the same shard pass, reusing the decoded
-arrays — the serving-throughput shape.
+arrays — the serving-throughput shape. ``_batch_score_shard`` is the
+engine's one BM25 scorer: plain and batch queries, the WAND path and the
+mixed term+math kernel (math/search.py) all call it.
 """
 
 from __future__ import annotations
@@ -37,8 +39,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import codec
 from ..operators import scoring as S
-
-_LN03 = math.log(0.3)
 
 _OUT_SCHEMA = (
     "qid string, doc_id long, bm25 double, match_dim double, "
@@ -94,7 +94,7 @@ def _block_ub_tfn(max_tf: np.ndarray, min_dl: np.ndarray, avgdl: float) -> np.nd
     The packed blocks store avgdl-independent extremes (block_max_tf,
     block_min_dl); tfn is monotone increasing in tf and decreasing in
     doclen, so tfn(max_tf, min_dl, avgdl) >= every entry's tfn. Uses the
-    exact float64 expression of _score_one_query, so a single-entry block's
+    exact float64 expression of _batch_score_shard, so a single-entry block's
     bound equals its score bit-for-bit (never below it)."""
     k1, b = S.BM25_K1, S.BM25_B
     frac = S.BM25_K1 / avgdl
@@ -346,6 +346,11 @@ def _batch_wand_shard(pdfs: list, qitems, avgdl: float, k: int, with_prox: bool)
     or_items = [qi for qi in qitems if qi[2] == "or" and qi[1]]
     and_items = [qi for qi in qitems if qi[2] == "and" and qi[1]]
 
+    def _score_or(qid, kws, decoded):
+        """One OR query over its own filtered postings -> result or None."""
+        got = _batch_score_shard([(qid, kws, "or")], decoded, avgdl, k, with_prox)
+        return next((res for _, res in got), None)
+
     def _rows_of(kws) -> np.ndarray:
         hit = [tindex[t] for _, t, _ in kws if t in tindex]
         return np.concatenate(hit) if hit else np.empty(0, dtype=np.int64)
@@ -380,7 +385,7 @@ def _batch_wand_shard(pdfs: list, qitems, avgdl: float, k: int, with_prox: bool)
             continue
         rows_q, seed, idfs = seeds[qid]
         decoded = _filter_decoded(seed_decoded, seed, terms=[t for _, t, _ in kws])
-        res = _score_one_query(kws, decoded, avgdl, "or", k, with_prox)
+        res = _score_or(qid, kws, decoded)
         thresh = float(res[5][k - 1]) if res is not None and len(res[0]) >= k else -math.inf
         intervals = _interval_sweep(meta.take(rows_q), idfs, len(kws), thresh, avgdl)
         if not intervals:
@@ -412,90 +417,13 @@ def _batch_wand_shard(pdfs: list, qitems, avgdl: float, k: int, with_prox: bool)
             continue
         rng = ranges_by_q[qid]
         decoded = _filter_decoded(shared, rng, terms=[t for _, t, _ in kws])
-        res = _score_one_query(kws, decoded, avgdl, "or", k, with_prox)
+        res = _score_or(qid, kws, decoded)
         if res is not None:
             yield qid, res
-    if and_items:
-        # extra decoded entries outside a query's own coverage intersection
-        # are harmless: a doc there cannot carry ALL the query's terms, so
-        # the n_matched == n_terms predicate removes it
-        for qid, kws, _ in and_items:
-            res = _score_one_query(kws, shared, avgdl, "and", k, with_prox)
-            if res is not None:
-                yield qid, res
-
-
-def _score_one_query(
-    terms_kw: list[tuple[int, str, float]],
-    decoded: dict,
-    avgdl: float,
-    mode: str,
-    k: int,
-    with_prox: bool,
-):
-    """Shard-local scoring of one query -> top-k numpy rows."""
-    k1, b = S.BM25_K1, S.BM25_B
-    frac = S.BM25_K1 / avgdl
-    row_doc, row_kw, row_score = [], [], []
-    row_pos_doc, row_pos_kw, row_pos = [], [], []
-    for kw_idx, term, idf in terms_kw:
-        got = decoded.get(term)
-        if got is None:
-            continue
-        ids, tfs, dls, pos = got
-        tf = tfs.astype(np.float64)
-        dl = dls.astype(np.float64)
-        sc = idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + frac * dl))
-        row_doc.append(ids)
-        row_kw.append(np.full(len(ids), kw_idx, dtype=np.int64))
-        row_score.append(sc)
-        if with_prox and pos is not None and len(pos):
-            reps = tfs  # positions per entry == capped tf
-            row_pos_doc.append(np.repeat(ids, reps))
-            row_pos_kw.append(np.repeat(np.int64(kw_idx), int(reps.sum())))
-            row_pos.append(pos)
-    if not row_doc:
-        return None
-    doc = np.concatenate(row_doc)
-    score = np.concatenate(row_score)
-    udoc, inv = np.unique(doc, return_inverse=True)
-    n = len(udoc)
-    bm25 = np.full(n, 1.0)
-    nz = score != 0.0
-    np.add.at(bm25, inv[nz], score[nz])
-    match_dim = np.zeros(n)
-    np.add.at(match_dim, inv[nz], 1.0)
-    n_matched = np.zeros(n, dtype=np.int64)
-    np.add.at(n_matched, inv, 1)
-
-    if with_prox and row_pos_doc:
-        pdoc = np.concatenate(row_pos_doc)
-        pkw = np.concatenate(row_pos_kw)
-        ppos = np.concatenate(row_pos)
-        order = np.lexsort((ppos, pdoc))
-        pdoc, pkw, ppos = pdoc[order], pkw[order], ppos[order]
-        same_doc = pdoc[1:] == pdoc[:-1]
-        diff_kw = pkw[1:] != pkw[:-1]
-        gaps = ppos[1:] - ppos[:-1]
-        sel = same_doc & diff_kw
-        mind = np.full(n, np.inf)
-        if sel.any():
-            gidx = np.searchsorted(udoc, pdoc[1:][sel])
-            np.minimum.at(mind, gidx, gaps[sel].astype(np.float64))
-        prox = np.log(0.3 + np.exp(-mind))
-    else:
-        prox = np.full(n, _LN03)
-
-    if mode == "and":
-        keep = n_matched == len(terms_kw)
-        if not keep.any():
-            return None
-        udoc, bm25, match_dim, n_matched, prox = (
-            udoc[keep], bm25[keep], match_dim[keep], n_matched[keep], prox[keep]
-        )
-    total = prox + 0.5 * bm25 + S.MATCH_DIM_WEIGHT * match_dim
-    top = np.lexsort((udoc, -total))[:k]
-    return udoc[top], bm25[top], match_dim[top], n_matched[top], prox[top], total[top]
+    # extra decoded entries outside a query's own coverage intersection are
+    # harmless: a doc there cannot carry ALL the query's terms, so the
+    # n_matched == n_terms predicate removes it
+    yield from _batch_score_shard(and_items, shared, avgdl, k, with_prox)
 
 
 # Minimum docs a serving shard should cover before another shard pays off:
@@ -539,13 +467,28 @@ def serving_coalesce(df: DataFrame, docN: int | None = None) -> DataFrame:
 _POS_BITS = 21  # combined sort key: doc_id << 21 | position
 
 
-def _batch_score_shard(qitems, decoded, avgdl, k, with_prox):
+def _probe(keys: np.ndarray, q: np.ndarray):
+    """Positions of ``q`` in the sorted unique ``keys`` + found mask."""
+    at = np.searchsorted(keys, q)
+    hit = at < len(keys)
+    hit[hit] = keys[at[hit]] == q[hit]
+    return at, hit
+
+
+def _pack_stream(pdoc: np.ndarray, pos: np.ndarray):
+    """One keyword's (doc, position) stream -> (packed sort key, None), or
+    (None, (pdoc, pos)) when doc ids or positions overflow the layout."""
+    if pdoc.max() < (1 << 42) and pos.max() < (1 << _POS_BITS):
+        return (pdoc << _POS_BITS) | pos, None
+    return None, (pdoc, pos)
+
+
+def _batch_score_shard(qitems, decoded, avgdl, k, with_prox, math=None):
     """Score a whole workload against one shard's decoded postings.
 
-    Semantically a loop of ``_score_one_query``, but per-TERM work — tf
-    normalization, the idf product, the tf-expanded position stream and its
-    combined (doc,pos) sort key — is computed ONCE and shared by every
-    query that uses the term. Under a Zipf workload the hot terms appear in
+    The engine's one BM25 scorer. Per-TERM work — tf normalization, the idf
+    product, the tf-expanded position stream and its combined (doc,pos) sort
+    key — is computed ONCE and shared by every query that uses the term. Under a Zipf workload the hot terms appear in
     dozens of concurrent queries, so the per-query loop was recomputing the
     same ``np.repeat``/divide arrays 64+ times per shard (measured: ~410s
     of kernel scoring for 512 queries x 64 shards at 400k docs, vs ~90s
@@ -555,6 +498,18 @@ def _batch_score_shard(qitems, decoded, avgdl, k, with_prox):
     bits cancel. Falls back to the two-array lexsort when positions or doc
     ids overflow the packed layout (doc_id < 2^42, pos < 2^21 — at 10^12
     docs the ids still fit).
+
+    ``math``: the optional per-doc math channel of a mixed term+math query
+    (math/search.py), ``(mdoc, mscore, streams)``: sorted doc ids with a
+    matched expression, their max expression score, and one
+    ``(kw_idx, doc ids, positions)`` stream per TeX keyword. A term-matched
+    doc then scores the reference's mixed total
+    prox + (1+max_math)/2*bm25 + 10000*(match_dim + [max_math>0])
+    (search/search.c:253-274), which reduces to the term-only total at
+    max_math = 0; its matched-expression positions join the proximity merge
+    as extra keywords (search/search.c:215-237). Every term-matched math doc
+    is emitted beside the local top-k, so the caller can tell it from a
+    math-only doc, and each result carries max_math as a 7th array.
     """
     k1, b = S.BM25_K1, S.BM25_B
     frac = S.BM25_K1 / avgdl
@@ -572,20 +527,20 @@ def _batch_score_shard(qitems, decoded, avgdl, k, with_prox):
                 tf = tfs.astype(np.float64)
                 dl = dls.astype(np.float64)
                 sc = idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + frac * dl))
-                pkey = pfallback = None
+                stream = (None, None)
                 if with_prox and pos is not None and len(pos):
-                    pdoc = np.repeat(ids, tfs)
-                    if (
-                        len(ids)
-                        and ids.max() < (1 << 42)
-                        and pos.max() < (1 << _POS_BITS)
-                    ):
-                        pkey = (pdoc << _POS_BITS) | pos
-                    else:
-                        pfallback = (pdoc, pos)
-                ent = (ids, sc, pkey, pfallback)
+                    stream = _pack_stream(np.repeat(ids, tfs), pos)
+                ent = (ids, sc, stream)
             cache[key] = ent
         return ent
+
+    def add_stream(kw_idx, stream, row_key, row_kw, row_fb):
+        pkey, pfallback = stream
+        if pkey is not None:
+            row_key.append(pkey)
+            row_kw.append(np.full(len(pkey), kw_idx, dtype=np.int64))
+        elif pfallback is not None:
+            row_fb.append((kw_idx, *pfallback))
 
     for qid, terms_kw, mode in qitems:
         row_doc, row_score = [], []
@@ -595,14 +550,10 @@ def _batch_score_shard(qitems, decoded, avgdl, k, with_prox):
             ent = entry(term, idf)
             if ent is None:
                 continue
-            ids, sc, pkey, pfallback = ent
+            ids, sc, stream = ent
             row_doc.append(ids)
             row_score.append(sc)
-            if pkey is not None:
-                row_key.append(pkey)
-                row_kw.append(np.full(len(pkey), kw_idx, dtype=np.int64))
-            elif pfallback is not None:
-                row_fb.append((kw_idx, *pfallback))
+            add_stream(kw_idx, stream, row_key, row_kw, row_fb)
         if not row_doc:
             continue
         doc = np.concatenate(row_doc)
@@ -616,6 +567,20 @@ def _batch_score_shard(qitems, decoded, avgdl, k, with_prox):
         np.add.at(match_dim, inv[nz], 1.0)
         n_matched = np.zeros(n, dtype=np.int64)
         np.add.at(n_matched, inv, 1)
+
+        mm = None
+        if math is not None:
+            # math component of the term-matched docs (vectorized key probe)
+            mdoc, mscore, streams = math
+            mm = np.zeros(n)
+            at, hit = _probe(udoc, mdoc)
+            mm[at[hit]] = mscore[hit]
+            for kw_idx, sdoc, spos in streams if with_prox else ():
+                hit = _probe(udoc, sdoc)[1]
+                if hit.any():
+                    add_stream(
+                        kw_idx, _pack_stream(sdoc[hit], spos[hit]), row_key, row_kw, row_fb
+                    )
 
         mind = np.full(n, np.inf)
         if row_fb:
@@ -652,25 +617,28 @@ def _batch_score_shard(qitems, decoded, avgdl, k, with_prox):
         if with_prox and (row_fb or row_key):
             prox = np.log(0.3 + np.exp(-mind))
         else:
-            prox = np.full(n, _LN03)
+            prox = np.full(n, S.LN_03)
 
         if mode == "and":
             keep = n_matched == len(terms_kw)
             if not keep.any():
                 continue
-            udoc_q, bm25_q, match_dim_q, n_matched_q, prox_q = (
+            udoc, bm25, match_dim, n_matched, prox = (
                 udoc[keep], bm25[keep], match_dim[keep], n_matched[keep], prox[keep]
             )
+            if mm is not None:
+                mm = mm[keep]
+        if mm is None:
+            total = prox + 0.5 * bm25 + S.MATCH_DIM_WEIGHT * match_dim
+            top = np.lexsort((udoc, -total))[:k]
+            out = (udoc, bm25, match_dim, n_matched, prox, total)
         else:
-            udoc_q, bm25_q, match_dim_q, n_matched_q, prox_q = (
-                udoc, bm25, match_dim, n_matched, prox
-            )
-        total = prox_q + 0.5 * bm25_q + S.MATCH_DIM_WEIGHT * match_dim_q
-        top = np.lexsort((udoc_q, -total))[:k]
-        yield qid, (
-            udoc_q[top], bm25_q[top], match_dim_q[top],
-            n_matched_q[top], prox_q[top], total[top],
-        )
+            total = prox + (1.0 + mm) / 2.0 * bm25 + S.MATCH_DIM_WEIGHT * (match_dim + (mm > 0))
+            top = np.zeros(len(udoc), dtype=bool)
+            top[np.lexsort((udoc, -total))[:k]] = True
+            top |= mm > 0
+            out = (udoc, bm25, match_dim, n_matched, prox, total, mm)
+        yield qid, tuple(c[top] for c in out)
 
 
 # Measured on the 20k-doc synthetic index (local[32], best-of-2): batch
@@ -682,6 +650,59 @@ def _batch_score_shard(qitems, decoded, avgdl, k, with_prox):
 # the batch unpruned (identical results; the pruning is an optimization,
 # never a semantic).
 PRUNE_MAX_OR_BATCH = 32
+
+
+def pool_rows(hot_pool, pid, term_set) -> pd.DataFrame | None:
+    """Shard ``pid``'s posting-cache pool rows of the query terms, or None.
+
+    The pool holds one pickled frame per shard (plans/cache.py), so a task
+    deserializes only its own shard's slice, not the whole pool."""
+    import pickle
+
+    h = hot_pool.value[0].get(pid)
+    if h is None:
+        return None
+    h = pickle.loads(h)
+    h = h[h["term"].isin(term_set)]
+    return h if len(h) else None
+
+
+def with_hot_pool(batches, hot_pool, term_set) -> list[pd.DataFrame]:
+    """This task's cold block frames with its shard's pool rows merged
+    ahead of them — the doc-sharded kernel requires every block of a doc in
+    ONE shard. The cold rows are VALIDATED against the shard's attach-time
+    doc bounds, raising on attach-to-query split drift instead of
+    mis-scoring."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else None
+    pdfs = [pdf for pdf in batches if not pdf.empty]
+    iv = hot_pool.value[1].get(pid)  # [lo, hi] doc-id runs this shard owns
+
+    def _in_runs(doc):
+        at = np.searchsorted(iv[:, 0], doc, side="right") - 1
+        return (at >= 0) & (doc <= iv[np.maximum(at, 0), 1])
+
+    for pdf in pdfs:
+        # a block's first/last are actual doc ids of this shard; a block may
+        # span several of the shard's runs, so only the endpoints are
+        # checked against the run set
+        ok = iv is not None and bool(
+            (
+                _in_runs(pdf["first_doc_id"].to_numpy())
+                & _in_runs(pdf["last_doc_id"].to_numpy())
+            ).all()
+        )
+        if not ok:
+            raise RuntimeError(
+                "posting-cache shard mapping is stale: partition "
+                f"{pid} received doc ids outside its attach-time "
+                "bounds — the serving frame was re-planned under "
+                "different split conf; re-attach the cache"
+            )
+    h = pool_rows(hot_pool, pid, term_set)
+    return pdfs if h is None else [h, *pdfs]
 
 
 def shard_search(
@@ -739,46 +760,7 @@ def shard_search(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if hot_pool is not None:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else None
-            pool, bounds = hot_pool.value
-            pdfs = [pdf for pdf in batches if not pdf.empty]
-            iv = bounds.get(pid)  # [lo, hi] doc-id runs this shard owns
-
-            def _in_runs(doc):
-                at = np.searchsorted(iv[:, 0], doc, side="right") - 1
-                return (at >= 0) & (doc <= iv[np.maximum(at, 0), 1])
-
-            for pdf in pdfs:
-                # a block's first/last are actual doc ids of this shard; a
-                # block may span several of the shard's runs, so only the
-                # endpoints are checked against the run set
-                ok = iv is not None and bool(
-                    (
-                        _in_runs(pdf["first_doc_id"].to_numpy())
-                        & _in_runs(pdf["last_doc_id"].to_numpy())
-                    ).all()
-                )
-                if not ok:
-                    raise RuntimeError(
-                        "posting-cache shard mapping is stale: partition "
-                        f"{pid} received doc ids outside its attach-time "
-                        "bounds — the serving frame was re-planned under "
-                        "different split conf; re-attach the cache"
-                    )
-            h = pool.get(pid)
-            if h is not None:
-                import pickle
-
-                # per-shard pickled slice: this task deserializes only its
-                # own shard's frame, not the whole pool (plans/cache.py)
-                h = pickle.loads(h)
-                h = h[h["term"].isin(term_set)]
-                if len(h):
-                    pdfs = [h, *pdfs]
-            batches = iter(pdfs)
+            batches = iter(with_hot_pool(batches, hot_pool, term_set))
         if prune:
             frames = [
                 _frame(qid, res)

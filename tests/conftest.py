@@ -26,7 +26,6 @@ def index200(spark, corpus200):
 
     idx = build_index(spark, corpus200, block=32)
     idx.postings.cache().count()
-    idx.blocks.cache().count()
     idx.doc_blocks.cache().count()
     idx.doc_meta.cache().count()
     idx.term_stats.cache().count()

@@ -38,6 +38,9 @@ def test_engine_build_save_load_math(spark, tmp_path):
     path = str(tmp_path / "idx")
     eng.save(path)
     eng2 = SearchEngine.load(spark, path).warm()
+    # warm() caches the block table the serving plan actually reads
+    plan = eng2.query("relation energy")._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan, plan
     # NB: query with the RARE term 'relation' — 'energy' appears in every
     # doc, its idf (unfloored, reference quirk) is negative, bm25 < 0, and
     # the (1+max_math)/2 factor then RANKS EXACT MATH MATCHES LOWER — the
@@ -72,6 +75,10 @@ def test_loaded_math_lr_probe_prunes_partitions(spark, tmp_path):
     fresh = [(r["doc_id"], round(r["score"], 6)) for r in eng.query(q).collect()]
     loaded = [(r["doc_id"], round(r["score"], 6)) for r in eng2.query(q).collect()]
     assert fresh == loaded and fresh
+    # the saved lr table is partitioned by lseg_bucket, not by doc: a
+    # doc-partitioned claim on it must be ignored, not trusted
+    claimed = eng2.query(q, lr_doc_partitioned=True).collect()
+    assert [(r["doc_id"], round(r["score"], 6)) for r in claimed] == fresh
 
     # plan-level check: the lr scan is partition-pruned by the bucket set
     from search_engine_spark.math.search import _mnc_per_exp

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.functions.tokenizer import tokenize_text
@@ -58,14 +59,14 @@ def test_tf_cap_applied(index200):
 def test_block_roundtrip(index200):
     rows = index200.postings.select("term", "doc_id", "tf", "positions").collect()
     exp = {(r["term"], r["doc_id"]): (r["tf"], list(r["positions"])) for r in rows}
-    unpacked = unpack_blocks(index200.blocks).collect()
+    unpacked = unpack_blocks(index200.doc_blocks).collect()
     got = {(r["term"], r["doc_id"]): (r["tf"], list(r["positions"])) for r in unpacked}
     assert got == exp
     # block invariants (sentinel doc-meta rows carry chunk doclens instead)
     from search_engine_spark.operators.blocks import DOC_META_TERM
 
     saw_sentinel = False
-    for b in index200.blocks.collect():
+    for b in index200.doc_blocks.collect():
         assert b["first_doc_id"] <= b["last_doc_id"]
         if b["term"] == DOC_META_TERM:
             saw_sentinel = True
@@ -154,10 +155,24 @@ def test_loaded_blocks_term_filter_pushdown(spark, index200, tmp_path):
     save_index(index200, path)
     loaded = load_index(spark, path)
     plan = (
-        loaded.blocks.filter(F.col("term") == "wabcd")
+        loaded.doc_blocks.filter(F.col("term") == "wabcd")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PushedFilters" in plan and "EqualTo(term,wabcd)" in plan, plan
+
+
+def test_load_without_doc_blocks_asks_for_rebuild(spark, index200, tmp_path):
+    """A save with no doc_blocks table (an older layout) fails at load with
+    a clear "rebuild" message, not at serve time."""
+    import shutil
+
+    from search_engine_spark.plans.build import load_index, save_index
+
+    path = str(tmp_path / "idx")
+    save_index(index200, path)
+    shutil.rmtree(tmp_path / "idx" / "doc_blocks")
+    with pytest.raises(ValueError, match="rebuild the index"):
+        load_index(spark, path)
 
 
 def test_loaded_index_partitions_own_disjoint_doc_runs(spark, index200, tmp_path):

@@ -59,7 +59,7 @@ def math_setup(spark):
     mp = build_math_index(docs).cache()
     mp.count()
     idx = build_index(spark, docs, id_col="doc_id")
-    idx.blocks.cache().count()
+    idx.doc_blocks.cache().count()
     return idx, mp
 
 
@@ -277,12 +277,10 @@ def test_bracket_class_tokens():
 
 
 def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark):
-    """The in-kernel mixed path (math scores broadcast into the doc-sharded
-    kernel) must produce the same ranked totals as the set-oriented
-    join/aggregate combine, with strictly fewer Exchange (shuffle) nodes on
-    the term side of the plan."""
-    import dataclasses
-
+    """The broadcast mixed path (math scores broadcast into the doc-sharded
+    kernel) must produce the same ranked totals as the routed combine (math
+    rows cogrouped with their doc's shard), with strictly fewer Exchange
+    (shuffle) nodes in the plan."""
     from search_engine_spark.corpus import synth_corpus
     from search_engine_spark.math.index import build_math_index, build_math_lr_index
     from search_engine_spark.math.search import mixed_search
@@ -304,9 +302,10 @@ def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark):
     q = "see merge [imath]a+\\frac{2}{a}[/imath]"
 
     kernel_res = mixed_search(spark, idx, mp, q, math_lr_postings=lr)
-    # doc_blocks=None forces the set-oriented combine
-    frame_idx = dataclasses.replace(idx, doc_blocks=None)
-    frame_res = mixed_search(spark, frame_idx, mp, q, math_lr_postings=lr)
+    # a 64-byte broadcast budget forces the routed combine
+    frame_res = mixed_search(
+        spark, idx, mp, q, math_lr_postings=lr, broadcast_budget_bytes=64
+    )
 
     def rows(df):
         return [
@@ -323,22 +322,23 @@ def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark):
 
 def test_mixed_broadcast_byte_budget_fallback(spark, math_setup):
     """A math payload exceeding the broadcast byte budget (here: a 64-byte
-    budget, standing in for a pathological-position corpus) must route the
-    mixed query through the DataFrame combine and return EXACTLY what the
-    in-kernel broadcast path returns — the budget is a routing decision,
-    never a semantic."""
+    budget, standing in for a pathological-position corpus) must route each
+    math candidate to its doc's serving shard and return EXACTLY what the
+    in-kernel broadcast path returns, in both merge modes — the budget is a
+    routing decision, never a semantic."""
     from search_engine_spark.math.search import mixed_search
     from search_engine_spark.operators.dedup import release
 
     idx, mp = math_setup
     q = "frac [imath]\\frac{a}{b}[/imath]"
-    fast = mixed_search(spark, idx, mp, q).collect()
-    slow_df = mixed_search(spark, idx, mp, q, broadcast_budget_bytes=64)
-    slow = slow_df.collect()
-    release(slow_df)  # frees the persisted per-tex frames the plan read
-    key = lambda r: (r["doc_id"],)
-    assert sorted(
-        [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in fast], key=lambda t: t[0]
-    ) == sorted(
-        [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in slow], key=lambda t: t[0]
-    )
+    for mode in ("or", "and"):
+        fast = mixed_search(spark, idx, mp, q, mode=mode).collect()
+        slow_df = mixed_search(spark, idx, mp, q, mode=mode, broadcast_budget_bytes=64)
+        slow = slow_df.collect()
+        release(slow_df)  # frees the persisted per-tex frames the plan read
+        assert fast, mode
+        assert sorted(
+            [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in fast], key=lambda t: t[0]
+        ) == sorted(
+            [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in slow], key=lambda t: t[0]
+        ), mode

@@ -165,3 +165,45 @@ def test_attach_survives_split_conf_drift(spark, index200, tmp_path):
         spark.conf.set(key, old)
         cache.hot_blocks.unpersist()
         cache.hot_terms.unpersist()
+
+
+def test_warm_mixed_query_equals_cold(spark, monkeypatch):
+    """A mixed term+math query on a warmed engine must score the hot terms'
+    postings too: both mixed paths (math broadcast into the shard kernel,
+    and math rows routed to their doc's shard) read the posting-cache pool
+    beside the cold blocks. Two serving shards and ONE math doc: the other
+    shard's hits come from pool rows alone, with no cold block and no math
+    row to route there."""
+    from search_engine_spark.engine import SearchEngine
+    from search_engine_spark.plans.cache import partition_doc_ranges
+    from search_engine_spark.plans.serve import serving_coalesce
+
+    monkeypatch.setenv("SPARK_GRAFT_SERVE_SHARDS", "2")
+    docs = spark.createDataFrame(
+        [
+            (
+                i,
+                f"https://m/{i:03d}",
+                f"formula w{i % 7} common"
+                + (" [imath]\\frac{a}{b}[/imath]" if i == 5 else ""),
+            )
+            for i in range(1, 61)
+        ],
+        "doc_id long, url string, text string",
+    )
+    eng = SearchEngine.build(spark, docs, with_math=True, id_col="doc_id")
+    serving = serving_coalesce(eng.index.doc_blocks, docN=eng.index.docN)
+    assert len(partition_doc_ranges(serving)) == 2
+    q = "common formula [imath]\\frac{a}{b}[/imath]"
+
+    def ranked(**kw):
+        return [(r["doc_id"], round(r["score"], 6)) for r in eng.query(q, **kw).collect()]
+
+    cold = ranked()
+    assert len(cold) == 60 and cold[0][0] == 5 and cold[0][1] > 20000
+    assert ranked(broadcast_budget_bytes=0) == cold
+    eng.warm(1 << 20)
+    assert eng.index.hot_pool_bc is not None
+    assert eng.index.doc_blocks.filter(F.col("term") == "common").count() == 0
+    assert ranked() == cold
+    assert ranked(broadcast_budget_bytes=0) == cold

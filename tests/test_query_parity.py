@@ -31,9 +31,9 @@ QUERIES = [
 
 
 @pytest.mark.parametrize("qid,qtext,mode", QUERIES)
-@pytest.mark.parametrize("use_blocks", [False, True])
-def test_rank_identity(spark, index200, pydocs200, qid, qtext, mode, use_blocks):
-    got = search(spark, index200, qtext, mode=mode, use_blocks=use_blocks).collect()
+@pytest.mark.parametrize("wand", [False, True])
+def test_rank_identity(spark, index200, pydocs200, qid, qtext, mode, wand):
+    got = search(spark, index200, qtext, mode=mode, wand=wand).collect()
     exp = naive_search(pydocs200, qtext, mode=mode)
     assert [r["doc_id"] for r in got] == [d for d, _ in exp], qid
     for r, (_, sc) in zip(got, exp):
@@ -67,9 +67,22 @@ def test_tie_break_is_doc_id_asc(spark, index200):
     assert order.index(d3) < order.index(d4)
 
 
-def test_search_many_shard_equals_shuffle(spark, index200):
+def _assert_many_equals_oracle(spark, index200, pydocs200, workload):
+    """search_many answers every qid with the oracle's ranked list."""
     from search_engine_spark.plans.query import search_many
 
+    got: dict[str, list] = {qid: [] for qid in workload}
+    for r in sorted(search_many(spark, index200, workload).collect(), key=lambda r: r["rank"]):
+        got[r["qid"]].append(r)
+    for qid, (qtext, mode) in workload.items():
+        exp = naive_search(pydocs200, qtext, mode=mode)
+        assert [r["rank"] for r in got[qid]] == list(range(1, len(exp) + 1)), qid
+        assert [r["doc_id"] for r in got[qid]] == [d for d, _ in exp], qid
+        for r, (_, sc) in zip(got[qid], exp):
+            assert r["score"] == pytest.approx(sc, rel=1e-12), (qid, r["doc_id"])
+
+
+def test_search_many_equals_oracle(spark, index200, pydocs200):
     workload = {
         "a": (f"{W(1)} {W(2)}", "or"),
         "b": (f"{W(3)} {W(9)}", "and"),
@@ -77,13 +90,7 @@ def test_search_many_shard_equals_shuffle(spark, index200):
         "d": (f"{W(0)} {W(5)} {W(7)}", "or"),
         "e": (f"{W(1)} zzzmissing", "and"),
     }
-    def norm(df):
-        return sorted(
-            (r["qid"], r["rank"], r["doc_id"], round(r["score"], 6)) for r in df.collect()
-        )
-    a = norm(search_many(spark, index200, workload, serving="shard"))
-    b = norm(search_many(spark, index200, workload, serving="shuffle"))
-    assert a == b
+    _assert_many_equals_oracle(spark, index200, pydocs200, workload)
 
 
 @pytest.mark.parametrize("qtext,mode", [(f"{W(1)} {W(2)}", "or"), (f"{W(0)} {W(5)}", "or"), (f"{W(3)} {W(9)}", "and")])
@@ -107,22 +114,16 @@ def test_float32_reference_arithmetic_ranking(spark, index200, pydocs200, qtext,
             assert s32[g] == s32[e], (g, e, s32[g], s32[e])
 
 
-def test_conjunctive_block_skip_equals_full(spark, index200):
+def test_conjunctive_block_skip_equals_full(spark, index200, pydocs200):
     """AND-only workloads trigger the kernel's block-skip path (the skip-list
-    galloping analogue); results must equal the shuffle path exactly."""
-    from search_engine_spark.plans.query import search_many
-
+    galloping analogue); results must equal the oracle's full scoring."""
     workload = {
         "a": (f"{W(3)} {W(9)}", "and"),
         "b": (f"{W(0)} {W(400)}", "and"),   # skewed + rare
         "c": (f"{W(1)} {W(2)} {W(4)}", "and"),
         "d": (f"{W(1)} zzzmissing", "and"),  # absent term => empty
     }
-    def norm(df):
-        return sorted((r["qid"], r["rank"], r["doc_id"], round(r["score"], 6)) for r in df.collect())
-    a = norm(search_many(spark, index200, workload, serving="shard"))
-    b = norm(search_many(spark, index200, workload, serving="shuffle"))
-    assert a == b
+    _assert_many_equals_oracle(spark, index200, pydocs200, workload)
 
 
 def test_interval_helpers():
