@@ -12,7 +12,7 @@ Layout
 - ``corpus``             deterministic Common-Crawl-style corpus synthesis + adapters
 - ``functions.tokenizer``  Flex-parity tokenizer (reference txt-seg/lexer.eng.l)
 - ``functions.codec``      delta + varbyte posting codec (reference codec/for.c role)
-- ``operators.postings``   tokens -> posting lists / doc_meta / term_stats
+- ``operators.postings``   posting rows -> term_stats / collection stats
 - ``operators.blocks``     posting blocks with block-max metadata (mem-index role)
 - ``plans.build``          end-to-end index build (indexer/ role)
 - ``plans.query``          BM25 top-k query engine w/ WAND pruning (search/ role)

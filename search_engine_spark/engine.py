@@ -232,15 +232,15 @@ class SearchEngine:
 
     def query_json_many(self, requests: list[tuple[str, int, str]]) -> list[dict]:
         """Batched daemon replies: N ``(qtext, page, mode)`` requests in,
-        N ``query_json``-shaped dicts out — ONE ``search_many`` plan plus an
-        id-pruned docstore probe; each request's page of snippets renders
-        driver-side (the searchd micro-batcher drains concurrent POSTs
-        through here, so 32 concurrent clients cost one Spark job instead
-        of 32 serialized ones). Math-bearing requests fall back to the
-        per-query mixed path; admission rejections are answered without
-        touching Spark."""
-        from .plans.query import search_many
-
+        N ``query_json``-shaped dicts out. The term requests of the batch
+        are scored together IN THE DRIVER (plans/serve.driver_search): the
+        posting-cache pool's decoded postings plus ONE Spark fetch of the
+        batch's other terms' blocks. One id-pruned docstore probe follows,
+        and each request's page of snippets renders driver-side (the
+        searchd micro-batcher drains concurrent POSTs through here, so a
+        batch costs at most two Spark jobs, whatever its size).
+        Math-bearing requests fall back to the per-query mixed path;
+        admission rejections are answered without touching Spark."""
         out: list[dict | None] = [None] * len(requests)
         queries: dict[str, tuple[str, str]] = {}
         qterms: dict[str, list[str]] = {}
@@ -258,33 +258,26 @@ class SearchEngine:
             qterms[qid] = terms
             pending[qid] = (i, page)
         if queries:
-            from pyspark.sql import functions as F
+            from .plans.serve import driver_search, in_list
 
-            # ONE Spark job: the rank set is bounded by design — at most
-            # MAX_BATCH drained requests x the 155-deep rank window
-            # (search/config.h:29) of (qid, doc_id, score) triples — so the
-            # whole set collects to the driver and paging/tot_pages are
-            # in-process, exactly the reference daemon's proc_results shape
-            # (searchd/utils.c:173-389 renders its page on the serving
-            # node). Snippets render ONLY each request's page window, not
-            # the 155-deep set. vs the render-everything pipeline this
-            # replaced: one job instead of three (search+count, rank
-            # window, UDF render), and the daemon/batch wall ratio at 32
-            # concurrent clients dropped from ~2x to ~1.2x (interleaved
-            # best-of-N, 400k docs).
-            hit_rows = (
-                search_many(self.spark, self.index, queries)
-                .select("qid", "doc_id", "score")
-                .collect()
-            )
-            ranked: dict[str, list] = {}
-            for r in sorted(hit_rows, key=lambda r: (r["qid"], -r["score"], r["doc_id"])):
-                ranked.setdefault(r["qid"], []).append(r)
-            totals = {qid: len(rs) for qid, rs in ranked.items()}
-            page_rows = []
+            # the rank set is bounded by design — at most MAX_BATCH drained
+            # requests x the 155-deep rank window (search/config.h:29) — so
+            # paging/tot_pages are in-process, exactly the reference
+            # daemon's proc_results shape (searchd/utils.c:173-389 renders
+            # its page on the serving node). Snippets render ONLY each
+            # request's page window, not the 155-deep set.
+            ranked = driver_search(self.index, queries)
+            totals = {qid: len(res[0]) for qid, res in ranked.items()}
+            page_rows = []  # (qid, doc_id, score), each qid's rows in rank order
             for qid, (_, page) in pending.items():
+                if qid not in ranked:
+                    continue
+                docs, *_, scores = ranked[qid]
                 lo = (page - 1) * RES_PER_PAGE
-                page_rows.extend(ranked.get(qid, [])[lo: lo + RES_PER_PAGE])
+                page_rows.extend(
+                    (qid, int(d), float(sc))
+                    for d, sc in zip(docs[lo: lo + RES_PER_PAGE], scores[lo: lo + RES_PER_PAGE])
+                )
             # presentation is DRIVER work, like the reference daemon's
             # proc_results (searchd/utils.c:173-389) rendering its page on
             # the serving node: the page set is <= RES_PER_PAGE x N_clients
@@ -296,18 +289,15 @@ class SearchEngine:
 
             texts: dict[int, tuple] = {}
             if page_rows:
-                ids = sorted({int(r["doc_id"]) for r in page_rows})
+                ids = sorted({d for _, d, _ in page_rows})
                 texts = {
                     int(r["doc_id"]): (r["url"], r["text"])
-                    for r in self.index.docstore.where(
-                        F.col("doc_id").isin(ids)
-                    ).select("doc_id", "url", "text").collect()
+                    for r in self.index.docstore.where(in_list("doc_id", ids))
+                    .select("doc_id", "url", "text").collect()
                 }
             by_qid: dict[str, list] = {}
-            for r in sorted(
-                page_rows, key=lambda r: (r["qid"], -r["score"], r["doc_id"])
-            ):
-                if int(r["doc_id"]) not in texts:
+            for qid, doc_id, score in page_rows:
+                if doc_id not in texts:
                     # docstore-missing hit (inconsistent index): drop it and
                     # shrink the per-query total, approximating query_json's
                     # snippets_for inner join. Not byte-exact: the inner
@@ -315,15 +305,15 @@ class SearchEngine:
                     # backfills the page) where this page comes up a row
                     # short — acceptable for a corrupt-index edge, vs
                     # rendering an empty-url/title hit as before
-                    totals[r["qid"]] = max(0, totals.get(r["qid"], 0) - 1)
+                    totals[qid] = max(0, totals.get(qid, 0) - 1)
                     continue
-                url, text = texts[int(r["doc_id"])]
+                url, text = texts[doc_id]
                 text = text if isinstance(text, str) else ""
-                snippet, _, _, _ = render_snippet(text, qterms.get(r["qid"], []))
-                by_qid.setdefault(r["qid"], []).append(
+                snippet, _, _, _ = render_snippet(text, qterms.get(qid, []))
+                by_qid.setdefault(qid, []).append(
                     {
-                        "doc_id": r["doc_id"],
-                        "score": r["score"],
+                        "doc_id": doc_id,
+                        "score": score,
                         "title": text.split("\n\n", 1)[0],
                         "url": url,
                         "snippet": snippet,

@@ -254,8 +254,9 @@ def inverted_frame(docs, tf_cap: int = 2048, text_col: str = "text"):
     shuffles key on term for stats/blocks). tf/positions capped at 2048
     (term-index/term-index.cpp:269-274); doclen is the uncapped count.
 
-    Docs with zero tokens emit no rows (doc_meta recovers them by left
-    join, postings.doc_meta()).
+    Docs with zero tokens emit no rows; a caller that needs their
+    doclen = 0 left-joins the docs frame onto the posting doclens, as
+    plans/checkpoint.py does.
     """
 
     def invert(batches):

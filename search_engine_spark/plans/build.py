@@ -51,6 +51,9 @@ class InvertedIndex:
     # plans.cache.attach_posting_cache; carried on the index handle (NOT on
     # a DataFrame attribute, which silently vanishes under any transform)
     hot_pool_bc: object = None
+    # the same pool decoded once in the driver, term -> (ids, tfs, dls, pos)
+    # (plans/serve.decode_pool); the daemon scores its batches over it
+    hot_postings: dict | None = None
     # exact integer total token count (sum of doclens). Lets merge derive
     # the merged avgdl EXACTLY (len_sum_l + len_sum_r) / (docN_l + docN_r)
     # instead of a float-weighted mean. None on legacy handles.

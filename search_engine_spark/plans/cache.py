@@ -26,6 +26,14 @@ re-derives a correct mapping instead of silently merging hot rows into the
 wrong shard. The shard kernel additionally validates its incoming cold
 rows against the claimed bounds and fails loudly on any drift between
 attach and query time (see plans/serve.shard_search).
+
+Driver copy: ``attach_posting_cache`` also keeps the pool DECODED in the
+driver (term -> doc ids, tfs, doclens, positions as int64 arrays), for the
+daemon, which scores each drained batch in the driver
+(plans/serve.driver_search). The decoded pool takes about 6x the pool's
+budgeted bytes (6.29 MB for a 1.04 MB pool on the 4000-page benchmark
+corpus). The budget keeps its meaning: compressed block bytes
+(``PostingCache.bytes_used``), not driver memory.
 """
 
 from __future__ import annotations
@@ -96,10 +104,17 @@ def build_posting_cache(index, budget_bytes: int = DEFAULT_BUDGET) -> PostingCac
 def served_blocks(index, cache: PostingCache) -> DataFrame:
     """The COLD half of the serving split (search.c's cached-vs-on-disk
     posting split): blocks streamed from the store with the hot terms
-    filtered out. Narrow plan — the doc-sharded partitioning of the parent
-    is preserved. Use ``attach_posting_cache`` to get a servable index; this
-    helper only derives the cold view."""
-    return index.doc_blocks.join(F.broadcast(cache.hot_terms.select("term")), "term", "left_anti")
+    filtered out. The hot terms are taken from the pool content in the
+    driver and written into the plan as a literal set, so the view is a
+    plain filter: no broadcast job per query, and the doc-sharded
+    partitioning of the parent is preserved. Use ``attach_posting_cache``
+    to get a servable index; this helper only derives the cold view."""
+    from .serve import in_list
+
+    hot = cache.hot_rows
+    if hot is None or not len(hot):
+        return index.doc_blocks
+    return index.doc_blocks.filter(~in_list("term", sorted(set(hot["term"]))))
 
 
 def partition_doc_ranges(blocks: DataFrame) -> dict[int, object]:
@@ -191,10 +206,14 @@ def attach_posting_cache(index, cache: PostingCache):
     and validates the cold rows against bounds[pid], raising on any
     attach-to-query drift instead of silently mis-scoring
     (plans/serve.shard_search).
+
+    The handle also carries ``hot_postings``, the same pool decoded once in
+    the driver (plans/serve.decode_pool), which the daemon's driver-side
+    scorer reads (plans/serve.driver_search).
     """
     import dataclasses
 
-    from .serve import serving_coalesce
+    from .serve import decode_pool, serving_coalesce
 
     # normalize to the SERVING layout before measuring bounds: shard_search
     # coalesces the block frame to one shard per core (serve.serving_coalesce,
@@ -243,4 +262,6 @@ def attach_posting_cache(index, cache: PostingCache):
                 hot[owner == pid].reset_index(drop=True), protocol=5
             )
     bc = blocks.sparkSession.sparkContext.broadcast((pool, bounds))
-    return dataclasses.replace(index, doc_blocks=cold, hot_pool_bc=bc)
+    return dataclasses.replace(
+        index, doc_blocks=cold, hot_pool_bc=bc, hot_postings=decode_pool(hot)
+    )

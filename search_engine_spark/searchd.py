@@ -11,13 +11,14 @@ request shape onto the engine facade.
 
 Spark driver-side concurrency: concurrent requests are MICRO-BATCHED — the
 handler enqueues each request and a single drainer thread sweeps the queue
-(one bounded-latency window per sweep) into ONE ``query_json_many`` call,
-i.e. one batched Spark plan + one snippet pass for every concurrent client
-instead of one serialized job each. Under a single client this degenerates
-to the per-request path with one window of added latency (default 5 ms);
-under 32 concurrent clients it is the batch-serving shape the engine
-already optimizes (plans/serve.shard_search scores the whole workload per
-shard pass).
+(one bounded-latency window per sweep) into ONE ``query_json_many`` call.
+That call scores the whole batch in the driver, like the reference's
+one-process searchd: terms in the posting-cache pool are read from its
+decoded in-memory copy, the batch's other terms arrive with one Spark
+fetch of their blocks, and one docstore probe feeds the snippet pass
+(plans/serve.driver_search). So a batch costs at most two Spark jobs,
+however many clients it drains. Under a single client this degenerates to
+the per-request path with one window of added latency (default 5 ms).
 
 Run: ``python -m search_engine_spark.searchd --index <path> [--port 8921]``
 """
@@ -25,6 +26,7 @@ Run: ``python -m search_engine_spark.searchd --index <path> [--port 8921]``
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -33,6 +35,13 @@ DEFAULT_PORT = 8921  # searchd/config.h:1
 DEFAULT_URI = "/search"  # searchd/config.h:2
 BATCH_WINDOW_MS = 5.0  # micro-batch accumulation window (latency bound)
 MAX_BATCH = 64  # requests per drained batch
+# listen backlog: a burst of clients waits in the kernel's accept queue
+# while the drainer's driver-side scoring holds the interpreter; at
+# http.server's default of 5, 64 clients connecting at once got some of
+# their connections reset
+LISTEN_BACKLOG = 128
+
+log = logging.getLogger(__name__)
 
 
 def keywords_to_qtext(kw_list) -> str:
@@ -58,9 +67,10 @@ class MicroBatcher:
     a single long-lived drainer thread waits for work, sleeps one
     ``window_ms`` accumulation window (the latency price of batching), then
     executes everything queued as ONE batch. Replies are matched back by
-    position. A batch-level failure answers every member with the
-    reference's window-calculation error code rather than killing the
-    daemon (searchd_ret SEARCHD_RET_WIND_CALC_ERR role)."""
+    position. A batch-level failure is logged with its traceback and
+    answers every member with the reference's window-calculation error
+    code rather than killing the daemon (searchd_ret
+    SEARCHD_RET_WIND_CALC_ERR role)."""
 
     def __init__(self, engine, window_ms: float = BATCH_WINDOW_MS, max_batch: int = MAX_BATCH):
         self.engine = engine
@@ -93,6 +103,7 @@ class MicroBatcher:
             try:
                 outs = self.engine.query_json_many([it["req"] for it in batch])
             except Exception:
+                log.exception("query_json_many failed on a batch of %d requests", len(batch))
                 outs = [errcode_json(RET_WINDOW_ERR)] * len(batch)
             for it, out in zip(batch, outs):
                 it["out"] = out
@@ -135,10 +146,14 @@ def make_handler(batcher: MicroBatcher):
     return SearchHandler
 
 
+class _Server(ThreadingHTTPServer):
+    request_queue_size = LISTEN_BACKLOG
+
+
 def serve(engine, port: int = DEFAULT_PORT, block: bool = True):
     """Start the daemon; returns the server object (non-blocking callers
     shut it down with ``server.shutdown()``)."""
-    srv = ThreadingHTTPServer(("127.0.0.1", port), make_handler(MicroBatcher(engine)))
+    srv = _Server(("127.0.0.1", port), make_handler(MicroBatcher(engine)))
     if block:
         srv.serve_forever()
     else:

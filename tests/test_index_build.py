@@ -94,6 +94,19 @@ def test_term_stats_and_negative_idf_term(index200, pydocs200):
     assert math.log((docN - df + 0.5) / (df + 0.5)) < 0
 
 
+def test_term_stats_df_is_posting_count(index200):
+    """The daemon's driver-side scorer takes each term's idf from its
+    posting count (plans/serve.driver_search): that count must equal
+    term_stats.df for every term."""
+    from search_engine_spark.operators.blocks import DOC_META_TERM
+    from search_engine_spark.plans.serve import decode_pool
+
+    blocks = index200.doc_blocks.filter(F.col("term") != DOC_META_TERM).toPandas()
+    counts = {t: len(ids) for t, (ids, _, _, _) in decode_pool(blocks).items()}
+    df = {r["term"]: r["df"] for r in index200.term_stats.collect()}
+    assert len(df) > 100 and counts == df
+
+
 def test_salted_term_stats_equals_plain(spark, corpus200, index200):
     docs = assign_doc_ids(corpus200).select("doc_id", "text")
     tokens = tokens_frame(docs)

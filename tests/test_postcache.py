@@ -114,6 +114,32 @@ def test_mixed_hot_cold_query_identical(spark, index200):
     cache.hot_terms.unpersist()
 
 
+def test_warmed_serving_plan_has_no_broadcast(spark, index200, tmp_path):
+    """The cold view filters the hot terms out by a literal set, not by a
+    join against a broadcast of the persisted hot-term frame, so a query on
+    a warmed engine runs no broadcast job."""
+    from search_engine_spark.plans.build import load_index, save_index
+    from search_engine_spark.plans.query import search, search_many
+
+    save_index(index200, str(tmp_path / "idx"))
+    loaded = load_index(spark, str(tmp_path / "idx"))
+    sizes = _term_sizes(loaded)
+    cache = build_posting_cache(loaded, budget_bytes=sum(r["term_bytes"] for r in sizes) // 3)
+    try:
+        hot = sorted(r["term"] for r in cache.hot_terms.collect())
+        cold = next(r["term"] for r in sizes if r["term"] not in hot)
+        warm = attach_posting_cache(loaded, cache)
+        for df in (
+            search(spark, warm, f"{hot[0]} {cold}"),
+            search_many(spark, warm, {"a": (hot[0], "or"), "b": (f"{hot[1]} {cold}", "and")}),
+        ):
+            plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            assert "Scan parquet" in plan and "BroadcastExchange" not in plan
+    finally:
+        cache.hot_blocks.unpersist()
+        cache.hot_terms.unpersist()
+
+
 def test_attach_survives_split_conf_drift(spark, index200, tmp_path):
     """Content-addressed pool assignment: build the cache against one read
     of the saved store, then RE-READ the store under a radically different

@@ -4,13 +4,17 @@
 from __future__ import annotations
 
 import json
+import logging
+import threading
 import urllib.request
 
 import pytest
+from pyspark.sql import functions as F
 
 from search_engine_spark.corpus import synth_corpus, vocab_word
-from search_engine_spark.engine import SearchEngine
-from search_engine_spark.searchd import keywords_to_qtext, serve
+from search_engine_spark.engine import RET_WINDOW_ERR, SearchEngine, errcode_json
+from search_engine_spark.plans.cache import attach_posting_cache, build_posting_cache
+from search_engine_spark.searchd import MicroBatcher, keywords_to_qtext, serve
 
 
 @pytest.fixture(scope="module")
@@ -130,3 +134,206 @@ def test_page_window_render_matches_render_all(engine):
     solo = [engine.query_json(q, page=p, mode=m) for q, p, m in reqs]
     batched = engine.query_json_many(reqs)
     assert batched == solo
+
+
+def test_batch_failure_is_logged_and_answered(caplog):
+    """A batch that raises answers every member with RET_WINDOW_ERR and
+    leaves a log record with the traceback and the batch size."""
+
+    class Broken:
+        def query_json_many(self, requests):
+            raise RuntimeError("engine down")
+
+    batcher = MicroBatcher(Broken(), window_ms=50)
+    got = [None] * 3
+
+    def ask(i):
+        got[i] = batcher.submit(f"q{i}", 1)
+
+    with caplog.at_level(logging.ERROR, logger="search_engine_spark.searchd"):
+        threads = [threading.Thread(target=ask, args=(i,)) for i in range(3)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    assert got == [errcode_json(RET_WINDOW_ERR)] * 3
+    recs = [r for r in caplog.records if r.name == "search_engine_spark.searchd"]
+    assert recs and all(r.levelno == logging.ERROR for r in recs)
+    assert all(isinstance(r.exc_info[1], RuntimeError) for r in recs)
+    assert all("batch of" in r.getMessage() for r in recs)
+    assert sum(r.args[0] for r in recs) == 3  # every request, whatever the split
+
+
+def test_connection_burst_is_not_reset():
+    """64 clients connect at once while the drainer holds the interpreter,
+    as driver-side scoring does: the listen backlog must queue the burst
+    (http.server's default of 5 reset some of these connections)."""
+    import sys
+    import time
+
+    class Busy:
+        def query_json_many(self, requests):
+            t0 = time.perf_counter()
+            while time.perf_counter() - t0 < 0.05:  # pure-Python work
+                sum(range(1000))
+            return [errcode_json(3)] * len(requests)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(0.05)  # a drainer slow to give up the interpreter
+    errors = []
+    try:
+        for rnd in range(10):
+            srv = serve(Busy(), port=18950 + rnd, block=False)
+            url = f"http://127.0.0.1:{18950 + rnd}/search"
+
+            def hit(i):
+                try:
+                    _post(url, {"page": 1, "kw": [{"type": "term", "str": f"w{i}"}]})
+                except OSError as e:
+                    errors.append(e)
+
+            threads = [threading.Thread(target=hit, args=(i,)) for i in range(64)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            srv.shutdown()
+            srv.server_close()
+            assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+
+
+def _warmed(spark, index, budget):
+    cache = build_posting_cache(index, budget_bytes=budget)
+    return SearchEngine(spark, attach_posting_cache(index, cache)), cache
+
+
+@pytest.fixture(scope="module")
+def saved200(spark, index200, tmp_path_factory):
+    """index200 saved and loaded back, as the daemon serves an index."""
+    from search_engine_spark.plans.build import load_index, save_index
+
+    path = str(tmp_path_factory.mktemp("searchd") / "idx")
+    save_index(index200, path)
+    return load_index(spark, path)
+
+
+@pytest.fixture(scope="module")
+def warm_engine(spark, saved200):
+    """The saved index200 with a third of its posting bytes in the pool:
+    the df-hottest terms are hot, the rest cold."""
+    total = saved200.doc_blocks.select(
+        F.sum(
+            F.octet_length("doc_ids_blob") + F.octet_length("tfs_blob")
+            + F.octet_length("doclens_blob") + F.octet_length("positions_blob")
+        )
+    ).first()[0]
+    eng, cache = _warmed(spark, saved200, total // 3)
+    yield eng
+    cache.hot_blocks.unpersist()
+    cache.hot_terms.unpersist()
+
+
+def _hot_cold(eng):
+    hot = sorted(eng.index.hot_postings)
+    cold = sorted(
+        r["term"] for r in eng.index.term_stats.where(F.col("df") >= 3).collect()
+        if r["term"] not in eng.index.hot_postings
+    )
+    assert len(hot) >= 2 and len(cold) >= 3
+    return hot, cold
+
+
+def _requests(hot, cold):
+    return [
+        (f"{hot[0]} {hot[1]}", 1, "or"),         # all hot
+        (f"{hot[0]} {hot[1]}", 2, "or"),
+        (f"{cold[0]} {cold[1]}", 1, "or"),       # all cold
+        (f"{hot[1]} {cold[0]}", 1, "or"),        # mixed
+        (f"{hot[1]} {cold[0]}", 2, "or"),
+        (f"{hot[1]} {cold[0]}", 999, "or"),      # past the end
+        (f"{cold[2]} zzzqoov", 1, "or"),         # OOV beside a cold term
+        ("zzzqoov", 1, "or"),                    # page-1 no-hit -> NO_HIT
+        ("zzzqoov", 2, "or"),                    # -> ILLEGAL_PAGENUM
+        (f"{hot[0]} {cold[1]}", 1, "and"),       # AND mode
+        (f"{cold[0]} zzzqoov", 1, "and"),        # AND with an OOV term
+        (f"{cold[0]} {hot[0]} {cold[0]}", 1, "or"),  # duplicate terms
+        (f"waaaa {cold[1]}", 1, "or"),           # negative-idf term (df > N/2)
+        (f"waaaa {hot[1]}", 2, "and"),
+        (f"{cold[1]}", 0, "or"),                 # admission reject
+    ]
+
+
+def test_many_equals_query_json_on_warmed_engine(warm_engine):
+    """Every request kind of a drained batch, scored in the driver over
+    the decoded pool plus one cold fetch, equals query_json (the shard
+    kernel with the pool merged in)."""
+    hot, cold = _hot_cold(warm_engine)
+    reqs = _requests(hot, cold)
+    solo = [warm_engine.query_json(q, page=p, mode=m) for q, p, m in reqs]
+    assert warm_engine.query_json_many(reqs) == solo
+    assert sum(1 for r in solo if r["ret_code"] == 0) >= 9
+
+
+def test_many_equals_query_json_zero_budget(spark, saved200, warm_engine):
+    """warm(0): an empty pool, every term cold."""
+    hot, cold = _hot_cold(warm_engine)
+    eng, cache = _warmed(spark, saved200, 0)
+    try:
+        assert eng.index.hot_postings == {}
+        reqs = _requests(hot, cold)
+        assert eng.query_json_many(reqs) == [
+            eng.query_json(q, page=p, mode=m) for q, p, m in reqs
+        ]
+    finally:
+        cache.hot_blocks.unpersist()
+        cache.hot_terms.unpersist()
+
+
+def test_drained_batch_runs_at_most_two_jobs(spark, warm_engine):
+    """One cold-term fetch plus one docstore probe, whatever the batch."""
+    import time
+
+    hot, cold = _hot_cold(warm_engine)
+    reqs = _requests(hot, cold)
+    sc = spark.sparkContext
+    group = "test-many-jobs"
+    sc.setJobGroup(group, "query_json_many")
+    try:
+        warm_engine.query_json_many(reqs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(2)  # the status store follows the listener bus
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_many_docstore_miss_drops_hit_and_shrinks_total(spark, warm_engine):
+    """A hit whose doc is missing from the docstore is dropped from its
+    page (the page comes up one row short; query_json's inner join would
+    backfill it) and shrinks that request's total."""
+    import dataclasses
+
+    from search_engine_spark.plans.query import search
+
+    hot, cold = _hot_cold(warm_engine)
+    q = f"{hot[1]} {cold[0]}"
+    full = warm_engine.query_json(q, page=1)
+    n = len(search(warm_engine.spark, warm_engine.index, q).collect())
+    miss = full["hits"][0]["docid"]
+    ids = [h["docid"] for h in full["hits"]]
+    rare, rare_doc = next(
+        (t, d) for t, d in (
+            (r["term"], warm_engine.query_json(r["term"], page=1)["hits"][0]["docid"])
+            for r in warm_engine.index.term_stats.where(F.col("df") == 1).collect()
+        ) if d not in ids
+    )
+    idx = warm_engine.index
+    eng = SearchEngine(spark, dataclasses.replace(
+        idx, docstore=idx.docstore.where(~F.col("doc_id").isin([miss, rare_doc]))
+    ))
+    got, got_rare = eng.query_json_many([(q, 1, "or"), (rare, 1, "or")])
+    assert [h["docid"] for h in got["hits"]] == ids[1:]
+    assert got["tot_pages"] == (n - 1 + 9) // 10
+    assert got_rare == errcode_json(3)  # its one hit gone: total 0 -> NO_HIT
