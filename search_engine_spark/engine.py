@@ -233,14 +233,14 @@ class SearchEngine:
     def query_json_many(self, requests: list[tuple[str, int, str]]) -> list[dict]:
         """Batched daemon replies: N ``(qtext, page, mode)`` requests in,
         N ``query_json``-shaped dicts out. The term requests of the batch
-        are scored together IN THE DRIVER (plans/serve.driver_search): the
-        posting-cache pool's decoded postings plus ONE Spark fetch of the
-        batch's other terms' blocks. One id-pruned docstore probe follows,
-        and each request's page of snippets renders driver-side (the
-        searchd micro-batcher drains concurrent POSTs through here, so a
-        batch costs at most two Spark jobs, whatever its size).
-        Math-bearing requests fall back to the per-query mixed path;
-        admission rejections are answered without touching Spark."""
+        are ranked together (``_rank_batch``: in the driver on a warmed
+        engine, else one ``search_many`` plan), then one id-pruned docstore
+        probe follows and each request's page of snippets renders
+        driver-side (the searchd micro-batcher drains concurrent POSTs
+        through here, so a warmed engine's batch costs at most two Spark
+        jobs, whatever its size). Math-bearing requests fall back to the
+        per-query mixed path; admission rejections are answered without
+        touching Spark."""
         out: list[dict | None] = [None] * len(requests)
         queries: dict[str, tuple[str, str]] = {}
         qterms: dict[str, list[str]] = {}
@@ -258,7 +258,7 @@ class SearchEngine:
             qterms[qid] = terms
             pending[qid] = (i, page)
         if queries:
-            from .plans.serve import driver_search, in_list
+            from pyspark.sql import functions as F
 
             # the rank set is bounded by design — at most MAX_BATCH drained
             # requests x the 155-deep rank window (search/config.h:29) — so
@@ -266,13 +266,13 @@ class SearchEngine:
             # daemon's proc_results shape (searchd/utils.c:173-389 renders
             # its page on the serving node). Snippets render ONLY each
             # request's page window, not the 155-deep set.
-            ranked = driver_search(self.index, queries)
-            totals = {qid: len(res[0]) for qid, res in ranked.items()}
+            ranked = self._rank_batch(queries)
+            totals = {qid: len(docs) for qid, (docs, _) in ranked.items()}
             page_rows = []  # (qid, doc_id, score), each qid's rows in rank order
             for qid, (_, page) in pending.items():
                 if qid not in ranked:
                     continue
-                docs, *_, scores = ranked[qid]
+                docs, scores = ranked[qid]
                 lo = (page - 1) * RES_PER_PAGE
                 page_rows.extend(
                     (qid, int(d), float(sc))
@@ -292,7 +292,7 @@ class SearchEngine:
                 ids = sorted({d for _, d, _ in page_rows})
                 texts = {
                     int(r["doc_id"]): (r["url"], r["text"])
-                    for r in self.index.docstore.where(in_list("doc_id", ids))
+                    for r in self.index.docstore.where(F.col("doc_id").isin(ids))
                     .select("doc_id", "url", "text").collect()
                 }
             by_qid: dict[str, list] = {}
@@ -324,3 +324,34 @@ class SearchEngine:
                     by_qid.get(qid, []), page, totals.get(qid, 0)
                 )
         return out
+
+    def _rank_batch(self, queries: dict[str, tuple[str, str]]) -> dict[str, tuple]:
+        """qid -> (doc ids, scores) in (score DESC, doc_id ASC) order, at
+        most RANK_K long; a qid without hits is absent.
+
+        On a warmed engine the batch is scored IN THE DRIVER
+        (plans/serve.driver_search): pooled terms from their decoded copy
+        (``warm(budget)``; searchd warms with ``--cache-mb``), the rest
+        with one Spark fetch, as long as those cold terms stay within the
+        pool's bound. Without a pool, or past that bound, nothing keeps a
+        fetched term small (the commonest terms reach docN postings), so
+        the batch runs as one ``search_many`` plan, scored on the
+        executors."""
+        from .plans.serve import driver_search
+
+        res = driver_search(self.index, queries)
+        if res is not None:
+            return {qid: (r[0], r[-1]) for qid, r in res.items()}
+        from .plans.query import search_many
+
+        rows = (
+            search_many(self.spark, self.index, queries)
+            .select("qid", "doc_id", "score")
+            .collect()
+        )
+        ranked: dict[str, tuple] = {}
+        for r in sorted(rows, key=lambda r: (r["qid"], -r["score"], r["doc_id"])):
+            docs, scores = ranked.setdefault(r["qid"], ([], []))
+            docs.append(r["doc_id"])
+            scores.append(r["score"])
+        return ranked

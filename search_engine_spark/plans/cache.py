@@ -27,13 +27,17 @@ wrong shard. The shard kernel additionally validates its incoming cold
 rows against the claimed bounds and fails loudly on any drift between
 attach and query time (see plans/serve.shard_search).
 
-Driver copy: ``attach_posting_cache`` also keeps the pool DECODED in the
-driver (term -> doc ids, tfs, doclens, positions as int64 arrays), for the
-daemon, which scores each drained batch in the driver
-(plans/serve.driver_search). The decoded pool takes about 6x the pool's
-budgeted bytes (6.29 MB for a 1.04 MB pool on the 4000-page benchmark
-corpus). The budget keeps its meaning: compressed block bytes
-(``PostingCache.bytes_used``), not driver memory.
+Driver copies: the driver holds the pool twice. The pickled pool rides
+in the broadcast ``hot_pool_bc`` (the driver JVM keeps it, about the
+budget in bytes) for the shard kernel. ``attach_posting_cache`` also keeps
+the pool DECODED in the driver (term -> doc ids, tfs, doclens, positions
+as int64 arrays), for the daemon, which scores each drained batch in the
+driver (plans/serve.driver_search). The decoded pool takes about 6x the
+pool's budgeted bytes: 6.29 MB for a 1.04 MB pool on the 4000-page
+benchmark corpus, 191.5 MB for a 33.5 MB pool (searchd's default
+``--cache-mb 32``) on a 100k-doc synthetic corpus, where ``warm()`` raised
+the driver Python process's RSS by ~405 MB. The budget keeps its meaning:
+compressed block bytes (``PostingCache.bytes_used``), not driver memory.
 """
 
 from __future__ import annotations
@@ -109,12 +113,10 @@ def served_blocks(index, cache: PostingCache) -> DataFrame:
     plain filter: no broadcast job per query, and the doc-sharded
     partitioning of the parent is preserved. Use ``attach_posting_cache``
     to get a servable index; this helper only derives the cold view."""
-    from .serve import in_list
-
     hot = cache.hot_rows
     if hot is None or not len(hot):
         return index.doc_blocks
-    return index.doc_blocks.filter(~in_list("term", sorted(set(hot["term"]))))
+    return index.doc_blocks.filter(~F.col("term").isin(sorted(set(hot["term"]))))
 
 
 def partition_doc_ranges(blocks: DataFrame) -> dict[int, object]:

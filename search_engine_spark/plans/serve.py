@@ -829,25 +829,6 @@ def df_lookup(index, terms: list[str]) -> dict[str, float]:
 _BLOB_COLS = ["term", "doc_ids_blob", "tfs_blob", "doclens_blob", "positions_blob"]
 
 
-def in_list(col: str, values: list) -> F.Column:
-    """``col IN (values)`` for a non-empty list of ints or plain strings,
-    parsed from ONE SQL string. ``Column.isin`` makes py4j round trips per
-    value: measured on a 4-core host, 65 ms for 30 terms against 0.6 ms for
-    this form, a cost the daemon pays on each drained batch. A string
-    holding a quote, a backslash or a non-printable character falls back to
-    ``Column.isin``, so no escaping rule is needed."""
-    if all(isinstance(v, (int, np.integer)) for v in values):
-        items = [str(int(v)) for v in values]
-    elif all(
-        isinstance(v, str) and v.isprintable() and "'" not in v and "\\" not in v
-        for v in values
-    ):
-        items = [f"'{v}'" for v in values]
-    else:
-        return F.col(col).isin(values)
-    return F.expr(f"{col} IN ({', '.join(items)})")
-
-
 def decode_pool(hot_rows: pd.DataFrame | None) -> dict:
     """The posting-cache pool's block rows, decoded once:
     term -> (ids, tfs, dls, pos), positions included."""
@@ -859,7 +840,7 @@ def decode_pool(hot_rows: pd.DataFrame | None) -> dict:
 
 def driver_search(
     index, queries: dict[str, tuple[str, str]], k: int = S.RANK_K
-) -> dict[str, tuple]:
+) -> dict[str, tuple] | None:
     """Score a batch of queries IN THE DRIVER, the reference searchd's
     one-process shape (indices/postcache.c:62-131, search/search.c:48-80):
     cached terms come from the decoded posting-cache pool
@@ -879,9 +860,12 @@ def driver_search(
 
     Bound: the pool is the df-descending prefix of the vocabulary
     (plans/cache.build_posting_cache), so every cold term's df is at most
-    the pool's smallest df, and that bounds the postings one cold term
-    brings to the driver. Without a pool every term is cold, and a term
-    can bring up to docN postings.
+    the pool's smallest df. The batch is scored here only while its cold
+    terms, at that bound, bring at most as many postings as the pool holds;
+    the driver then never decodes more per batch than the budget already
+    keeps decoded. Otherwise (and always without a pool, where a term can
+    bring docN postings) this returns None before any Spark job, and the
+    caller ranks the batch on the executors.
     """
     from .query import digest_query
 
@@ -891,8 +875,11 @@ def driver_search(
     decoded = {t: pool[t] for t in terms if t in pool}
     cold = [t for t in terms if t not in pool]
     if cold:
+        sizes = [len(v[0]) for v in pool.values()]
+        if not sizes or len(cold) * min(sizes) > sum(sizes):
+            return None
         rows = (
-            index.doc_blocks.filter(in_list("term", cold)).select(*_BLOB_COLS).collect()
+            index.doc_blocks.filter(F.col("term").isin(cold)).select(*_BLOB_COLS).collect()
         )
         acc: dict[str, list] = {}
         _decode_frame(pd.DataFrame(rows, columns=_BLOB_COLS), True, acc)

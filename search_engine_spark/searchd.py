@@ -12,13 +12,16 @@ request shape onto the engine facade.
 Spark driver-side concurrency: concurrent requests are MICRO-BATCHED — the
 handler enqueues each request and a single drainer thread sweeps the queue
 (one bounded-latency window per sweep) into ONE ``query_json_many`` call.
-That call scores the whole batch in the driver, like the reference's
-one-process searchd: terms in the posting-cache pool are read from its
-decoded in-memory copy, the batch's other terms arrive with one Spark
-fetch of their blocks, and one docstore probe feeds the snippet pass
-(plans/serve.driver_search). So a batch costs at most two Spark jobs,
-however many clients it drains. Under a single client this degenerates to
-the per-request path with one window of added latency (default 5 ms).
+On a warmed engine (``main`` warms with ``--cache-mb``) that call scores
+the whole batch in the driver, like the reference's one-process searchd:
+terms in the posting-cache pool are read from its decoded in-memory copy,
+the batch's other terms arrive with one Spark fetch of their blocks, and
+one docstore probe feeds the snippet pass (plans/serve.driver_search). So
+a batch costs at most two Spark jobs, however many clients it drains. An
+engine without a pool, or a batch whose cold terms could bring more
+postings than the pool holds, is ranked with one ``search_many`` plan
+instead. Under a single client this degenerates to the per-request path
+with one window of added latency (default 5 ms).
 
 Run: ``python -m search_engine_spark.searchd --index <path> [--port 8921]``
 """

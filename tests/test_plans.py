@@ -16,29 +16,6 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-def test_in_list_equals_isin(spark, tmp_path):
-    """serve.in_list (one parsed SQL expression) keeps Column.isin's rows,
-    including strings it must hand to isin, and still reaches the parquet
-    scan as a pushed filter."""
-    from search_engine_spark.plans.serve import in_list
-
-    words = ["waaab", "caf\u00e9", "\u4e2d\u6587", "it's", "back\\slash", "tab\there", "zz"]
-    path = str(tmp_path / "t")
-    rows = [(w, i) for i, w in enumerate(words)]
-    spark.createDataFrame(rows, "term string, doc_id long").write.parquet(path)
-    df = spark.read.parquet(path)
-    for col, values in (
-        ("term", ["waaab", "caf\u00e9", "\u4e2d\u6587", "nope"]),
-        ("term", ["it's", "back\\slash", "zz"]),
-        ("term", ["tab\there"]),
-        ("doc_id", [0, 2, 5, 99]),
-    ):
-        want = sorted(df.filter(F.col(col).isin(values)).collect())
-        got = df.filter(in_list(col, values))
-        assert sorted(got.collect()) == want and want
-    assert "PushedFilters: [In(term" in _plan(df.filter(in_list("term", ["waaab", "zz"])))
-
-
 def test_term_filter_pushed_to_parquet(spark, index200, tmp_path):
     # persist blocks to parquet, read back, filter by term: the predicate
     # must reach the scan (PushedFilters), not a post-scan Filter only

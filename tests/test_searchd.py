@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from search_engine_spark.corpus import synth_corpus, vocab_word
 from search_engine_spark.engine import RET_WINDOW_ERR, SearchEngine, errcode_json
 from search_engine_spark.plans.cache import attach_posting_cache, build_posting_cache
+from search_engine_spark.plans.serve import driver_search
 from search_engine_spark.searchd import MicroBatcher, keywords_to_qtext, serve
 
 
@@ -182,9 +183,9 @@ def test_connection_burst_is_not_reset():
     sys.setswitchinterval(0.05)  # a drainer slow to give up the interpreter
     errors = []
     try:
-        for rnd in range(10):
-            srv = serve(Busy(), port=18950 + rnd, block=False)
-            url = f"http://127.0.0.1:{18950 + rnd}/search"
+        for _ in range(10):
+            srv = serve(Busy(), port=0, block=False)
+            url = f"http://127.0.0.1:{srv.server_address[1]}/search"
 
             def hit(i):
                 try:
@@ -273,23 +274,46 @@ def test_many_equals_query_json_on_warmed_engine(warm_engine):
     hot, cold = _hot_cold(warm_engine)
     reqs = _requests(hot, cold)
     solo = [warm_engine.query_json(q, page=p, mode=m) for q, p, m in reqs]
+    qs = {f"q{i}": (q, m) for i, (q, _, m) in enumerate(reqs)}
+    assert driver_search(warm_engine.index, qs) is not None
     assert warm_engine.query_json_many(reqs) == solo
     assert sum(1 for r in solo if r["ret_code"] == 0) >= 9
 
 
 def test_many_equals_query_json_zero_budget(spark, saved200, warm_engine):
-    """warm(0): an empty pool, every term cold."""
+    """warm(0) leaves an empty pool, and an unwarmed engine has none:
+    nothing bounds the postings of a term fetched to the driver, so
+    driver_search declines and the batch runs as one search_many plan."""
     hot, cold = _hot_cold(warm_engine)
+    reqs = _requests(hot, cold)
     eng, cache = _warmed(spark, saved200, 0)
     try:
         assert eng.index.hot_postings == {}
-        reqs = _requests(hot, cold)
-        assert eng.query_json_many(reqs) == [
-            eng.query_json(q, page=p, mode=m) for q, p, m in reqs
-        ]
+        for e in (eng, SearchEngine(spark, saved200)):
+            assert driver_search(e.index, {"q": (cold[0], "or")}) is None
+            assert e.query_json_many(reqs) == [
+                e.query_json(q, page=p, mode=m) for q, p, m in reqs
+            ]
     finally:
         cache.hot_blocks.unpersist()
         cache.hot_terms.unpersist()
+
+
+def test_driver_search_declines_past_the_pool_bound(warm_engine):
+    """Cold terms, each counted at the pool's smallest df, may bring at
+    most the pool's posting count to the driver; one more declines."""
+    pool = warm_engine.index.hot_postings
+    sizes = [len(v[0]) for v in pool.values()]
+    fits = sum(sizes) // min(sizes)
+    words = (vocab_word(i) for i in range(len(pool) + fits + 1))
+    cold = [w for w in words if w not in pool][: fits + 1]
+    assert len(cold) == fits + 1
+
+    def batch(terms):
+        return {f"q{i}": (t, "or") for i, t in enumerate(terms)}
+
+    assert driver_search(warm_engine.index, batch(cold[:fits])) is not None
+    assert driver_search(warm_engine.index, batch(cold)) is None
 
 
 def test_drained_batch_runs_at_most_two_jobs(spark, warm_engine):
