@@ -3,8 +3,10 @@
 Prints the properties the 1000-executor story rests on, WITH the actual
 ``explain("formatted")`` output so they are checkable claims, not prose:
 
-- serving: ONE mapInPandas over the term-filtered block frame, the only
-  exchange is the final per-qid rank window (n_shards*k candidate rows);
+- serving: ONE mapInPandas over the term-filtered block frame; on one
+  serving shard no exchange at all (the kernel ranks), past one shard the
+  only exchange is the final per-qid rank window (n_shards*k candidate
+  rows);
 - saved-store serving: the term predicate reaches the parquet scan
   (PushedFilters) and the scan reads only the posting-block columns;
 - MNC candidate generation: broadcast hash equi-joins, NO
@@ -91,19 +93,23 @@ def main() -> None:
 
     # --- 1. COLD serving straight off the saved store ---------------------
     # the honest end-to-end plan: parquet scan -> term-filtered -> one
-    # Python kernel -> rank window. The build's cached lineage would bloat
+    # Python kernel (-> rank window past one shard), audited at a forced
+    # one and four serving shards. The build's cached lineage would bloat
     # an in-memory index's explain output, so the audit uses the store.
     store = "/dev/shm/plan_audit_idx"
     save_index(idx, store)
     cold = load_index(spark, store)
-    resolved = serve.resolve_keywords(
-        spark, cold, {"q1": (f"{W(1)} {W(2)}", "or"), "q2": (f"{W(3)} {W(9)}", "and")}
-    )
-    plan = explain_str(serve.shard_search(spark, cold, resolved))
-    out.append(section(
-        "BM25 serving, cold, straight off the parquet store",
-        plan,
-        [
+    queries = {"q1": (f"{W(1)} {W(2)}", "or"), "q2": (f"{W(3)} {W(9)}", "and")}
+
+    def serving_plan(shards: str) -> str:
+        os.environ["SPARK_GRAFT_SERVE_SHARDS"] = shards
+        try:
+            return explain_str(serve.shard_search(spark, cold, queries))
+        finally:
+            del os.environ["SPARK_GRAFT_SERVE_SHARDS"]
+
+    def scan_checks(plan: str) -> list[tuple[str, bool]]:
+        return [
             ("term predicate reaches the parquet scan "
              "(PushedFilters: In(term, ...)) — posting blocks of other "
              "terms are never read",
@@ -114,6 +120,26 @@ def main() -> None:
              and "text" not in plan.split("ReadSchema")[1][:400]),
             ("scoring runs in ONE Python stage (MapInPandas)",
              plan.count("MapInPandas") >= 1),
+        ]
+
+    plan = serving_plan("1")
+    out.append(section(
+        "BM25 serving, one shard, straight off the parquet store",
+        plan,
+        scan_checks(plan) + [
+            ("no Exchange: one shard holds every block of every query "
+             "term, so the kernel takes idf from its blocks and its local "
+             "top-k is the ranked answer (one Spark job)",
+             "Exchange" not in _node_names(plan)),
+            ("no join anywhere in the serving plan",
+             "Join" not in plan),
+        ],
+    ))
+    plan = serving_plan("4")
+    out.append(section(
+        "BM25 serving, four shards, straight off the parquet store",
+        plan,
+        scan_checks(plan) + [
             ("exactly one Exchange — the per-qid rank window over "
              "n_shards*k candidate rows; the scan-to-kernel path is "
              "shuffle-free (whole-file splits preserve the doc-sharded "

@@ -258,7 +258,7 @@ class SearchEngine:
             qterms[qid] = terms
             pending[qid] = (i, page)
         if queries:
-            from pyspark.sql import functions as F
+            from .plans.serve import sql_in
 
             # the rank set is bounded by design — at most MAX_BATCH drained
             # requests x the 155-deep rank window (search/config.h:29) — so
@@ -292,7 +292,7 @@ class SearchEngine:
                 ids = sorted({d for _, d, _ in page_rows})
                 texts = {
                     int(r["doc_id"]): (r["url"], r["text"])
-                    for r in self.index.docstore.where(F.col("doc_id").isin(ids))
+                    for r in self.index.docstore.where(sql_in("doc_id", ids))
                     .select("doc_id", "url", "text").collect()
                 }
             by_qid: dict[str, list] = {}

@@ -724,9 +724,8 @@ def _mixed_shard_search(
     bc = spark.sparkContext.broadcast(_math_channel(minfo))
     hot_pool = index.hot_pool_bc
     term_set = {t for _, t, _ in kws}
-    blocks = serve.serving_coalesce(index.doc_blocks, docN=index.docN).filter(
-        F.col("term").isin(sorted(term_set))
-    )
+    serving, _ = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
+    blocks = serving.filter(serve.sql_in("term", term_set))
 
     def kernel(batches):
         if hot_pool is not None:
@@ -804,8 +803,8 @@ def _mixed_routed_search(
         )
         return top_k(local, k).select(*_MIXED_COLS)
 
-    serving = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
-    blocks = serving.filter(F.col("term").isin(sorted(term_set)))
+    serving, _ = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
+    blocks = serving.filter(serve.sql_in("term", term_set))
     # an attached posting cache carries the runs of the FULL serving layout
     # (its pool is keyed by them); the cold view alone would miss hot docs.
     # Without one, the runs of the query terms' blocks suffice: a math doc

@@ -47,6 +47,8 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .serve import decode_pool, serving_coalesce, sql_in
+
 DEFAULT_BUDGET = 32 * 1024 * 1024  # postcache.h POSTCACHE_POOL_LIMIT per searchd default
 
 
@@ -116,7 +118,7 @@ def served_blocks(index, cache: PostingCache) -> DataFrame:
     hot = cache.hot_rows
     if hot is None or not len(hot):
         return index.doc_blocks
-    return index.doc_blocks.filter(~F.col("term").isin(sorted(set(hot["term"]))))
+    return index.doc_blocks.filter(~sql_in("term", hot["term"]))
 
 
 def partition_doc_ranges(blocks: DataFrame) -> dict[int, object]:
@@ -193,7 +195,8 @@ def attach_posting_cache(index, cache: PostingCache):
 
     - ``bounds``: pid -> merged doc-interval array of each serving-frame
       partition as planned right now (partition_doc_ranges; one cheap
-      metadata-column job per attach). Interval sets must be globally
+      metadata-column job per attach, skipped on one serving shard, whose
+      bounds are the whole doc-id range). Interval sets must be globally
       disjoint — the doc-sharded layout invariant the serving kernel
       requires; overlap raises.
     - ``pool``: pid -> the PICKLED bytes of a pandas frame holding the hot
@@ -215,17 +218,23 @@ def attach_posting_cache(index, cache: PostingCache):
     """
     import dataclasses
 
-    from .serve import decode_pool, serving_coalesce
-
     # normalize to the SERVING layout before measuring bounds: shard_search
     # coalesces the block frame to one shard per core (serve.serving_coalesce,
     # deterministic whole-parent grouping), so the pool's pid keys must be
-    # derived from the same layout. ``cold`` is a narrow anti-join over the
-    # same parent partitioning, so the identical coalesce target yields the
-    # identical pid grouping.
-    blocks = serving_coalesce(index.doc_blocks, docN=index.docN)
-    cold = serving_coalesce(served_blocks(index, cache), docN=index.docN)
-    bounds = partition_doc_ranges(blocks)
+    # derived from the same layout. The cold view stays in the parent
+    # layout: it is a narrow filter over the same parent partitioning, so
+    # shard_search's coalesce to the identical target yields the identical
+    # pid grouping, while the daemon's cold-term fetch (serve.driver_search)
+    # scans it with a task per parent split, not one per serving shard.
+    blocks, n_shards = serving_coalesce(index.doc_blocks, docN=index.docN)
+    cold = served_blocks(index, cache)
+    if n_shards == 1:
+        # one shard owns every doc id: its bounds are one full run, and
+        # the ranges job (a decode of every doc_ids blob) is not needed
+        full = np.iinfo(np.int64)
+        bounds = {0: np.array([[full.min, full.max]], dtype=np.int64)}
+    else:
+        bounds = partition_doc_ranges(blocks)
     flat = sorted(
         (int(lo), int(hi), pid) for pid, iv in bounds.items() for lo, hi in iv
     )

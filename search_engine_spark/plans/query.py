@@ -1,15 +1,17 @@
 """BM25 top-k query entry points (reference search/ role).
 
 A query is digested into keywords (the reference re-lexes them with the
-indexing lexer, search/query.c), the keywords are resolved to idf in at
-most one tiny term_stats lookup (plans/serve.resolve_keywords), and the
-doc-sharded serving kernel scores them (plans/serve.shard_search): each
-shard decodes its term-filtered posting blocks and runs the reference's
-document-at-a-time merge + BM25 + proximity (search/postmerge.c,
-search/search.c:167-278, search/proximity.c) vectorized in numpy, keeps a
-local top-k, and a rank window merges the n_shards * k candidates. That
-kernel is the engine's only BM25 scorer; ``search`` and ``search_many``
-are thin fronts over it.
+indexing lexer, search/query.c) and the doc-sharded serving kernel scores
+them (plans/serve.shard_search): each shard decodes its term-filtered
+posting blocks and runs the reference's document-at-a-time merge + BM25 +
+proximity (search/postmerge.c, search/search.c:167-278,
+search/proximity.c) vectorized in numpy and keeps a local top-k. On one
+serving shard that is the whole query, one Spark job: the kernel takes
+idf from its blocks' posting counts and its top-k is the ranked answer.
+Past one shard, the keywords are resolved to idf in at most one tiny
+term_stats lookup (plans/serve.resolve_keywords) and a rank window merges
+the n_shards * k candidates. That kernel is the engine's only BM25
+scorer; ``search`` and ``search_many`` are thin fronts over it.
 
 Block-max WAND (reference skip lists mem-index/skippy.h + score-threshold
 pruning search/search-utils.c:322-335) runs INSIDE the same kernel: each
@@ -63,15 +65,14 @@ def search(
     with_prox: bool = True,
     wand: bool = False,
 ) -> DataFrame:
-    """Full query: digest -> resolve idf -> shard-local score -> top-k.
+    """Full query: digest -> shard-local score -> top-k.
 
     Returns (doc_id, bm25, match_dim, n_matched_terms, prox, score) ordered
     by (score DESC, doc_id ASC), limited to k. ``wand=True`` turns on the
     in-kernel block-max pruning (identical results).
     """
-    kws = serve.resolve_keywords(spark, index, {"q": (qtext, mode)})
     return serve.shard_search(
-        spark, index, kws, k=k, with_prox=with_prox, prune=wand
+        spark, index, {"q": (qtext, mode)}, k=k, with_prox=with_prox, prune=wand
     ).select("doc_id", "bm25", "match_dim", "n_matched_terms", "prox", "score")
 
 
@@ -98,5 +99,4 @@ def search_many(
     thresholds, each surviving block decoded once for the whole workload
     (plans/serve.py _batch_wand_shard).
     """
-    kws = serve.resolve_keywords(spark, index, queries)
-    return serve.shard_search(spark, index, kws, k=k, with_prox=with_prox, prune=prune)
+    return serve.shard_search(spark, index, queries, k=k, with_prox=with_prox, prune=prune)

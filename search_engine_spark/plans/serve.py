@@ -6,12 +6,17 @@ one shard, blocks.invert_pack_blocks), so a query is
 
   narrow mapInPandas over term-filtered blocks (per shard: decode ->
   vectorized BM25 + proximity + local bounded top-k, all numpy)
-  -> union of n_shards * k rows -> global rank window.
+  -> past one shard: union of n_shards * k rows -> global rank window.
 
 ZERO data shuffles per query: the only movement is each shard's k
-candidate rows. The per-shard kernel is exactly the reference's
-document-at-a-time merge loop (search/postmerge.c + search.c:167-278 +
-proximity.c) vectorized over the whole shard instead of doc-at-a-time:
+candidate rows. An index small enough for ONE serving shard
+(``SERVE_DOCS_PER_SHARD``) runs as one Spark job: that shard holds every
+block of every query term, so the kernel takes each term's df from its
+blocks' posting counts (no term_stats lookup) and its local top-k is the
+global one (no rank window). The per-shard kernel is exactly the
+reference's document-at-a-time merge loop (search/postmerge.c +
+search.c:167-278 + proximity.c) vectorized over the whole shard instead of
+doc-at-a-time:
 
 - per-term score: idf * tf(k1+1)/(tf + k1(1-b+(k1/avgdl)doclen)) with the
   reference quirks (scoring.py);
@@ -36,15 +41,36 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions import codec
 from ..operators import scoring as S
 
 _OUT_SCHEMA = (
-    "qid string, doc_id long, bm25 double, match_dim double, "
+    "qid string, rank int, doc_id long, bm25 double, match_dim double, "
     "n_matched_terms long, prox double, score double"
 )
+
+
+def sql_in(col: str, values) -> Column:
+    """``col IN (values)`` parsed from ONE SQL string; every IN filter of
+    the serving path is made here. ``Column.isin`` costs about two py4j
+    round trips per value: a ``filter`` on 120 terms took a median 81-103
+    ms with ``isin`` against 7-14 ms with this predicate (4-core host,
+    local[4], 15 calls each). Both plan the same ``In``/``InSet``, which
+    the parquet scan takes as a pushed filter. Strings are quoted with
+    ``\\`` and ``'`` escaped; ints are written as ints. No values gives
+    FALSE, never ``IN ()``."""
+    vals = sorted(set(values))
+    if not vals:
+        return F.lit(False)
+
+    def lit(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return str(int(v))
+
+    return F.expr(f"`{col}` IN ({', '.join(map(lit, vals))})")
 
 
 def _merge_union(intervals: np.ndarray) -> np.ndarray:
@@ -428,17 +454,25 @@ def _batch_wand_shard(pdfs: list, qitems, avgdl: float, k: int, with_prox: bool)
 
 
 # Minimum docs a serving shard should cover before another shard pays off:
-# below this the per-shard kernel fixed cost (task schedule + Python worker
-# Arrow round-trip + per-query bookkeeping) outweighs the parallelism.
-# Measured on the 5k-doc sf0.1 index at local[32] (best-of-5): single query
-# 0.76s at 32 shards -> 0.34s at 4; 64-query batch 0.47s -> 0.32s. Indexes
-# past cores*this (=40k docs at local[32]) keep one shard per core, so the
-# 100k-doc bench QPS workload and any at-scale index are untouched.
-SERVE_DOCS_PER_SHARD = 1250
+# an index under 2x this is ONE shard, served as one Spark job. From a docN
+# sweep on a 4-core host (local[4], perfbench pages and queries, median
+# seconds per 64-query batch from one client, and batch-mix QPS of 4
+# closed-loop clients, one shard vs four):
+#   4k docs:  0.60-0.70 s vs 0.62-0.67 s;  242-245 vs  89-105 QPS
+#   8k docs:  0.58-0.70 s vs 0.65-0.68 s;  200-228 vs  90-93 QPS
+#  12k docs:  0.88-0.91 s vs 0.70-0.75 s;  162-168 vs  86 QPS
+#  16k docs:  0.93-0.95 s vs 0.74-0.77 s;  155-160 vs  67-101 QPS
+#  32k docs:  1.45-1.52 s vs 0.92-0.97 s;   96-110 vs  61-64 QPS
+# One client's batch stops gaining from one shard near 8k docs, the
+# crossover this constant sets; 4 clients keep the cores busy with whole
+# batches, so one shard wins for them at every size measured. Past
+# cores * this, one shard per core.
+SERVE_DOCS_PER_SHARD = 4000
 
 
-def serving_coalesce(df: DataFrame, docN: int | None = None) -> DataFrame:
-    """Normalize the block frame to the serving shard count.
+def serving_coalesce(df: DataFrame, docN: int | None = None) -> tuple[DataFrame, int]:
+    """Normalize the block frame to the serving shard count; returns the
+    frame and its number of shards.
 
     The BUILD wants ~4 tasks/core for load balance, but at SERVE time each
     mapInPandas task scores the whole query batch against its shard, so
@@ -452,8 +486,7 @@ def serving_coalesce(df: DataFrame, docN: int | None = None) -> DataFrame:
     pid-keyed bounds agree with the query-time layout. On a real cluster
     the target is the cluster's total cores (defaultParallelism), i.e. one
     serving shard per executor core — scaled DOWN for small indexes so a
-    shard covers at least ``SERVE_DOCS_PER_SHARD`` docs (tiny indexes
-    otherwise pay 32 kernel round-trips to score 5k docs). Override with
+    shard covers at least ``SERVE_DOCS_PER_SHARD`` docs. Override with
     $SPARK_GRAFT_SERVE_SHARDS.
     """
     sc = df.sparkSession.sparkContext
@@ -462,7 +495,7 @@ def serving_coalesce(df: DataFrame, docN: int | None = None) -> DataFrame:
         default = max(1, min(default, int(docN) // SERVE_DOCS_PER_SHARD))
     target = int(os.environ.get("SPARK_GRAFT_SERVE_SHARDS", default))
     n = df.rdd.getNumPartitions()
-    return df.coalesce(target) if n > target else df
+    return (df.coalesce(target), target) if n > target else (df, n)
 
 
 _POS_BITS = 21  # combined sort key: doc_id << 21 | position
@@ -706,18 +739,41 @@ def with_hot_pool(batches, hot_pool, term_set) -> list[pd.DataFrame]:
     return pdfs if h is None else [h, *pdfs]
 
 
+def _block_idf(qitems, pdfs: list[pd.DataFrame], docN: float):
+    """Fill in every keyword's idf from its df, the sum of its blocks' ``n``
+    posting counts. Valid only where ``pdfs`` hold EVERY block of each
+    query term (one serving shard, pool rows included): there that sum is
+    ``term_stats.df``, which is built as the same sum."""
+    df: dict[str, int] = {}
+    for pdf in pdfs:
+        for term, n in pdf.groupby("term")["n"].sum().items():
+            df[term] = df.get(term, 0) + int(n)
+    return [
+        (qid, [(i, t, S.idf(float(df.get(t, 0)), docN)) for i, t, _ in kws], mode)
+        for qid, kws, mode in qitems
+    ]
+
+
 def shard_search(
     spark: SparkSession,
     index,
-    queries: dict[str, tuple[list[tuple[int, str, float]], str]],
+    queries: dict[str, tuple[str, str]],
     k: int = S.RANK_K,
     with_prox: bool = True,
     prune: bool = False,
 ) -> DataFrame:
     """Batch serve over the doc-sharded blocks.
 
-    ``queries``: qid -> ([(kw_idx, term, idf)], mode). Returns
+    ``queries``: qid -> (qtext, mode). Returns
     (qid, rank, doc_id, bm25, match_dim, n_matched_terms, prox, score).
+
+    On ONE serving shard the batch is one Spark job with no exchange: that
+    shard holds every block of every query term, so the kernel takes each
+    term's idf from its blocks (``_block_idf``) and its local top-k, in
+    (score DESC, doc_id ASC) order, is the global top-k with its ranks.
+    Past one shard, idf comes from ``resolve_keywords`` (at most one
+    term_stats lookup per batch) and a rank window merges the n_shards * k
+    candidate rows.
 
     ``prune=True`` routes the WHOLE workload (any mix of or/and) through
     the shard-local batch block-max WAND (_batch_wand_shard): one sweep,
@@ -727,9 +783,21 @@ def shard_search(
     unpruned. Without prune, conjunctive-only workloads still get the
     AND-coverage block skip.
     """
-    all_terms = sorted({t for kws, _ in queries.values() for _, t, _ in kws})
+    serving, n_shards = serving_coalesce(index.doc_blocks, docN=index.docN)
+    one_shard = n_shards <= 1
+    if one_shard:
+        qitems = [
+            (qid, [(i, t, None) for i, t in enumerate(terms)], mode)
+            for qid, (terms, mode) in _digest(queries).items()
+        ]
+    else:
+        qitems = [
+            (qid, kws, mode)
+            for qid, (kws, mode) in resolve_keywords(spark, index, queries).items()
+        ]
+    all_terms = sorted({t for _, kws, _ in qitems for _, t, _ in kws})
     if not all_terms:
-        return spark.createDataFrame([], "qid string, rank int, " + _OUT_SCHEMA[12:])
+        return spark.createDataFrame([], _OUT_SCHEMA)
     # posting-cache pool (plans/cache.attach_posting_cache): hot block rows
     # live in a broadcast of (pool, bounds) carried on the index handle.
     # Assignment is content-addressed (doc-range containment at attach
@@ -739,9 +807,9 @@ def shard_search(
     # raising on attach-to-query split drift instead of mis-scoring.
     hot_pool = getattr(index, "hot_pool_bc", None)
     term_set = set(all_terms)
-    blocks = serving_coalesce(index.doc_blocks, docN=index.docN).filter(F.col("term").isin(all_terms))
+    blocks = serving.filter(sql_in("term", all_terms))
     avgdl = index.avgdl
-    qitems = [(qid, kws, mode) for qid, (kws, mode) in queries.items()]
+    docN = float(index.docN)
     if prune and sum(1 for _, kws, m in qitems if m == "or" and kws) > PRUNE_MAX_OR_BATCH:
         prune = False
 
@@ -750,6 +818,7 @@ def shard_search(
         return pd.DataFrame(
             {
                 "qid": qid,
+                "rank": np.arange(1, len(udoc) + 1, dtype=np.int32),
                 "doc_id": udoc,
                 "bm25": bm25,
                 "match_dim": match_dim,
@@ -760,35 +829,24 @@ def shard_search(
         )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = [pdf for pdf in batches if not pdf.empty]
         if hot_pool is not None:
-            batches = iter(with_hot_pool(batches, hot_pool, term_set))
+            pdfs = with_hot_pool(pdfs, hot_pool, term_set)
+        items = _block_idf(qitems, pdfs, docN) if one_shard else qitems
         if prune:
-            frames = [
-                _frame(qid, res)
-                for qid, res in _batch_wand_shard(
-                    [pdf for pdf in batches if not pdf.empty], qitems, avgdl, k, with_prox
-                )
-            ]
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            return
-        decoded = _decode_partition(batches, want_pos=with_prox, qitems=qitems)
-        if not decoded:
-            return
-        frames = [
-            _frame(qid, res)
-            for qid, res in _batch_score_shard(qitems, decoded, avgdl, k, with_prox)
-        ]
+            results = _batch_wand_shard(pdfs, items, avgdl, k, with_prox)
+        else:
+            decoded = _decode_partition(pdfs, want_pos=with_prox, qitems=items)
+            results = _batch_score_shard(items, decoded, avgdl, k, with_prox)
+        frames = [_frame(qid, res) for qid, res in results]
         if frames:
             yield pd.concat(frames, ignore_index=True)
 
     local = blocks.mapInPandas(kernel, _OUT_SCHEMA)
+    if one_shard:
+        return local
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "bm25", "match_dim", "n_matched_terms", "prox", "score")
-    )
+    return local.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 _DF_CACHE_MAX = 1_000_000  # bounded: a hostile query stream cannot grow driver memory
@@ -814,7 +872,7 @@ def df_lookup(index, terms: list[str]) -> dict[str, float]:
     missing = [t for t in terms if t not in cache]
     if missing:
         rows = (
-            index.term_stats.filter(F.col("term").isin(missing))
+            index.term_stats.filter(sql_in("term", missing))
             .select("term", "df")
             .collect()
         )
@@ -867,9 +925,7 @@ def driver_search(
     bring docN postings) this returns None before any Spark job, and the
     caller ranks the batch on the executors.
     """
-    from .query import digest_query
-
-    digested = {qid: (digest_query(qtext), mode) for qid, (qtext, mode) in queries.items()}
+    digested = _digest(queries)
     terms = sorted({t for ts, _ in digested.values() for t in ts})
     pool = index.hot_postings or {}
     decoded = {t: pool[t] for t in terms if t in pool}
@@ -879,7 +935,7 @@ def driver_search(
         if not sizes or len(cold) * min(sizes) > sum(sizes):
             return None
         rows = (
-            index.doc_blocks.filter(F.col("term").isin(cold)).select(*_BLOB_COLS).collect()
+            index.doc_blocks.filter(sql_in("term", cold)).select(*_BLOB_COLS).collect()
         )
         acc: dict[str, list] = {}
         _decode_frame(pd.DataFrame(rows, columns=_BLOB_COLS), True, acc)
@@ -899,15 +955,20 @@ def driver_search(
     return dict(_batch_score_shard(qitems, decoded, index.avgdl, k, True))
 
 
+def _digest(queries: dict[str, tuple[str, str]]) -> dict[str, tuple[list[str], str]]:
+    """qid -> (qtext, mode)  =>  qid -> (keywords, mode)."""
+    from .query import digest_query
+
+    return {qid: (digest_query(qtext), mode) for qid, (qtext, mode) in queries.items()}
+
+
 def resolve_keywords(spark: SparkSession, index, queries: dict[str, tuple[str, str]]):
     """qid -> (qtext, mode)  =>  qid -> ([(kw_idx, term, idf)], mode).
 
     At most one tiny term_stats lookup for the whole batch (reference
     Q3/Q5), and none at all when every term is already in the index's
     df dictionary cache (``df_lookup``)."""
-    from .query import digest_query
-
-    digested = {qid: (digest_query(qtext), mode) for qid, (qtext, mode) in queries.items()}
+    digested = _digest(queries)
     all_terms = sorted({t for ts, _ in digested.values() for t in ts})
     if not all_terms:
         return {qid: ([], mode) for qid, (_, mode) in digested.items()}

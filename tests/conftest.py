@@ -38,3 +38,10 @@ def pydocs200(corpus200):
     rows = corpus200.select("url", "text").collect()
     rows.sort(key=lambda r: r["url"])
     return [(i + 1, r["text"]) for i, r in enumerate(rows)]
+
+
+@pytest.fixture
+def two_shards(monkeypatch):
+    """Serve over two shards (the fixtures' indexes are one serving shard),
+    so a test runs the multi-shard plan: term_stats idf + rank window."""
+    monkeypatch.setenv("SPARK_GRAFT_SERVE_SHARDS", "2")

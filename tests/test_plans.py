@@ -38,17 +38,77 @@ def test_scan_prunes_columns(spark, index200, tmp_path):
     assert "doc_ids_blob" not in rs and "positions_blob" not in rs
 
 
-def test_shard_serving_has_no_data_shuffle(spark, index200):
-    # doc-sharded serving: the only Exchange in the plan is the final rank
-    # window over n_shards*k candidate rows — posting data never shuffles
-    df = search(spark, index200, f"{W(1)} {W(2)}")
-    plan = _plan(df)
+def _serving_section(df) -> str:
     # inspect only the serving section (the cached doc_blocks' build lineage
     # below InMemoryTableScan re-lists the index-build exchanges)
-    serving_section = plan.split("InMemoryTableScan")[0]
-    assert "MapInPandas" in serving_section
-    assert serving_section.count("Exchange") <= 1  # only the final rank window
-    assert "BroadcastExchange" not in serving_section  # no join at all
+    return _plan(df).split("InMemoryTableScan")[0]
+
+
+def test_shard_serving_has_no_data_shuffle(spark, index200, monkeypatch):
+    # doc-sharded serving: posting data never shuffles. One shard (every
+    # test fixture) has no Exchange at all; past one shard the only one is
+    # the final rank window over n_shards*k candidate rows
+    q = f"{W(1)} {W(2)}"
+    one = _serving_section(search(spark, index200, q))
+    assert "MapInPandas" in one
+    assert one.count("Exchange") == 0
+    monkeypatch.setenv("SPARK_GRAFT_SERVE_SHARDS", "2")
+    two = _serving_section(search(spark, index200, q))
+    assert "MapInPandas" in two
+    assert two.count("Exchange") == 1  # only the final rank window
+    assert "BroadcastExchange" not in two  # no join at all
+
+
+def test_one_shard_batch_is_one_spark_job(spark, index200):
+    """On one serving shard a search_many batch is ONE Spark job: the
+    kernel takes idf from its blocks (no term_stats lookup) and emits the
+    ranks itself (no rank-window exchange)."""
+    from search_engine_spark.plans.query import search_many
+
+    wl = {
+        "a": (f"{W(1)} {W(2)}", "or"),
+        "b": (f"{W(3)} {W(9)}", "and"),
+        "c": (f"{W(7)} zzznewterm", "or"),
+    }
+    sc = spark.sparkContext
+    group = "one-shard-batch"
+    sc.setJobGroup(group, "one-shard search_many")
+    try:
+        df = search_many(spark, index200, wl)
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert "Exchange" not in _serving_section(df)
+
+
+def test_saved_store_serving_pushes_in_filter(spark, index200, tmp_path):
+    # the serving term filter is one parsed SQL IN predicate; off a saved
+    # store it must still reach the parquet scan as In(term, ...)
+    from search_engine_spark.plans.build import load_index, save_index
+
+    save_index(index200, str(tmp_path / "idx"))
+    loaded = load_index(spark, str(tmp_path / "idx"))
+    plan = _plan(search(spark, loaded, f"{W(1)} {W(2)} it's"))
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert any("In(term" in ln for ln in pushed), pushed
+
+
+def test_sql_in_selects_what_isin_selects(spark):
+    from search_engine_spark.plans.serve import sql_in
+
+    hostile = ["it's", "a\\b", "\\'", "100%", "a_b", "検索", "plain", "'", "\\", "x\ny"]
+    frame = spark.createDataFrame(
+        [(t,) for t in hostile + ["a\\\\b", "its", "100x", "axb", "a-b"]], "term string"
+    )
+    for probe in (hostile, hostile[:3], ["its"], ["a_b", "nothere"]):
+        want = sorted(r["term"] for r in frame.where(F.col("term").isin(probe)).collect())
+        got = sorted(r["term"] for r in frame.where(sql_in("term", probe)).collect())
+        assert got == want, probe
+    assert frame.where(sql_in("term", [])).count() == 0
+    ids = spark.range(1, 20).withColumnRenamed("id", "doc_id")
+    assert sorted(r["doc_id"] for r in ids.where(sql_in("doc_id", [3, 5, 19, 40])).collect()) == [3, 5, 19]
 
 
 def test_no_row_at_a_time_python_in_scoring(spark, index200):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.plans.cache import (
@@ -218,7 +219,7 @@ def test_warm_mixed_query_equals_cold(spark, monkeypatch):
         "doc_id long, url string, text string",
     )
     eng = SearchEngine.build(spark, docs, with_math=True, id_col="doc_id")
-    serving = serving_coalesce(eng.index.doc_blocks, docN=eng.index.docN)
+    serving, _ = serving_coalesce(eng.index.doc_blocks, docN=eng.index.docN)
     assert len(partition_doc_ranges(serving)) == 2
     q = "common formula [imath]\\frac{a}{b}[/imath]"
 
@@ -233,3 +234,40 @@ def test_warm_mixed_query_equals_cold(spark, monkeypatch):
     assert eng.index.doc_blocks.filter(F.col("term") == "common").count() == 0
     assert ranked() == cold
     assert ranked(broadcast_budget_bytes=0) == cold
+
+
+def test_one_shard_warm_skips_doc_ranges(spark, index200, monkeypatch):
+    """One serving shard owns every doc id, so ``warm(budget)`` gives it one
+    full run as bounds without the ranges job, and scores like cold
+    serving. A query-time layout with a partition that has no attach-time
+    bounds still raises."""
+    import search_engine_spark.plans.cache as cache_mod
+    from search_engine_spark.engine import SearchEngine
+    from search_engine_spark.plans.query import search, search_many
+
+    def no_ranges(blocks):
+        raise AssertionError("partition_doc_ranges called on one serving shard")
+
+    monkeypatch.setattr(cache_mod, "partition_doc_ranges", no_ranges)
+    sizes = _term_sizes(index200)
+    order = sorted(sizes, key=lambda r: (-r["df"], r["term"]))
+    eng = SearchEngine(spark, index200).warm(sum(r["term_bytes"] for r in sizes) // 3)
+    pool, bounds = eng.index.hot_pool_bc.value
+    assert list(bounds) == [0] and len(bounds[0]) == 1 and list(pool) == [0]
+    hot = order[0]["term"]
+    hot_terms = set(eng.index.hot_postings)
+    cold = " ".join([r["term"] for r in order if r["term"] not in hot_terms][:20])
+    wl = {"a": (f"{hot} {cold}", "or"), "b": (f"{hot} {order[1]['term']}", "and")}
+
+    def ranked(idx):
+        return sorted(
+            (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in search_many(spark, idx, wl).collect()
+        )
+
+    assert ranked(eng.index) == ranked(index200)
+    # the cold view re-planned as two shards at query time: partition 1
+    # has no attach-time bounds
+    monkeypatch.setenv("SPARK_GRAFT_SERVE_SHARDS", "2")
+    with pytest.raises(Exception, match="stale"):
+        search(spark, eng.index, f"{hot} {cold}").collect()

@@ -40,6 +40,13 @@ def test_rank_identity(spark, index200, pydocs200, qid, qtext, mode, wand):
         assert r["score"] == pytest.approx(sc, rel=1e-4), (qid, r["doc_id"])
 
 
+@pytest.mark.parametrize("qid,qtext,mode", QUERIES)
+@pytest.mark.parametrize("wand", [False, True])
+def test_rank_identity_two_shards(spark, index200, pydocs200, two_shards, qid, qtext, mode, wand):
+    # the multi-shard plan: term_stats idf + rank window over both shards
+    test_rank_identity(spark, index200, pydocs200, qid, qtext, mode, wand)
+
+
 def test_digest_matches_reference_semantics():
     assert digest_query("WAAAA DOG dog waaaa") == ["waaaa", "dog"]
     assert digest_query("[imath]x[/imath] a") == ["math_exp", "a"]

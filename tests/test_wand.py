@@ -30,6 +30,11 @@ def test_wand_equals_full(spark, index200, qtext, mode):
         assert a["score"] == pytest.approx(b["score"], rel=1e-12, abs=1e-8)
 
 
+@pytest.mark.parametrize("qtext,mode", CASES)
+def test_wand_equals_full_two_shards(spark, index200, two_shards, qtext, mode):
+    test_wand_equals_full(spark, index200, qtext, mode)
+
+
 def test_wand_actually_prunes(spark, index200):
     """The interval sweep must reject at least one block range on a skewed
     query (otherwise the 'pruning' is a no-op and the test is vacuous)."""
@@ -89,3 +94,11 @@ def test_shard_wand_equals_oracle(spark, index200, pydocs200):
     assert [r["doc_id"] for r in got] == [d for d, _ in exp]
     for r, (_, sc) in zip(got, exp):
         assert r["score"] == pytest.approx(sc, rel=1e-12)
+
+
+def test_batch_wand_equals_unpruned_two_shards(spark, index200, two_shards):
+    test_batch_wand_equals_unpruned(spark, index200)
+
+
+def test_shard_wand_equals_oracle_two_shards(spark, index200, pydocs200, two_shards):
+    test_shard_wand_equals_oracle(spark, index200, pydocs200)
