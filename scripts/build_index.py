@@ -10,8 +10,9 @@ Local smoke:
   python scripts/build_index.py --synthetic 5000 --output /tmp/idx
 
 With --resumable the build runs through the per-partition lineage
-checkpoint path (plans/checkpoint.py): each input partition commits
-independently and a restart skips committed partitions.
+checkpoint path (plans/checkpoint.py): each input partition commits its
+own index segment, a restart skips committed partitions, and the final
+index (<output>/final) is the merge of all segments.
 """
 
 from __future__ import annotations
@@ -50,8 +51,8 @@ def main() -> None:
 
     t0 = time.time()
     if args.resumable:
-        build_partitioned(spark, corpus, args.output, n_parts=args.partitions)
-        idx = finalize_index(spark, args.output, n_parts=args.partitions, block=args.block)
+        build_partitioned(spark, corpus, args.output, n_parts=args.partitions, block=args.block)
+        idx = finalize_index(spark, args.output, n_parts=args.partitions)
         save_index(idx, f"{args.output}/final")
     else:
         idx = build_index(spark, corpus, block=args.block)

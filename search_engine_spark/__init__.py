@@ -12,11 +12,12 @@ Layout
 - ``corpus``             deterministic Common-Crawl-style corpus synthesis + adapters
 - ``functions.tokenizer``  Flex-parity tokenizer (reference txt-seg/lexer.eng.l)
 - ``functions.codec``      delta + varbyte posting codec (reference codec/for.c role)
-- ``operators.postings``   posting rows -> term_stats / collection stats
-- ``operators.blocks``     posting blocks with block-max metadata (mem-index role)
+- ``operators.postings``   salted two-phase term_stats (skew pattern)
+- ``operators.blocks``     the one build kernel (fused invert + block pack) and
+                           posting blocks with block-max metadata (mem-index role)
 - ``plans.build``          end-to-end index build (indexer/ role)
 - ``plans.query``          BM25 top-k query engine w/ WAND pruning (search/ role)
-- ``plans.checkpoint``     per-partition lineage + resumable build
+- ``plans.checkpoint``     per-partition segments + lineage, resumable build
 - ``operators.dedup``      exact / minhash-LSH / simhash / ngram-jaccard / embedding dedup
 - ``operators.similarity`` brute-force + LSH-bucketed ANN over embeddings
 - ``operators.textstats``  language-ID, quality scoring, token counts, fingerprints

@@ -1,33 +1,16 @@
-"""Collection statistics over posting rows (reference I10/Q10).
+"""Explicit two-phase salted per-term aggregation (north-rule skew pattern).
 
-posting rows (term, doc_id, tf) -> term_stats (term, df, cf); doc_meta
-(doc_id, doclen) -> scalar stats (docN, avgdl, len_sum).
-
-Reference semantics:
-- doclen is the *uncapped* token count (Indri's document length,
-  term-index/term-index.cpp:137-165); tf is capped at 2048 at build time
-  (term-index/config.h:1).
-- avgDocLen = mean doclen over all docs (term-index/term-index.cpp:64-79).
-- df per term = number of docs containing it.
-
-Scale notes (10^12 docs):
-- the per-term df aggregation is a combinable count => map-side partial
-  aggregation absorbs the Zipf head; ``term_stats_salted`` demonstrates the
-  explicit two-phase salted pattern required by the north rule for
-  non-combinable per-term state.
+The index build derives term_stats (term, df, cf) and the collection stats
+from packed block metadata (``operators.blocks.term_stats_from_blocks`` /
+``collection_stats_from_blocks``), where df/cf are combinable sums and
+Spark's map-side partial aggregation absorbs the Zipf head. This module
+keeps the explicit salted form for per-term state that does NOT combine
+map-side — the documented skew strategy at 10^12-doc scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def term_stats(postings: DataFrame) -> DataFrame:
-    """(term, df, cf): document frequency + collection frequency."""
-    return postings.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"),
-        F.sum("tf").alias("cf"),
-    )
 
 
 def term_stats_salted(tokens: DataFrame, n_salts: int = 32) -> DataFrame:
@@ -48,20 +31,3 @@ def term_stats_salted(tokens: DataFrame, n_salts: int = 32) -> DataFrame:
         F.sum("_df").alias("df"),  # doc_id partitions are disjoint across salts
         F.sum("_cf").alias("cf"),
     )
-
-
-def collection_stats(doc_meta_df: DataFrame) -> dict:
-    """Scalar stats: docN, avgdl, and the exact integer len_sum (total
-    token count — lets index MERGE recompute the merged avgdl exactly as
-    (len_sum_l + len_sum_r) / docN instead of a float-weighted mean)."""
-    row = doc_meta_df.agg(
-        F.count(F.lit(1)).alias("docN"),
-        F.sum("doclen").alias("len_sum"),
-    ).collect()[0]
-    docN = int(row["docN"])
-    len_sum = int(row["len_sum"] or 0)
-    return {
-        "docN": docN,
-        "avgdl": (len_sum / docN) if docN else 0.0,
-        "len_sum": len_sum,
-    }

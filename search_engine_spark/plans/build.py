@@ -40,7 +40,7 @@ from ..sources.tables import read_table, write_table
 class InvertedIndex:
     """Umbrella handle over the index tables (reference indices/indices.c)."""
 
-    postings: DataFrame  # uncompressed posting rows (term, doc_id, tf, positions, doclen)
+    postings: DataFrame  # lazy unpack_blocks(doc_blocks) view: (term, doc_id, tf, doclen, positions)
     doc_blocks: DataFrame  # packed posting blocks, doc-sharded layout: the one block table
     doc_meta: DataFrame  # (doc_id, doclen)
     term_stats: DataFrame  # (term, df, cf)
@@ -71,8 +71,6 @@ def build_index(
     corpus: DataFrame,
     block: int = DEFAULT_BLOCK,
     id_col: str | None = None,
-    keep_row_postings: bool = True,
-    persist: bool = True,
 ) -> InvertedIndex:
     """Build all index tables from a corpus DataFrame.
 
@@ -84,11 +82,10 @@ def build_index(
     map-side Arrow stage (invert_pack_blocks) whose output also carries the
     doc-meta sentinel rows; docN/avgdl/doc_meta/term_stats all derive from
     the persisted blocks, so the corpus text is read and tokenized exactly
-    once.
-
-    ``persist``: cache the frames consumed by several downstream actions;
-    without it every action re-runs tokenization. On a real cluster this
-    is the Indri-buffer analogue: materialize each boundary once.
+    once. The docs and the blocks are persisted (the Indri-buffer analogue:
+    materialize each boundary once; without it every action re-runs
+    tokenization); a caller done with the handle unpersists ``doc_blocks``
+    and ``docstore``.
     """
     from ..operators.blocks import (
         collection_stats_from_blocks,
@@ -103,26 +100,23 @@ def build_index(
     else:
         docs = corpus.withColumn("doc_id", F.col(id_col).cast("long"))
 
-    docs = docs.select("doc_id", "url", "text")
-    if persist:
-        # feeds the fused pack AND the docstore
-        docs = docs.persist()
+    # feeds the fused pack AND is the docstore: the handle holds the
+    # persisted frame itself, so unpersisting ``docstore`` frees it
+    docs = docs.select("doc_id", "url", "text").persist()
     # docIDs from url-range partitioning leave the corpus doc-range
     # partitioned -> the serving layout needs no exchange at all
     doc_blocks = invert_pack_blocks(
         docs, block=block, assume_doc_partitioned=(id_col is None)
-    )
-    if persist:
-        doc_blocks = doc_blocks.persist()
+    ).persist()
     # the one action of the build: materializes the fused scan into the
     # persisted blocks and reads docN/avgdl off the sentinel metadata
     stats = collection_stats_from_blocks(doc_blocks)
     return InvertedIndex(
-        postings=unpack_blocks(doc_blocks) if keep_row_postings else None,
+        postings=unpack_blocks(doc_blocks),
         doc_blocks=doc_blocks,
         doc_meta=doc_meta_from_blocks(doc_blocks),
         term_stats=term_stats_from_blocks(doc_blocks),
-        docstore=docs.select("doc_id", "url", "text"),
+        docstore=docs,
         docN=stats["docN"],
         avgdl=stats["avgdl"],
         len_sum=stats["len_sum"],
@@ -153,6 +147,23 @@ def save_index(index: InvertedIndex, path: str) -> None:
         [(index.docN, float(index.avgdl), int(len_sum))],
         "docN long, avgdl double, len_sum long",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+
+
+def save_segment(
+    spark: SparkSession, docs: DataFrame, path: str, block: int = DEFAULT_BLOCK
+) -> InvertedIndex:
+    """One segment of a resumable or streamed build: ``build_index`` over
+    ``docs`` (which carry their own ``doc_id``), ``save_index`` at ``path``,
+    then free the build's caches (``doc_blocks`` and ``docstore``). Saved
+    segments over disjoint ids fold into one index with ``merge_indexes``
+    over ``load_index``. Returns the (released) handle for its scalars."""
+    seg = build_index(spark, docs, block=block, id_col="doc_id")
+    try:
+        save_index(seg, path)
+    finally:
+        seg.doc_blocks.unpersist()
+        seg.docstore.unpersist()
+    return seg
 
 
 _SIZE_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
@@ -205,7 +216,7 @@ def _effective_max_split_bytes(spark: SparkSession, file_sizes: list[int]) -> in
     return min(max_pb, max(open_cost, bytes_per_core))
 
 
-def load_index(spark: SparkSession, path: str, with_row_postings: bool = False) -> InvertedIndex:
+def load_index(spark: SparkSession, path: str) -> InvertedIndex:
     from ..operators.blocks import unpack_blocks
 
     import os
@@ -259,7 +270,7 @@ def load_index(spark: SparkSession, path: str, with_row_postings: bool = False) 
             doc_blocks = doc_blocks.repartition(n, "_shard").drop("_shard")
     len_sum = int(srow["len_sum"]) if "len_sum" in srow.__fields__ else -1
     return InvertedIndex(
-        postings=unpack_blocks(doc_blocks) if with_row_postings else None,
+        postings=unpack_blocks(doc_blocks),
         doc_blocks=doc_blocks,
         doc_meta=read_table(spark, f"{path}/doc_meta"),
         term_stats=read_table(spark, f"{path}/term_stats"),
@@ -273,8 +284,6 @@ def load_index(spark: SparkSession, path: str, with_row_postings: bool = False) 
 def merge_indexes(
     left: InvertedIndex,
     right: InvertedIndex,
-    block: int = DEFAULT_BLOCK,
-    persist: bool = True,
     validate: bool = True,
 ) -> InvertedIndex:
     """Merge two indexes built over DISJOINT docID sets — METADATA-ONLY.

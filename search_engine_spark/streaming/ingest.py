@@ -3,15 +3,19 @@
 The reference indexes in restartable batch (indexer/index.c resume from
 docN) and serves online; it has no streaming operator. At web scale the
 natural Spark extension is a streaming ingest of newly crawled pages into
-posting deltas — same inverted-frame pass, driven by a file/Kafka source
-with exactly-once foreachBatch sinks. Periodic compaction (the reference's
-``repo.merge()``, term-index/term-index.cpp:94-101) merges deltas into the
-main posting table offline.
+index SEGMENTS — each micro-batch is one ``plans.build.save_segment`` (the
+same fused ``build_index`` + ``save_index`` as a batch build), driven by a
+file/Kafka source with exactly-once foreachBatch sinks. The segments fold
+into one servable index exactly as the resumable build's do
+(``plans.checkpoint.finalize_index``): ``reduce(merge_indexes,
+map(load_index, segment_dirs))`` — the reference's ``repo.merge()``
+(term-index/term-index.cpp:94-101) as a metadata-only union.
 
 Streaming docIDs cannot be row_number() over a closed corpus; we use
 ``xxhash64(url)`` — deterministic, cluster-size independent, collision
-probability ~n^2/2^64 (documented trade-off vs the batch path's dense ids;
-a production system would reconcile ids at compaction).
+probability ~n^2/2^64 (documented trade-off vs the batch path's dense ids).
+A merge only needs disjoint ids, and ``merge_indexes(validate=True)`` (the
+default) rejects a fold whose segments collide.
 """
 
 from __future__ import annotations
@@ -19,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..corpus import CORPUS_SCHEMA
-from ..functions.tokenizer import inverted_frame
+from ..plans.build import save_segment
 
 
 def stream_index_build(
@@ -30,22 +34,22 @@ def stream_index_build(
     available_now: bool = True,
 ):
     """File-source streaming build: new parquet files under ``input_dir``
-    become posting-delta writes under ``out_dir``/postings. Returns the
+    become index segments ``out_dir``/segments/batch=<batch id>, each a
+    ``save_index`` directory that ``load_index`` reads. Returns the
     terminated StreamingQuery (availableNow) or the running handle.
 
-    The sink is idempotent per micro-batch: each batch writes to a
-    batch-id-named subdirectory with overwrite, so a foreachBatch retry
+    The sink is idempotent per micro-batch: each batch writes its segment
+    to a batch-id-named directory with overwrite, so a foreachBatch retry
     after a partial failure replaces its own output instead of duplicating
     rows — this is what makes the checkpointed pipeline exactly-once
     end-to-end (at-least-once execution x idempotent sink)."""
     src = spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.withColumn("doc_id", F.xxhash64("url"))
-        inv = inverted_frame(docs)
-        inv.write.mode("overwrite").parquet(f"{out_dir}/postings/batch={batch_id}")
-        docs.select("doc_id", "url", "text").write.mode("overwrite").parquet(
-            f"{out_dir}/docs/batch={batch_id}"
+        save_segment(
+            spark,
+            batch_df.withColumn("doc_id", F.xxhash64("url")),
+            f"{out_dir}/segments/batch={batch_id}",
         )
 
     writer = (

@@ -67,3 +67,16 @@ def test_lineage_manifest_schema(spark, corpus200, tmp_path):
     assert all(r["status"] == "done" for r in rows)
     assert sum(r["n_docs"] for r in rows) == 200
     assert all(r["n_postings"] > 0 and r["positions_bytes"] > 0 and r["docs_per_sec"] > 0 for r in rows)
+
+
+def test_partitioned_build_frees_its_caches(spark, corpus200, tmp_path):
+    """Every segment build unpersists its docs + blocks, on the injected
+    failure path too, and the partition-tagged corpus cache goes with it."""
+    d = str(tmp_path / "c")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_partitioned(spark, corpus200, d, n_parts=2, fail_after=1)
+    assert persistent().size() == before
+    assert build_partitioned(spark, corpus200, d, n_parts=2) == {1}
+    assert persistent().size() == before

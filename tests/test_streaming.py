@@ -1,32 +1,74 @@
-"""Structured Streaming: incremental ingest produces the same postings as
-batch; watermarked window agg matches the batch equivalent."""
+"""Structured Streaming: incremental ingest writes index segments that load,
+fold and serve exactly like a batch build; watermarked window agg matches
+the batch equivalent."""
 
 from __future__ import annotations
+
+import glob
+from functools import reduce
 
 import pytest
 from pyspark.sql import functions as F
 
-from search_engine_spark.functions.tokenizer import inverted_frame
+from search_engine_spark.corpus import vocab_word
+from search_engine_spark.oracle import naive_search
+from search_engine_spark.plans.build import build_index, load_index, merge_indexes
+from search_engine_spark.plans.query import search
 from search_engine_spark.streaming.ingest import stream_index_build, windowed_event_counts
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _postings(idx):
+    rows = idx.postings.select("doc_id", "term", "tf", "doclen").collect()
+    return sorted((r["doc_id"], r["term"], r["tf"], r["doclen"]) for r in rows)
 
 
 def test_stream_build_matches_batch(spark, corpus200, tmp_path):
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    corpus200.write.parquet(inp)
-
+    # two arrivals -> two micro-batches -> two segments to fold
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    corpus200.where(half == 0).write.parquet(inp)
+    before = _persistent_rdds(spark)
     stream_index_build(spark, inp, out, ckpt)
-    got = spark.read.parquet(f"{out}/postings")
+    assert _persistent_rdds(spark) == before  # each batch frees its build caches
+    corpus200.where(half == 1).write.mode("append").parquet(inp)
+    stream_index_build(spark, inp, out, ckpt)
 
-    batch = inverted_frame(corpus200.withColumn("doc_id", F.xxhash64("url")))
-    a = sorted((r["doc_id"], r["term"], r["tf"]) for r in got.select("doc_id", "term", "tf").collect())
-    b = sorted((r["doc_id"], r["term"], r["tf"]) for r in batch.select("doc_id", "term", "tf").collect())
-    assert a == b
+    def fold():
+        seg_dirs = sorted(glob.glob(f"{out}/segments/batch=*"))
+        return seg_dirs, reduce(merge_indexes, (load_index(spark, d) for d in seg_dirs))
+
+    seg_dirs, got = fold()
+    assert len(seg_dirs) == 2
+
+    ided = corpus200.withColumn("doc_id", F.xxhash64("url"))
+    batch = build_index(spark, ided, id_col="doc_id")
+    a = _postings(got)
+    assert a == _postings(batch)
+    assert (got.docN, got.len_sum) == (batch.docN, batch.len_sum)
+    batch.doc_blocks.unpersist()
+    batch.docstore.unpersist()
+
+    # the folded segments serve rank-identically to the reference scorer
+    # over the same docs and xxhash64 ids
+    pydocs = [(r["doc_id"], r["text"]) for r in ided.select("doc_id", "text").collect()]
+    q = f"{vocab_word(1)} {vocab_word(2)} {vocab_word(3)}"
+    hits = search(spark, got, q).collect()
+    exp = naive_search(pydocs, q)
+    assert hits and [r["doc_id"] for r in hits] == [d for d, _ in exp]
+    for r, (_, sc) in zip(hits, exp):
+        assert r["score"] == pytest.approx(sc, rel=1e-12), r["doc_id"]
 
     # restart with the same checkpoint: no reprocessing, no duplicate rows
     stream_index_build(spark, inp, out, ckpt)
-    assert spark.read.parquet(f"{out}/postings").count() == len(a)
+    seg_dirs_again, again = fold()
+    assert seg_dirs_again == seg_dirs
+    assert again.postings.count() == len(a)
 
 
 def test_windowed_event_counts_matches_batch(spark, tmp_path):
