@@ -8,7 +8,8 @@ snippets), explicit skew handling for web-scale (10^12-doc) term distributions.
 
 Layout
 ------
-- ``session``            SparkSession builder tuned for the engine
+- ``session``            SparkSession builder tuned for the engine, and the
+                           Python-worker settings (zip-importer stamp)
 - ``corpus``             deterministic Common-Crawl-style corpus synthesis + adapters
 - ``functions.tokenizer``  Flex-parity tokenizer (reference txt-seg/lexer.eng.l)
 - ``functions.codec``      delta + varbyte posting codec (reference codec/for.c role)
@@ -25,3 +26,7 @@ Layout
 """
 
 __version__ = "0.1.0"
+
+from .session import install_zip_stamp
+
+install_zip_stamp()

@@ -275,21 +275,49 @@ def _binary_col_bytes(col) -> np.ndarray:
     return np.frombuffer(bufs[2], dtype=np.uint8)[off[0] : off[-1]]
 
 
+def decode_blocks(n, doc_ids, tfs, doclens, positions=None):
+    """A batch of blocks decoded as ONE varbyte stream per column.
+
+    Varbyte is self-delimiting, so the blocks' blobs, concatenated in row
+    order, decode in a single ``codec.vb_decode`` call per column; docIDs
+    then resolve with a segmented cumsum (the delta chain restarts at each
+    block's first entry, which carries the absolute id). ``n``: entries per
+    block; the other arguments: the concatenated blobs as uint8 arrays.
+    Returns flat int64 (doc_id, tf, doclen, positions) in row order;
+    positions is empty when not given.
+    """
+    n = np.asarray(n, dtype=np.int64)
+    d = codec.vb_decode(doc_ids).view(np.int64)
+    tf = codec.vb_decode(tfs).view(np.int64)
+    dl = codec.vb_decode(doclens).view(np.int64)
+    pos = (
+        codec.vb_decode(positions).view(np.int64)
+        if positions is not None
+        else np.empty(0, dtype=np.int64)
+    )
+    if len(d) == 0:
+        return d, tf, dl, pos
+    starts = np.zeros(len(n), dtype=np.int64)
+    np.cumsum(n[:-1], out=starts[1:])
+    # clamped: an empty block may start past the end; its base repeats 0 times
+    at = np.minimum(starts, len(d) - 1)
+    csum = np.cumsum(d)
+    base = csum[at] - d[at]
+    return csum - np.repeat(base, n), tf, dl, pos
+
+
 def unpack_blocks(blocks: DataFrame, with_positions: bool = True) -> DataFrame:
     """Packed block rows -> (term, doc_id, tf, doclen, positions).
 
     Doc-meta sentinel rows (fused-build side-channel) are filtered out —
     they carry no postings.
 
-    Fully vectorized mapInArrow decode (guide §4.2): because varbyte is
-    self-delimiting, the batch's blobs concatenate into ONE stream per
-    column (straight from the Arrow binary buffers, no per-row slicing) and
-    each stream decodes in a single ``codec.vb_decode`` call; docIDs then
-    resolve with a segmented cumsum (delta reset at block starts), and the
-    positions column is assembled as an Arrow ListArray directly from the
-    flat value buffer + tf offsets. The former per-block ``itertuples``
-    loop paid ~6 Python/numpy calls per block row — the whole decode is
-    now ~a dozen array ops per Arrow batch regardless of block count.
+    Fully vectorized mapInArrow decode (guide §4.2): each batch goes through
+    ``decode_blocks`` as ONE stream per column (straight from the Arrow
+    binary buffers, no per-row slicing), and the positions column is
+    assembled as an Arrow ListArray directly from the flat value buffer +
+    tf offsets: ~a dozen array ops per Arrow batch regardless of block
+    count, where a per-block loop pays ~6 Python/numpy calls per row.
     """
     import pyarrow as pa
 
@@ -318,23 +346,14 @@ def unpack_blocks(blocks: DataFrame, with_positions: bool = True) -> DataFrame:
             # term: dictionary-encode once, repeat indices per block entry
             tdict = pc.dictionary_encode(cols["term"])
             tidx = np.repeat(tdict.indices.to_numpy().astype(np.int64), n)
-            # docIDs: one decode of the concatenated delta streams, then a
-            # segmented cumsum (block starts carry the absolute id)
-            d = codec.vb_decode(_binary_col_bytes(cols["doc_ids_blob"])).astype(np.int64)
-            starts = np.zeros(len(n), dtype=np.int64)
-            np.cumsum(n[:-1], out=starts[1:])
-            seg = np.repeat(np.arange(len(n), dtype=np.int64), n)
-            csum = np.cumsum(d)
-            base = csum[starts] - d[starts]
-            doc_id = csum - base[seg]
-            tf = codec.vb_decode(_binary_col_bytes(cols["tfs_blob"])).astype(np.int32)
-            dl = codec.vb_decode(_binary_col_bytes(cols["doclens_blob"])).astype(np.int32)
-            if with_positions:
-                pos_vals = codec.vb_decode(
-                    _binary_col_bytes(cols["positions_blob"])
-                ).astype(np.int32)
-            else:
-                pos_vals = np.empty(0, dtype=np.int32)
+            doc_id, tf, dl, pos_vals = decode_blocks(
+                n,
+                _binary_col_bytes(cols["doc_ids_blob"]),
+                _binary_col_bytes(cols["tfs_blob"]),
+                _binary_col_bytes(cols["doclens_blob"]),
+                _binary_col_bytes(cols["positions_blob"]) if with_positions else None,
+            )
+            tf, dl, pos_vals = (a.astype(np.int32) for a in (tf, dl, pos_vals))
             # int64 offsets, emitted in slices so each batch's position
             # VALUES stay < 2^30 (an Arrow list<int32> offset vector is
             # int32; one huge input batch of max-tf blocks could overflow a

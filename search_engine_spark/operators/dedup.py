@@ -116,6 +116,15 @@ _PAIR_EXPR = (
 )
 
 
+def _doc_ids(col):
+    """A kernel batch's doc_id column as numpy. A null doc_id is rejected
+    by name: pyarrow's zero-copy ``to_numpy`` would otherwise fail inside
+    the task with an opaque ``ArrowInvalid``."""
+    if col.null_count:
+        raise ValueError(f"doc_id column has {col.null_count} null value(s)")
+    return col.to_numpy()
+
+
 def shingle_frame(docs: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, shingle) — distinct k-token shingles per doc."""
     return docs.select(
@@ -152,7 +161,7 @@ def shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy()
+            ids = _doc_ids(batch.column(0))
             texts = batch.column(1).to_pylist()
             out: list[list[str]] = []
             for t in texts:
@@ -344,7 +353,7 @@ def minhash_signatures(docs: DataFrame, k: int = 3, n_hashes: int = 8) -> DataFr
             [("doc_id", pa.int64())] + [(f"h{s}", pa.string()) for s in range(n_hashes)]
         )
         for batch in batches:
-            ids = batch.column(0).to_numpy()
+            ids = _doc_ids(batch.column(0))
             texts = batch.column(1).to_pylist()
             outs: list[list] = [[] for _ in range(n_hashes)]
             for t in texts:

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import os
 import time
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -121,12 +121,22 @@ def finalize_index(spark: SparkSession, path: str, n_parts: int = 8) -> Inverted
 
     Reads ONLY the manifest's committed segment directories (a wildcard
     glob would silently fold stale segments left at the same path by an
-    earlier build with a different n_parts). ``merge_indexes`` keeps its
-    docID-disjointness probe on."""
+    earlier build with a different n_parts).
+
+    DocID disjointness is checked ONCE on the folded index: its distinct
+    doc ids against the summed docN. A pairwise ``merge_indexes`` probe per
+    fold step re-scans the growing left side, O(k^2) in the segment count
+    (8 segments of a 5000-doc build, local[4], two runs: 2.95-2.97 s for
+    the validated fold against 0.39-0.43 s unvalidated plus 0.38-0.43 s for
+    the one check)."""
     done = committed_partitions(spark, path)
     if len(done) != n_parts:
         missing = sorted(set(range(n_parts)) - done)
         raise RuntimeError(f"cannot finalize: partitions missing {missing}")
-    return reduce(
-        merge_indexes, (load_index(spark, _segment_path(path, pid)) for pid in range(n_parts))
+    index = reduce(
+        partial(merge_indexes, validate=False),
+        (load_index(spark, _segment_path(path, pid)) for pid in range(n_parts)),
     )
+    if index.doc_meta.select("doc_id").distinct().count() != index.docN:
+        raise ValueError("finalize_index: segment docID sets overlap")
+    return index

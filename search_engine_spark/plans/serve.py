@@ -38,13 +38,14 @@ from __future__ import annotations
 import math
 import os
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ..functions import codec
 from ..operators import scoring as S
+from ..operators.blocks import decode_blocks
 
 _OUT_SCHEMA = (
     "qid string, rank int, doc_id long, bm25 double, match_dim double, "
@@ -175,28 +176,81 @@ def _conjunctive_skip_mask(pdfs: list[pd.DataFrame], qitems) -> dict[str, np.nda
     return _and_needed(_term_cover(pdfs), qitems)
 
 
-def _decode_frame(pdf: pd.DataFrame, want_pos: bool, acc: dict) -> None:
-    """Varbyte-decode one frame of block rows into the per-term accumulator."""
-    for row in pdf.itertuples(index=False):
-        ids = codec.decode_ids(row.doc_ids_blob).astype(np.int64)
-        tfs = codec.vb_decode(row.tfs_blob).astype(np.int64)
-        dls = codec.vb_decode(row.doclens_blob).astype(np.int64)
-        pos = (
-            codec.vb_decode(row.positions_blob).astype(np.int64)
-            if want_pos
-            else np.empty(0, dtype=np.int64)
-        )
-        acc.setdefault(row.term, []).append((ids, tfs, dls, pos))
+class _Rows(NamedTuple):
+    """Decoded block rows: per row its term, entry count and position
+    count; the entry and position arrays flat, in row order."""
+
+    terms: np.ndarray
+    n: np.ndarray
+    npos: np.ndarray
+    ids: np.ndarray
+    tfs: np.ndarray
+    dls: np.ndarray
+    pos: np.ndarray | None
 
 
-def _finish_decode(acc: dict, want_pos: bool) -> dict:
+def _decode_rows(pdfs: list[pd.DataFrame], want_pos: bool) -> _Rows:
+    """Every block row of ``pdfs`` (frames with ``_BLOB_COLS``), decoded as
+    ONE varbyte stream per column (blocks.decode_blocks) instead of four
+    decode calls per row."""
+
+    def col(name: str) -> list:
+        return [v for pdf in pdfs for v in pdf[name].tolist()]
+
+    def stream(name: str) -> np.ndarray:
+        return np.frombuffer(b"".join(col(name)), dtype=np.uint8)
+
+    n = np.array(col("n"), dtype=np.int64)
+    terms = np.array(col("term"), dtype=object)
+    ids, tfs, dls, pos = decode_blocks(
+        n,
+        stream("doc_ids_blob"),
+        stream("tfs_blob"),
+        stream("doclens_blob"),
+        stream("positions_blob") if want_pos else None,
+    )
+    npos = np.zeros(len(n), dtype=np.int64)
+    if want_pos:
+        ctf = np.zeros(len(tfs) + 1, dtype=np.int64)
+        np.cumsum(tfs, out=ctf[1:])
+        ends = np.cumsum(n)
+        npos = ctf[ends] - ctf[ends - n]
+    return _Rows(terms, n, npos, ids, tfs, dls, pos if want_pos else None)
+
+
+def _segments(lens: np.ndarray, order: np.ndarray) -> np.ndarray:
+    """Flat indices of the segments ``order`` (segment ``i`` holds ``lens[i]``
+    consecutive items), concatenated in that order."""
+    starts = np.cumsum(lens) - lens
+    take = lens[order]
+    offs = np.cumsum(take) - take
+    return np.repeat(starts[order] - offs, take) + np.arange(int(take.sum()))
+
+
+def _by_term(rows: _Rows, sel: np.ndarray | None = None) -> dict:
+    """term -> (ids, tfs, dls, pos) over the rows ``sel`` (default: all),
+    each term's rows concatenated in row order."""
+    if sel is None:
+        sel = np.arange(len(rows.n))
+    if not len(sel):
+        return {}
+    codes, uniq = pd.factorize(rows.terms[sel])
+    order = sel[np.argsort(codes, kind="stable")]
+    ent = _segments(rows.n, order)
+    ids, tfs, dls = rows.ids[ent], rows.tfs[ent], rows.dls[ent]
+    pos = rows.pos[_segments(rows.npos, order)] if rows.pos is not None else None
+    # each term's rows are contiguous in ``order``: its bounds in the
+    # gathered entry / position arrays
+    row_end = np.cumsum(np.bincount(codes))
+    e_end = np.cumsum(rows.n[order])[row_end - 1]
+    p_end = np.cumsum(rows.npos[order])[row_end - 1]
     out = {}
-    for term, chunks in acc.items():
-        ids = np.concatenate([c[0] for c in chunks])
-        tfs = np.concatenate([c[1] for c in chunks])
-        dls = np.concatenate([c[2] for c in chunks])
-        pos = np.concatenate([c[3] for c in chunks]) if want_pos else None
-        out[term] = (ids, tfs, dls, pos)
+    e0 = p0 = 0
+    for term, e1, p1 in zip(uniq, e_end.tolist(), p_end.tolist()):
+        out[term] = (
+            ids[e0:e1], tfs[e0:e1], dls[e0:e1], pos[p0:p1] if pos is not None else None
+        )
+        e0, p0 = e1, p1
     return out
 
 
@@ -207,9 +261,9 @@ def _decode_partition(batches: Iterator[pd.DataFrame], want_pos: bool, qitems=No
     intersection are skipped before decode (never varbyte-decoded)."""
     pdfs = [pdf for pdf in batches if not pdf.empty]
     skip = _conjunctive_skip_mask(pdfs, qitems) if qitems else None
-    acc: dict[str, list] = {}
-    for pdf in pdfs:
-        if skip is not None:
+    if skip is not None:
+        kept = []
+        for pdf in pdfs:
             first = pdf["first_doc_id"].to_numpy()
             last = pdf["last_doc_id"].to_numpy()
             mask = np.zeros(len(pdf), dtype=bool)
@@ -218,11 +272,9 @@ def _decode_partition(batches: Iterator[pd.DataFrame], want_pos: bool, qitems=No
                 if allowed is None or len(allowed) == 0:
                     continue
                 mask[grp_idx] = _overlaps(first[grp_idx], last[grp_idx], allowed)
-            pdf = pdf[mask]
-            if pdf.empty:
-                continue
-        _decode_frame(pdf, want_pos, acc)
-    return _finish_decode(acc, want_pos)
+            kept.append(pdf[mask])
+        pdfs = kept
+    return _by_term(_decode_rows(pdfs, want_pos))
 
 
 def _filter_decoded(decoded: dict, ranges: np.ndarray, terms=None) -> dict:
@@ -295,40 +347,37 @@ def _interval_sweep(
 
 
 class _RowDecoder:
-    """Per-block varbyte decode cache: every block row decodes AT MOST once
-    per shard pass, no matter how many queries' masks select it."""
+    """Per-block decode cache: every block row decodes AT MOST once per
+    shard pass, no matter how many queries' masks select it; the rows of
+    one ``decode`` call decode as one stream per column."""
 
     def __init__(self, meta: pd.DataFrame, want_pos: bool):
         self.want_pos = want_pos
-        self._terms = meta["term"].tolist()
-        self._ids_b = meta["doc_ids_blob"].tolist()
-        self._tfs_b = meta["tfs_blob"].tolist()
-        self._dls_b = meta["doclens_blob"].tolist()
-        self._pos_b = meta["positions_blob"].tolist() if want_pos else None
-        self._cache: dict[int, tuple] = {}
+        self._meta = meta
+        self._slot = np.full(len(meta), -1, dtype=np.int64)  # row -> decoded row
+        self._rows: _Rows | None = None
 
     def decode(self, mask: np.ndarray) -> None:
-        for i in np.flatnonzero(mask):
-            i = int(i)
-            if i in self._cache:
-                continue
-            ids = codec.decode_ids(self._ids_b[i]).astype(np.int64)
-            tfs = codec.vb_decode(self._tfs_b[i]).astype(np.int64)
-            dls = codec.vb_decode(self._dls_b[i]).astype(np.int64)
-            pos = (
-                codec.vb_decode(self._pos_b[i]).astype(np.int64)
-                if self.want_pos
-                else np.empty(0, dtype=np.int64)
+        todo = np.flatnonzero(mask & (self._slot < 0))
+        if not len(todo):
+            return
+        new = _decode_rows([self._meta.take(todo)], self.want_pos)
+        done = 0 if self._rows is None else len(self._rows.n)
+        self._slot[todo] = done + np.arange(len(todo))
+        if self._rows is not None:
+            new = _Rows(
+                *(
+                    None if have is None else np.concatenate([have, add])
+                    for have, add in zip(self._rows, new)
+                )
             )
-            self._cache[i] = (self._terms[i], ids, tfs, dls, pos)
+        self._rows = new
 
     def gather(self, mask: np.ndarray) -> dict:
         """Assemble the per-term decoded dict from cached rows under mask."""
-        acc: dict[str, list] = {}
-        for i in np.flatnonzero(mask):
-            term, ids, tfs, dls, pos = self._cache[int(i)]
-            acc.setdefault(term, []).append((ids, tfs, dls, pos))
-        return _finish_decode(acc, self.want_pos)
+        if self._rows is None:
+            return {}
+        return _by_term(self._rows, self._slot[np.flatnonzero(mask)])
 
 
 def _batch_wand_shard(pdfs: list, qitems, avgdl: float, k: int, with_prox: bool):
@@ -884,16 +933,15 @@ def df_lookup(index, terms: list[str]) -> dict[str, float]:
     return {t: cache[t] for t in terms}
 
 
-_BLOB_COLS = ["term", "doc_ids_blob", "tfs_blob", "doclens_blob", "positions_blob"]
+_BLOB_COLS = ["term", "n", "doc_ids_blob", "tfs_blob", "doclens_blob", "positions_blob"]
 
 
 def decode_pool(hot_rows: pd.DataFrame | None) -> dict:
     """The posting-cache pool's block rows, decoded once:
     term -> (ids, tfs, dls, pos), positions included."""
-    acc: dict[str, list] = {}
-    if hot_rows is not None and len(hot_rows):
-        _decode_frame(hot_rows[_BLOB_COLS], True, acc)
-    return _finish_decode(acc, True)
+    if hot_rows is None:
+        return {}
+    return _by_term(_decode_rows([hot_rows], True))
 
 
 def driver_search(
@@ -937,9 +985,9 @@ def driver_search(
         rows = (
             index.doc_blocks.filter(sql_in("term", cold)).select(*_BLOB_COLS).collect()
         )
-        acc: dict[str, list] = {}
-        _decode_frame(pd.DataFrame(rows, columns=_BLOB_COLS), True, acc)
-        decoded.update(_finish_decode(acc, True))
+        decoded.update(
+            _by_term(_decode_rows([pd.DataFrame(rows, columns=_BLOB_COLS)], True))
+        )
     docN = float(index.docN)
     qitems = [
         (

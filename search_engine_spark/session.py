@@ -8,8 +8,49 @@ local[] master + small shuffle partition counts are test-only conveniences.
 from __future__ import annotations
 
 import os
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def install_zip_stamp() -> None:
+    """Make a zip importer re-read its archive's directory only when the
+    archive changed. Idempotent; the package ``__init__`` calls it, so every
+    Python worker installs it when it unpickles its first engine kernel.
+
+    pyspark calls ``importlib.invalidate_caches()`` at the start of EVERY
+    task (worker_util.setup_spark_files), and CPython 3.11's
+    ``zipimporter.invalidate_caches`` eagerly re-reads the whole central
+    directory of every cached zip importer. A worker holds 16 of them: two
+    on the spark-core jar (5359 entries, ~46 ms per re-read), most of the
+    rest on pyspark.zip (1328 entries, ~11 ms) and one on py4j's zip, which
+    added up to 194-239 ms per task on a reused worker (4-core host). A
+    one-task mapInPandas job took 0.32 s against 0.08-0.09 s for a JVM-only
+    job, and 0.15 s with the stamp. With it each importer re-reads at most
+    once per process while its archive is unchanged.
+
+    The stamp is the archive's (st_mtime_ns, st_size), taken BEFORE the
+    re-read it records: a rewrite that lands during or after the read
+    changes the stamp, so the next call re-reads (a re-shipped --py-files
+    zip still imports its new modules). A failed stat leaves no stamp and
+    always re-reads, as before.
+    """
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "_stamped", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_archive_stamp", None):
+            reread(self)
+            self._archive_stamp = stamp
+
+    invalidate_caches._stamped = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def get_spark(

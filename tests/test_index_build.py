@@ -107,6 +107,57 @@ def test_term_stats_df_is_posting_count(index200):
     assert len(df) > 100 and counts == df
 
 
+def test_serving_decode_matches_unpack_blocks(index200):
+    """The serving decode (one stream per column over a whole batch of
+    block rows) gives every term the postings ``unpack_blocks`` gives it,
+    with the term's blocks split across frames and out of order, with
+    positions off, and through the WAND row cache's two decode calls."""
+    from search_engine_spark.operators.blocks import DOC_META_TERM
+    from search_engine_spark.plans.serve import _by_term, _decode_rows, _RowDecoder
+
+    blocks = index200.doc_blocks.filter(F.col("term") != DOC_META_TERM).toPandas()
+    assert blocks["term"].value_counts().max() > 1  # multi-block terms
+    rows = unpack_blocks(index200.doc_blocks).toPandas()
+    expect = {
+        t: (
+            g["doc_id"].to_numpy(),
+            g["tf"].to_numpy(),
+            g["doclen"].to_numpy(),
+            np.concatenate([np.asarray(p, dtype=np.int64) for p in g["positions"]]),
+        )
+        for t, g in rows.sort_values(["term", "doc_id"]).groupby("term")
+    }
+
+    def check(decoded, with_pos=True):
+        assert set(decoded) == set(expect)
+        for t, (ids, tfs, dls, pos) in decoded.items():
+            o = np.argsort(ids, kind="stable")
+            e_ids, e_tfs, e_dls, e_pos = expect[t]
+            assert np.array_equal(ids[o], e_ids)
+            assert np.array_equal(tfs[o], e_tfs) and np.array_equal(dls[o], e_dls)
+            if with_pos:
+                per_doc = np.split(pos, np.cumsum(tfs)[:-1])
+                assert np.array_equal(np.concatenate([per_doc[i] for i in o]), e_pos)
+            else:
+                assert pos is None
+
+    rev = blocks.iloc[::-1]
+    frames = [rev.iloc[::2], rev.iloc[1::2]]
+    check(_by_term(_decode_rows(frames, True)))
+    check(_by_term(_decode_rows(frames, False)), with_pos=False)
+
+    dec = _RowDecoder(blocks, True)
+    rng = np.random.default_rng(0)
+    first = rng.random(len(blocks)) < 0.3
+    both = first | (rng.random(len(blocks)) < 0.5)
+    dec.decode(first)
+    dec.decode(both)
+    got, want = dec.gather(both), _by_term(_decode_rows([blocks[both]], True))
+    assert set(got) == set(want)
+    for t in want:
+        assert all(np.array_equal(g, w) for g, w in zip(got[t], want[t]))
+
+
 def test_salted_term_stats_equals_plain(spark, corpus200, index200):
     docs = assign_doc_ids(corpus200).select("doc_id", "text")
     tokens = tokens_frame(docs)

@@ -173,6 +173,18 @@ def test_merge_rejects_overlap(spark, corpus200):
         merge_indexes(ia, ib)
 
 
+@pytest.mark.parametrize("kernel", [DD.shingle_sets, DD.minhash_signatures])
+def test_dedup_kernels_reject_null_doc_id(spark, kernel):
+    """A null doc_id fails the per-doc kernels with an error naming the
+    column, not pyarrow's zero-copy ArrowInvalid from inside the task."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (None, "beta gamma delta epsilon")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(Exception, match="doc_id column has 1 null"):
+        kernel(docs).collect()
+
+
 def test_real_decode_path_gated_on_pillow(spark):
     """mm_features real path: pytest-gated on the Pillow probe (this
     sandbox ships no decoder — the gate documents that; on a cluster image

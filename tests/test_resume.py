@@ -10,6 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from search_engine_spark.operators.docids import assign_doc_ids
 from search_engine_spark.plans.checkpoint import (
     build_partitioned,
     committed_partitions,
@@ -80,3 +81,22 @@ def test_partitioned_build_frees_its_caches(spark, corpus200, tmp_path):
     assert persistent().size() == before
     assert build_partitioned(spark, corpus200, d, n_parts=2) == {1}
     assert persistent().size() == before
+
+
+def test_finalize_rejects_overlapping_segments(spark, corpus200, tmp_path):
+    """Two committed segments sharing a doc id: the one disjointness check
+    on the folded index raises."""
+    d = str(tmp_path / "ov")
+    tagged = assign_doc_ids(corpus200, "url").withColumn(
+        "part", F.pmod(F.xxhash64("url"), F.lit(2))
+    )
+    a = tagged.where("part = 0").agg(F.min("doc_id")).first()[0]
+    b = tagged.where("part = 1").agg(F.min("doc_id")).first()[0]
+    clashing = tagged.withColumn(
+        "seg_id", F.when(F.col("doc_id") == b, F.lit(a)).otherwise(F.col("doc_id"))
+    )
+    build_partitioned(
+        spark, clashing.select("url", "text", "seg_id"), d, n_parts=2, id_col="seg_id"
+    )
+    with pytest.raises(ValueError, match="overlap"):
+        finalize_index(spark, d, n_parts=2)
