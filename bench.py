@@ -63,46 +63,6 @@ def _code_fingerprint() -> str:
     return h.hexdigest()[:16]
 
 
-def _postcache_probe(spark, idx) -> dict:
-    """Warm-vs-cold serving: cold reads every posting block from the saved
-    parquet per query; warm serves the df-hottest terms from the budgeted
-    in-memory cache (reference indices/postcache.c split)."""
-    from search_engine_spark.corpus import vocab_word as W
-    from search_engine_spark.plans.build import load_index, save_index
-    from search_engine_spark.plans.cache import attach_posting_cache, build_posting_cache
-    from search_engine_spark.plans.query import search_many
-
-    path = _OUT_DIR + "/saved"
-    save_index(idx, path)
-    cold = load_index(spark, path)
-    wl = {f"c{i}": (f"{W(i % 50)} {W((i * 7) % 200)}", "or") for i in range(64)}
-
-    def best_of(index, reps=2):
-        # distribute the pool broadcast / prime scan caches outside the
-        # timer (steady-state serving is the measured quantity), then
-        # best-of-N like every other number on this noisy VM
-        search_many(spark, index, {"w": (W(1), "or")}).collect()
-        best = None
-        for _ in range(reps):
-            t0 = time.time()
-            search_many(spark, index, wl).collect()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
-    cold_s = best_of(cold)
-    cache = build_posting_cache(cold, budget_bytes=32 << 20)
-    warm = attach_posting_cache(cold, cache)
-    warm_s = best_of(warm)
-    return {
-        "cold_qps": round(len(wl) / cold_s, 2),
-        "warm_qps": round(len(wl) / warm_s, 2),
-        "budget_mb": 32,
-        "hot_terms": cache.n_hot_terms,
-        "cache_bytes_used": cache.bytes_used,
-    }
-
-
 def _daemon_probe(spark, idx, n_clients: int = 32) -> dict:
     """Interactive daemon QPS vs batch QPS on the SAME workload: N
     concurrent HTTP clients POST one query each (drained through the
@@ -331,9 +291,6 @@ def _run_workload(cpus: int, sf_dir: str, n_docs: int) -> dict:
     out["query_latency_sec"] = round(time.time() - t0, 3)
     corpus.unpersist()
 
-    if os.environ.get("BENCH_POSTCACHE") == "1":
-        out["postcache"] = _postcache_probe(spark, idx)
-
     if os.environ.get("BENCH_DAEMON") == "1":
         out["daemon"] = _daemon_probe(spark, idx)
 
@@ -423,7 +380,6 @@ def main() -> None:
                     SPARK_GRAFT_CPUS=str(c),
                     BENCH_DOCS=str(n_docs),
                     BENCH_SCALE_QUERIES="1",
-                    BENCH_POSTCACHE="1" if c == hi_all else "0",
                     BENCH_DAEMON="1" if c == hi_all else "0",
                 )
                 r = subprocess.run(
@@ -484,7 +440,7 @@ def main() -> None:
         "n_docs": out["n_docs"],
         "cpus": out["cpus"],
     }
-    for extra in ("postcache", "daemon", "query_latency_sec"):
+    for extra in ("daemon", "query_latency_sec"):
         if extra in out:
             payload[extra] = out[extra]
     print(json.dumps(payload))
@@ -500,8 +456,6 @@ def _merge_level(best: dict, got: dict) -> dict:
         k: min(v, best.get("queries", {}).get(k, v))
         for k, v in got.get("queries", {}).items()
     } or best.get("queries", {})
-    if "postcache" in best and "postcache" not in got:
-        got["postcache"] = best["postcache"]
     if "daemon" in got and "daemon" in best:
         got["daemon"] = max(got["daemon"], best["daemon"], key=lambda d: d.get("daemon_qps", 0.0))
     elif "daemon" in best:
@@ -512,7 +466,6 @@ def _merge_level(best: dict, got: dict) -> dict:
         **best,
         "query_qps": got["query_qps"],
         "queries": got["queries"],
-        "postcache": got.get("postcache", best.get("postcache")),
         "daemon": got.get("daemon", best.get("daemon")),
     }
 
@@ -564,8 +517,6 @@ def _bench_md(reports: list, results: dict, n_docs: int) -> str:
     qnames = results[levels[0]].get("queries", {})
     for name in qnames:
         query_rows.append(row(name, lambda r, n=name: r.get("queries", {}).get(n, 0.0)))
-
-    pc = results[max(levels)].get("postcache", {})
 
     lines = [
         "# BENCH — measured throughput + scaling efficiency",
@@ -670,17 +621,6 @@ def _bench_md(reports: list, results: dict, n_docs: int) -> str:
         "(per-query cost independent of executor count).",
         "",
     ]
-    if pc:
-        lines += [
-            "## Posting cache (warm vs cold serving)",
-            "",
-            f"Budgeted posting cache (reference postcache role): {pc.get('budget_mb')} MB",
-            f"budget caches the {pc.get('hot_terms')} df-hottest terms "
-            f"({pc.get('cache_bytes_used')} bytes). 64-query batch QPS serving from the",
-            f"saved parquet index: cold {pc.get('cold_qps')} QPS -> warm {pc.get('warm_qps')} QPS",
-            "(hot terms from memory, cold terms streamed from the columnar store).",
-            "",
-        ]
     dm = results[max(levels)].get("daemon", {})
     if dm:
         lines += [

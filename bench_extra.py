@@ -156,59 +156,6 @@ def cmd_assign() -> None:
     print(json.dumps({"mode": "assign", "n_docs": n_docs, **out}))
 
 
-def cmd_postcache() -> None:
-    """Warm-vs-cold serving at a configurable cache budget (VERDICT r05 #8:
-    the frozen bench's 32MB budget caches only the 2 df-hottest terms at 1M
-    docs — size the budget to a realistic hot set instead and see whether
-    the cache pays, or document that the columnar store is already fast
-    enough). Budgets in MB via $PC_BUDGETS (comma list, default '32,512');
-    corpus size via $BENCH_DOCS."""
-    from search_engine_spark.corpus import synth_corpus, vocab_word as W
-    from search_engine_spark.plans.build import build_index, load_index, save_index
-    from search_engine_spark.plans.cache import attach_posting_cache, build_posting_cache
-    from search_engine_spark.plans.query import search_many
-
-    n_docs = int(os.environ.get("BENCH_DOCS", "1000000"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    budgets = [int(b) for b in os.environ.get("PC_BUDGETS", "32,512").split(",")]
-    spark = _spark()
-    corpus = synth_corpus(spark, n_docs, n_parts=max(4 * cpus, n_docs // 2500)).persist()
-    corpus.count()
-    idx = build_index(spark, corpus)
-    path = "/dev/shm/bench_idx/pc_saved"
-    save_index(idx, path)
-    cold = load_index(spark, path)
-    wl = {f"c{i}": (f"{W(i % 50)} {W((i * 7) % 200)}", "or") for i in range(64)}
-
-    def best_of(index, reps=REPS):
-        search_many(spark, index, {"w": (W(1), "or")}).collect()
-        best = None
-        for _ in range(reps):
-            t0 = time.time()
-            search_many(spark, index, wl).collect()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
-    out = {"mode": "postcache", "n_docs": n_docs, "budgets": {}}
-    cold_s = best_of(cold)
-    out["cold_qps"] = round(len(wl) / cold_s, 2)
-    print(f"cold: {out['cold_qps']} QPS", file=sys.stderr)
-    for mb in budgets:
-        cache = build_posting_cache(cold, budget_bytes=mb << 20)
-        warm = attach_posting_cache(cold, cache)
-        warm_s = best_of(warm)
-        out["budgets"][mb] = {
-            "warm_qps": round(len(wl) / warm_s, 2),
-            "hot_terms": cache.n_hot_terms,
-            "cache_bytes_used": cache.bytes_used,
-        }
-        cache.hot_blocks.unpersist()
-        cache.hot_terms.unpersist()
-        print(f"budget {mb}MB: {out['budgets'][mb]}", file=sys.stderr)
-    print(json.dumps(out))
-
-
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "noop"
     if mode == "noop":
@@ -217,8 +164,6 @@ def main() -> None:
         cmd_qps()
     elif mode == "assign":
         cmd_assign()
-    elif mode == "postcache":
-        cmd_postcache()
     else:
         raise SystemExit(f"unknown mode {mode!r}")
 

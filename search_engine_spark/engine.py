@@ -113,15 +113,20 @@ class SearchEngine:
             )
 
     def warm(self, cache_budget_bytes: int | None = None) -> "SearchEngine":
-        """Daemon-start warm-up (indices.c:128-178): budgeted hot-term cache
-        or full persist of the serving tables."""
+        """Daemon-start warm-up (indices.c:128-178). With a budget: the
+        df-hottest terms' postings, up to that many compressed block bytes,
+        decoded into the driver as ``index.hot_postings`` (plans/cache.py);
+        only the daemon's driver-side scorer reads them, and nothing is
+        persisted. Without one: persist the serving tables."""
         if cache_budget_bytes is None:
             self.index.cache()
         else:
-            from .plans.cache import attach_posting_cache, build_posting_cache
+            import dataclasses
+
+            from .plans.cache import build_posting_cache
 
             cache = build_posting_cache(self.index, cache_budget_bytes)
-            self.index = attach_posting_cache(self.index, cache)
+            self.index = dataclasses.replace(self.index, hot_postings=cache.hot_postings)
         return self
 
     # ------------------------------------------------------------- query --

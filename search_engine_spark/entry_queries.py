@@ -941,18 +941,36 @@ FROM top t
 
 
 def _q_postcache_equiv(spark, sf_dir):
-    """Q18 posting cache as a hard-signal row: serve the or2 query through
-    the BUDGETED warm view (df-hottest terms persisted in memory, cold
-    terms streamed from the store — reference indices/postcache.c split)
-    and require output identical to the plain oracle. A tiny budget forces
-    BOTH the hot (cached) and cold (anti-join) paths to carry terms."""
-    from .plans.cache import attach_posting_cache, build_posting_cache
+    """Q18 posting cache as a hard-signal row: rank the or2 query with the
+    daemon's driver-side scorer (plans/serve.driver_search) over a budgeted
+    pool — df-hottest terms decoded in memory, the rest fetched from the
+    store, the reference indices/postcache.c split — and require output
+    identical to the plain oracle. The 24 KB budget pools exactly one of
+    the two terms ('join' on sf0.01, 'merge' on sf0.001), so each side of
+    the split carries one; the row checks that, and that the scorer did
+    not decline."""
+    import dataclasses
+
+    import pandas as pd
+
+    from .plans.cache import build_posting_cache
+    from .plans.serve import driver_search
 
     idx = get_index(spark, sf_dir)
-    cache = build_posting_cache(idx, budget_bytes=256 * 1024)
-    warm = attach_posting_cache(idx, cache)
-    res = search(spark, warm, "merge join", mode="or", k=S.RANK_K + 64)
-    return _ranked(res, k=S.RANK_K)
+    pool = build_posting_cache(idx, budget_bytes=24 * 1024).hot_postings
+    pooled = sorted({"merge", "join"} & set(pool))
+    if len(pooled) != 1:
+        raise AssertionError(f"postcache row needs one pooled term of two, got {pooled}")
+    warm = dataclasses.replace(idx, hot_postings=pool)
+    got = driver_search(warm, {"q": ("merge join", "or")}, k=S.RANK_K + 64)
+    if got is None:
+        raise AssertionError("postcache row: driver_search declined the query")
+    doc, bm25, match_dim, _, _, score = got["q"]
+    res = pd.DataFrame({"doc_id": doc, "score": score, "bm25": bm25, "match_dim": match_dim})
+    return _ranked(
+        spark.createDataFrame(res, "doc_id long, score double, bm25 double, match_dim double"),
+        k=S.RANK_K,
+    )
 
 
 def _q_resume_slice(spark, sf_dir):

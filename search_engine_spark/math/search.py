@@ -722,14 +722,10 @@ def _mixed_shard_search(
     """
     avgdl = float(index.avgdl)
     bc = spark.sparkContext.broadcast(_math_channel(minfo))
-    hot_pool = index.hot_pool_bc
-    term_set = {t for _, t, _ in kws}
     serving, _ = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
-    blocks = serving.filter(serve.sql_in("term", term_set))
+    blocks = serving.filter(serve.sql_in("term", {t for _, t, _ in kws}))
 
     def kernel(batches):
-        if hot_pool is not None:
-            batches = iter(serve.with_hot_pool(batches, hot_pool, term_set))
         out = _score_shard(batches, kws, mode, k, with_prox, avgdl, bc.value)
         if out is not None:
             yield out
@@ -774,21 +770,14 @@ def _mixed_routed_search(
 
     avgdl = float(index.avgdl)
     solo = mode != "and" or not kws
-    hot_pool = index.hot_pool_bc
-    term_set = {t for _, t, _ in kws}
     math_rows = per_tex[0]
     for mdf in per_tex[1:]:
         math_rows = math_rows.unionByName(mdf)
 
-    def score(key, blocks: pd.DataFrame, mrows: pd.DataFrame) -> pd.DataFrame:
-        mrows = mrows[mrows["doc_id"] >= 0]  # drop the group placeholders
+    def score(blocks: pd.DataFrame, mrows: pd.DataFrame) -> pd.DataFrame:
         minfo = _minfo(mrows[_MATH_COLS].itertuples(index=False, name=None))
-        frames = [blocks]
-        if hot_pool is not None:
-            frames.insert(0, serve.pool_rows(hot_pool, int(key[0]), term_set))
         out = _score_shard(
-            (f for f in frames if f is not None),
-            kws, mode, k, with_prox, avgdl, _math_channel(minfo),
+            [blocks], kws, mode, k, with_prox, avgdl, _math_channel(minfo)
         )
         frames = [] if out is None else [out]
         if solo:
@@ -799,19 +788,15 @@ def _mixed_routed_search(
     if not kws:
         bucket = F.pmod(F.xxhash64("doc_id"), F.lit(spark.sparkContext.defaultParallelism))
         local = math_rows.groupBy(bucket.alias("_shard")).applyInPandas(
-            lambda key, mrows: score(key, pd.DataFrame(), mrows), _MIXED_SCHEMA
+            lambda mrows: score(pd.DataFrame(), mrows), _MIXED_SCHEMA
         )
         return top_k(local, k).select(*_MIXED_COLS)
 
     serving, _ = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
-    blocks = serving.filter(serve.sql_in("term", term_set))
-    # an attached posting cache carries the runs of the FULL serving layout
-    # (its pool is keyed by them); the cold view alone would miss hot docs.
-    # Without one, the runs of the query terms' blocks suffice: a math doc
-    # outside them has no query-term posting and is scored math-only.
-    owner = run_owner(
-        hot_pool.value[1] if hot_pool is not None else partition_doc_ranges(blocks)
-    )
+    blocks = serving.filter(serve.sql_in("term", {t for _, t, _ in kws}))
+    # the runs of the query terms' blocks suffice: a math doc outside them
+    # has no query-term posting and is scored math-only
+    owner = run_owner(partition_doc_ranges(blocks))
 
     @F.pandas_udf("long")
     def shard_of(doc: pd.Series) -> pd.Series:
@@ -819,23 +804,6 @@ def _mixed_routed_search(
 
     blocks = blocks.withColumn("_shard", shard_of("first_doc_id"))
     math_rows = math_rows.withColumn("_shard", shard_of("doc_id"))
-    if hot_pool is not None:
-        # a shard whose query postings all sit in the pool may have neither
-        # a cold block nor a math row, and cogroup forms no group for it:
-        # one placeholder math row (doc_id -1) per pooled shard forces one
-        types = {f.name: f.dataType for f in math_rows.schema.fields}
-        pids = spark.createDataFrame(
-            [(int(p),) for p in sorted(hot_pool.value[0])], "_shard long"
-        )
-        math_rows = math_rows.unionByName(
-            pids.select(
-                F.lit(-1).cast(types["doc_id"]).alias("doc_id"),
-                F.lit(-1).cast(types["kw_idx"]).alias("kw_idx"),
-                F.lit(0.0).cast(types["math_score"]).alias("math_score"),
-                F.array().cast(types["_mpos"]).alias("_mpos"),
-                "_shard",
-            )
-        )
     local = (
         blocks.groupBy("_shard")
         .cogroup(math_rows.groupBy("_shard"))

@@ -47,12 +47,9 @@ class InvertedIndex:
     docstore: DataFrame  # (doc_id, url, text)
     docN: int
     avgdl: float
-    # posting-cache pool broadcast (pool, bounds) set by
-    # plans.cache.attach_posting_cache; carried on the index handle (NOT on
-    # a DataFrame attribute, which silently vanishes under any transform)
-    hot_pool_bc: object = None
-    # the same pool decoded once in the driver, term -> (ids, tfs, dls, pos)
-    # (plans/serve.decode_pool); the daemon scores its batches over it
+    # the posting-cache pool of ``SearchEngine.warm(budget)``, decoded once
+    # in the driver: term -> (ids, tfs, dls, pos) (plans/cache.py); the
+    # daemon scores its batches over it, the Spark kernels never read it
     hot_postings: dict | None = None
     # exact integer total token count (sum of doclens). Lets merge derive
     # the merged avgdl EXACTLY (len_sum_l + len_sum_r) / (docN_l + docN_r)

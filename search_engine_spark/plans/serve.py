@@ -530,12 +530,10 @@ def serving_coalesce(df: DataFrame, docN: int | None = None) -> tuple[DataFrame,
     201 QPS vs 32 shards = 378 QPS (identical results). coalesce() merges
     whole parent partitions, so the doc-sharded invariant (every block of
     a doc in one shard) is preserved, and the grouping is deterministic
-    for a given parent count — attach_posting_cache and shard_search both
-    route through this helper (with the same ``docN``) so the cache pool's
-    pid-keyed bounds agree with the query-time layout. On a real cluster
-    the target is the cluster's total cores (defaultParallelism), i.e. one
-    serving shard per executor core — scaled DOWN for small indexes so a
-    shard covers at least ``SERVE_DOCS_PER_SHARD`` docs. Override with
+    for a given parent count. On a real cluster the target is the
+    cluster's total cores (defaultParallelism), i.e. one serving shard per
+    executor core — scaled DOWN for small indexes so a shard covers at
+    least ``SERVE_DOCS_PER_SHARD`` docs. Override with
     $SPARK_GRAFT_SERVE_SHARDS.
     """
     sc = df.sparkSession.sparkContext
@@ -735,64 +733,11 @@ def _batch_score_shard(qitems, decoded, avgdl, k, with_prox, math=None):
 PRUNE_MAX_OR_BATCH = 32
 
 
-def pool_rows(hot_pool, pid, term_set) -> pd.DataFrame | None:
-    """Shard ``pid``'s posting-cache pool rows of the query terms, or None.
-
-    The pool holds one pickled frame per shard (plans/cache.py), so a task
-    deserializes only its own shard's slice, not the whole pool."""
-    import pickle
-
-    h = hot_pool.value[0].get(pid)
-    if h is None:
-        return None
-    h = pickle.loads(h)
-    h = h[h["term"].isin(term_set)]
-    return h if len(h) else None
-
-
-def with_hot_pool(batches, hot_pool, term_set) -> list[pd.DataFrame]:
-    """This task's cold block frames with its shard's pool rows merged
-    ahead of them — the doc-sharded kernel requires every block of a doc in
-    ONE shard. The cold rows are VALIDATED against the shard's attach-time
-    doc bounds, raising on attach-to-query split drift instead of
-    mis-scoring."""
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else None
-    pdfs = [pdf for pdf in batches if not pdf.empty]
-    iv = hot_pool.value[1].get(pid)  # [lo, hi] doc-id runs this shard owns
-
-    def _in_runs(doc):
-        at = np.searchsorted(iv[:, 0], doc, side="right") - 1
-        return (at >= 0) & (doc <= iv[np.maximum(at, 0), 1])
-
-    for pdf in pdfs:
-        # a block's first/last are actual doc ids of this shard; a block may
-        # span several of the shard's runs, so only the endpoints are
-        # checked against the run set
-        ok = iv is not None and bool(
-            (
-                _in_runs(pdf["first_doc_id"].to_numpy())
-                & _in_runs(pdf["last_doc_id"].to_numpy())
-            ).all()
-        )
-        if not ok:
-            raise RuntimeError(
-                "posting-cache shard mapping is stale: partition "
-                f"{pid} received doc ids outside its attach-time "
-                "bounds — the serving frame was re-planned under "
-                "different split conf; re-attach the cache"
-            )
-    h = pool_rows(hot_pool, pid, term_set)
-    return pdfs if h is None else [h, *pdfs]
-
-
 def _block_idf(qitems, pdfs: list[pd.DataFrame], docN: float):
     """Fill in every keyword's idf from its df, the sum of its blocks' ``n``
     posting counts. Valid only where ``pdfs`` hold EVERY block of each
-    query term (one serving shard, pool rows included): there that sum is
-    ``term_stats.df``, which is built as the same sum."""
+    query term (one serving shard): there that sum is ``term_stats.df``,
+    which is built as the same sum."""
     df: dict[str, int] = {}
     for pdf in pdfs:
         for term, n in pdf.groupby("term")["n"].sum().items():
@@ -811,7 +756,9 @@ def shard_search(
     with_prox: bool = True,
     prune: bool = False,
 ) -> DataFrame:
-    """Batch serve over the doc-sharded blocks.
+    """Batch serve over the doc-sharded blocks: the whole ``doc_blocks``
+    table, on a warmed engine too (its decoded pool is the driver's,
+    plans/cache.py).
 
     ``queries``: qid -> (qtext, mode). Returns
     (qid, rank, doc_id, bm25, match_dim, n_matched_terms, prox, score).
@@ -847,15 +794,6 @@ def shard_search(
     all_terms = sorted({t for _, kws, _ in qitems for _, t, _ in kws})
     if not all_terms:
         return spark.createDataFrame([], _OUT_SCHEMA)
-    # posting-cache pool (plans/cache.attach_posting_cache): hot block rows
-    # live in a broadcast of (pool, bounds) carried on the index handle.
-    # Assignment is content-addressed (doc-range containment at attach
-    # time); the kernel merges its shard's pool rows ahead of the cold rows
-    # — the doc-sharded kernel requires every block of a doc in ONE shard —
-    # and VALIDATES the incoming cold rows against the claimed doc bounds,
-    # raising on attach-to-query split drift instead of mis-scoring.
-    hot_pool = getattr(index, "hot_pool_bc", None)
-    term_set = set(all_terms)
     blocks = serving.filter(sql_in("term", all_terms))
     avgdl = index.avgdl
     docN = float(index.docN)
@@ -879,8 +817,6 @@ def shard_search(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pdfs = [pdf for pdf in batches if not pdf.empty]
-        if hot_pool is not None:
-            pdfs = with_hot_pool(pdfs, hot_pool, term_set)
         items = _block_idf(qitems, pdfs, docN) if one_shard else qitems
         if prune:
             results = _batch_wand_shard(pdfs, items, avgdl, k, with_prox)
@@ -936,12 +872,23 @@ def df_lookup(index, terms: list[str]) -> dict[str, float]:
 _BLOB_COLS = ["term", "n", "doc_ids_blob", "tfs_blob", "doclens_blob", "positions_blob"]
 
 
-def decode_pool(hot_rows: pd.DataFrame | None) -> dict:
-    """The posting-cache pool's block rows, decoded once:
-    term -> (ids, tfs, dls, pos), positions included."""
-    if hot_rows is None:
+def decode_pool(rows: pd.DataFrame) -> dict:
+    """Block rows (``_BLOB_COLS``) decoded once:
+    term -> (ids, tfs, dls, pos), positions included. One decode per term:
+    its temporaries stay the size of one term's postings, not the pool's."""
+    out = {}
+    for _, g in rows.groupby("term", sort=False):
+        out.update(_by_term(_decode_rows([g], True)))
+    return out
+
+
+def fetch_postings(index, terms: list[str]) -> dict:
+    """``decode_pool`` of every block of ``terms``, brought to the driver
+    by ONE term-filtered collect; no terms, no Spark job."""
+    if not terms:
         return {}
-    return _by_term(_decode_rows([hot_rows], True))
+    rows = index.doc_blocks.filter(sql_in("term", terms)).select(*_BLOB_COLS).collect()
+    return decode_pool(pd.DataFrame(rows, columns=_BLOB_COLS))
 
 
 def driver_search(
@@ -982,12 +929,7 @@ def driver_search(
         sizes = [len(v[0]) for v in pool.values()]
         if not sizes or len(cold) * min(sizes) > sum(sizes):
             return None
-        rows = (
-            index.doc_blocks.filter(sql_in("term", cold)).select(*_BLOB_COLS).collect()
-        )
-        decoded.update(
-            _by_term(_decode_rows([pd.DataFrame(rows, columns=_BLOB_COLS)], True))
-        )
+        decoded.update(fetch_postings(index, cold))
     docN = float(index.docN)
     qitems = [
         (

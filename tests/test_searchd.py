@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.corpus import synth_corpus, vocab_word
 from search_engine_spark.engine import RET_WINDOW_ERR, SearchEngine, errcode_json
-from search_engine_spark.plans.cache import attach_posting_cache, build_posting_cache
 from search_engine_spark.plans.serve import driver_search
 from search_engine_spark.searchd import MicroBatcher, keywords_to_qtext, serve
 
@@ -206,11 +205,6 @@ def test_connection_burst_is_not_reset():
     assert errors == []
 
 
-def _warmed(spark, index, budget):
-    cache = build_posting_cache(index, budget_bytes=budget)
-    return SearchEngine(spark, attach_posting_cache(index, cache)), cache
-
-
 @pytest.fixture(scope="module")
 def saved200(spark, index200, tmp_path_factory):
     """index200 saved and loaded back, as the daemon serves an index."""
@@ -231,10 +225,7 @@ def warm_engine(spark, saved200):
             + F.octet_length("doclens_blob") + F.octet_length("positions_blob")
         )
     ).first()[0]
-    eng, cache = _warmed(spark, saved200, total // 3)
-    yield eng
-    cache.hot_blocks.unpersist()
-    cache.hot_terms.unpersist()
+    return SearchEngine(spark, saved200).warm(total // 3)
 
 
 def _hot_cold(eng):
@@ -270,7 +261,7 @@ def _requests(hot, cold):
 def test_many_equals_query_json_on_warmed_engine(warm_engine):
     """Every request kind of a drained batch, scored in the driver over
     the decoded pool plus one cold fetch, equals query_json (the shard
-    kernel with the pool merged in)."""
+    kernel over the whole doc_blocks table)."""
     hot, cold = _hot_cold(warm_engine)
     reqs = _requests(hot, cold)
     solo = [warm_engine.query_json(q, page=p, mode=m) for q, p, m in reqs]
@@ -286,17 +277,13 @@ def test_many_equals_query_json_zero_budget(spark, saved200, warm_engine):
     driver_search declines and the batch runs as one search_many plan."""
     hot, cold = _hot_cold(warm_engine)
     reqs = _requests(hot, cold)
-    eng, cache = _warmed(spark, saved200, 0)
-    try:
-        assert eng.index.hot_postings == {}
-        for e in (eng, SearchEngine(spark, saved200)):
-            assert driver_search(e.index, {"q": (cold[0], "or")}) is None
-            assert e.query_json_many(reqs) == [
-                e.query_json(q, page=p, mode=m) for q, p, m in reqs
-            ]
-    finally:
-        cache.hot_blocks.unpersist()
-        cache.hot_terms.unpersist()
+    eng = SearchEngine(spark, saved200).warm(0)
+    assert eng.index.hot_postings == {}
+    for e in (eng, SearchEngine(spark, saved200)):
+        assert driver_search(e.index, {"q": (cold[0], "or")}) is None
+        assert e.query_json_many(reqs) == [
+            e.query_json(q, page=p, mode=m) for q, p, m in reqs
+        ]
 
 
 def test_driver_search_declines_past_the_pool_bound(warm_engine):
