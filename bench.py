@@ -207,7 +207,7 @@ def _run_workload(cpus: int, sf_dir: str, n_docs: int) -> dict:
 
     from search_engine_spark.corpus import synth_corpus
     from search_engine_spark.entry_queries import REGISTRY, get_index
-    from search_engine_spark.plans.build import build_index
+    from search_engine_spark.plans.build import build_index, save_index
     from search_engine_spark.plans.query import search
     from search_engine_spark.session import get_spark
 
@@ -238,16 +238,14 @@ def _run_workload(cpus: int, sf_dir: str, n_docs: int) -> dict:
     for rep in range(build_reps):
         if idx is not None:
             # free the previous rep's persisted frames (build_index caches
-            # the doc slice, doc_meta and blocks internally), then re-prime
+            # the doc slice and the blocks internally), then re-prime
             # the corpus cache outside the timer
             spark.catalog.clearCache()
             corpus = corpus.persist()
             corpus.count()
         t0 = time.time()
         idx = build_index(spark, corpus)
-        idx.doc_blocks.write.mode("overwrite").parquet(_OUT_DIR + "/doc_blocks")
-        idx.term_stats.write.mode("overwrite").parquet(_OUT_DIR + "/term_stats")
-        idx.doc_meta.write.mode("overwrite").parquet(_OUT_DIR + "/doc_meta")
+        save_index(idx, _OUT_DIR + "/index")
         dt = time.time() - t0
         build_s = dt if build_s is None else min(build_s, dt)
     out["index_build_sec"] = round(build_s, 3)

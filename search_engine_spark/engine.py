@@ -80,15 +80,14 @@ class SearchEngine:
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "SearchEngine":
-        import os
+        from .sources.tables import read_table_if_exists
 
-        idx = load_index(spark, path)
-        mp = lr = None
-        if os.path.exists(f"{path}/math_postings"):
-            mp = spark.read.parquet(f"{path}/math_postings")
-        if os.path.exists(f"{path}/math_lr"):
-            lr = spark.read.parquet(f"{path}/math_lr")
-        return cls(spark, idx, mp, lr)
+        return cls(
+            spark,
+            load_index(spark, path),
+            read_table_if_exists(spark, f"{path}/math_postings"),
+            read_table_if_exists(spark, f"{path}/math_lr"),
+        )
 
     def save(self, path: str) -> None:
         """Index tables to ``path``; the math tables are PARTITIONED BY the
@@ -226,13 +225,6 @@ class SearchEngine:
             return err
         res = self.query(qtext, mode=mode)
         rows = snippets_for(self.index, res, terms).collect()
-        # mixed_search's broadcast-budget-overflow fallback tags its result
-        # with the persisted per-tex frames (dedup.release protocol); free
-        # them now that the page is materialized — a long-lived daemon must
-        # not leak executor storage per overflowing math query
-        from .operators.dedup import release
-
-        release(res)
         return self._page_reply(rows, page)
 
     def query_json_many(self, requests: list[tuple[str, int, str]]) -> list[dict]:

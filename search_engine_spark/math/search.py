@@ -532,6 +532,9 @@ def mixed_search(
     the term side pays ZERO shuffle (_mixed_shard_search); otherwise each
     math candidate is routed to the shard that owns its doc id
     (_mixed_routed_search), which is also how a math-only query is scored.
+    A routed query with term keywords comes back as its collected top-k
+    in a local frame: its persisted per-TeX frames are freed before the
+    return, so the caller has nothing to release.
     """
     terms, texes = split_query(qtext)
     n_terms = len(terms)
@@ -607,11 +610,16 @@ def mixed_search(
             return _mixed_shard_search(spark, index, kws, mode, minfo, k, with_prox)
 
     out = _mixed_routed_search(spark, index, kws, mode, per_tex, k, with_prox)
-    if terms:
-        # the routed plan reads the persisted per-tex frames; the caller
-        # frees them after materializing (operators.dedup.release pattern)
-        out._cached_inputs = per_tex
-    return out
+    if not terms:
+        return out
+    # the routed plan reads the persisted per-tex frames: collect its <= k
+    # rows and free the frames here, so no caller holds them past the query
+    try:
+        top = out.toPandas()
+    finally:
+        for mdf in per_tex:
+            mdf.unpersist()
+    return spark.createDataFrame(top, _MIXED_SCHEMA)
 
 
 def _minfo(rows) -> dict[int, list]:

@@ -4,23 +4,25 @@ corpus (url, warc_ts, html, text, lang)
   -> doc_ids     (url, doc_id)                       [I8]
   -> ONE fused Arrow stage: tokenize -> invert -> block pack [I2-I13]
      emitting packed posting blocks + doc-meta sentinel rows
-  -> doc_meta / docN / avgdl   derived from sentinel rows    [I10]
-  -> term_stats  (term, df, cf) pure column agg over blocks  [I10]
+  -> docN / avgdl / len_sum    summed off the sentinel rows  [I10]
   -> docstore    (doc_id, url, text)                 [I15; Parquet/Iceberg
                   column compression replaces the reference's gzip blobs I14]
+
+A saved index holds only what it cannot re-derive: ``doc_blocks``,
+``docstore`` and a one-row ``stats`` table. ``doc_meta`` and ``term_stats``
+are views of the blocks on the handle, as the reference computes avgDocLen
+when it opens the index (term-index/term-index.cpp:64-79).
 
 Single-scan build (round 5): block-max metadata is avgdl-independent
 (block_max_tf/block_min_dl; the WAND bound is evaluated at serve time), so
 the corpus is tokenized EXACTLY ONCE — the round-4 doclen pre-pass that
 existed only to bake avgdl into the packed blocks is gone, which at 100 TB
-removes an entire extra pass over the input. docN/avgdl/doc_meta derive
-from the sentinel side-channel rows the fused stage emits per doc chunk,
-and term_stats is a whole-stage-codegen aggregate over block metadata.
+removes an entire extra pass over the input.
 
 Dataflow shape on a cluster (cf. SURVEY §3.1): tokenize+pack is narrow
-(inherits the docID bucketing); the only data shuffles left in a build are
-the docID assignment exchange and nothing else — stats/term_stats are tiny
-metadata aggregates. All writes are partitioned table writes. With Iceberg
+(inherits the docID bucketing); the only data shuffle left in a build is
+the docID assignment exchange — the collection stats are a tiny metadata
+aggregate. All writes are partitioned table writes. With Iceberg
 available the writer targets an Iceberg table (see sources/tables.py); in
 this sandbox we write Parquet directories with the same layout.
 """
@@ -28,33 +30,50 @@ this sandbox we write Parquet directories with the same layout.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.blocks import DEFAULT_BLOCK
+from ..operators.blocks import (
+    DEFAULT_BLOCK,
+    doc_meta_from_blocks,
+    term_stats_from_blocks,
+    unpack_blocks,
+)
 from ..operators.docids import assign_doc_ids
-from ..sources.tables import read_table, write_table
+from ..sources.tables import literal_row, read_table, read_table_if_exists, write_table
 
 
 @dataclass
 class InvertedIndex:
-    """Umbrella handle over the index tables (reference indices/indices.c)."""
+    """Umbrella handle over the index tables (reference indices/indices.c):
+    the fields are what ``save_index`` writes, the cached properties views
+    of ``doc_blocks`` built once per handle."""
 
-    postings: DataFrame  # lazy unpack_blocks(doc_blocks) view: (term, doc_id, tf, doclen, positions)
     doc_blocks: DataFrame  # packed posting blocks, doc-sharded layout: the one block table
-    doc_meta: DataFrame  # (doc_id, doclen)
-    term_stats: DataFrame  # (term, df, cf)
     docstore: DataFrame  # (doc_id, url, text)
     docN: int
     avgdl: float
+    len_sum: int  # total token count: merge adds it, so avgdl stays exact
     # the posting-cache pool of ``SearchEngine.warm(budget)``, decoded once
     # in the driver: term -> (ids, tfs, dls, pos) (plans/cache.py); the
     # daemon scores its batches over it, the Spark kernels never read it
     hot_postings: dict | None = None
-    # exact integer total token count (sum of doclens). Lets merge derive
-    # the merged avgdl EXACTLY (len_sum_l + len_sum_r) / (docN_l + docN_r)
-    # instead of a float-weighted mean. None on legacy handles.
-    len_sum: int | None = None
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        """(term, doc_id, tf, doclen, positions), decoded from the blocks."""
+        return unpack_blocks(self.doc_blocks)
+
+    @cached_property
+    def doc_meta(self) -> DataFrame:
+        """(doc_id, doclen), decoded from the blocks' sentinel rows."""
+        return doc_meta_from_blocks(self.doc_blocks)
+
+    @cached_property
+    def term_stats(self) -> DataFrame:
+        """(term, df, cf), summed over the blocks' ``n``/``tf_sum``."""
+        return term_stats_from_blocks(self.doc_blocks)
 
     def cache(self) -> "InvertedIndex":
         """Warm the serving path (reference postcache role, indices/postcache.c)."""
@@ -77,20 +96,14 @@ def build_index(
 
     The build is ONE scan: tokenize -> invert -> block-pack run as a single
     map-side Arrow stage (invert_pack_blocks) whose output also carries the
-    doc-meta sentinel rows; docN/avgdl/doc_meta/term_stats all derive from
-    the persisted blocks, so the corpus text is read and tokenized exactly
-    once. The docs and the blocks are persisted (the Indri-buffer analogue:
-    materialize each boundary once; without it every action re-runs
-    tokenization); a caller done with the handle unpersists ``doc_blocks``
-    and ``docstore``.
+    doc-meta sentinel rows; docN/avgdl/len_sum and the handle's views all
+    derive from the persisted blocks, so the corpus text is read and
+    tokenized exactly once. The docs and the blocks are persisted (the
+    Indri-buffer analogue: materialize each boundary once; without it every
+    action re-runs tokenization); a caller done with the handle unpersists
+    ``doc_blocks`` and ``docstore``.
     """
-    from ..operators.blocks import (
-        collection_stats_from_blocks,
-        doc_meta_from_blocks,
-        invert_pack_blocks,
-        term_stats_from_blocks,
-        unpack_blocks,
-    )
+    from ..operators.blocks import collection_stats_from_blocks, invert_pack_blocks
 
     if id_col is None:
         docs = assign_doc_ids(corpus, "url")
@@ -106,22 +119,14 @@ def build_index(
         docs, block=block, assume_doc_partitioned=(id_col is None)
     ).persist()
     # the one action of the build: materializes the fused scan into the
-    # persisted blocks and reads docN/avgdl off the sentinel metadata
+    # persisted blocks and reads docN/avgdl/len_sum off the sentinel metadata
     stats = collection_stats_from_blocks(doc_blocks)
-    return InvertedIndex(
-        postings=unpack_blocks(doc_blocks),
-        doc_blocks=doc_blocks,
-        doc_meta=doc_meta_from_blocks(doc_blocks),
-        term_stats=term_stats_from_blocks(doc_blocks),
-        docstore=docs,
-        docN=stats["docN"],
-        avgdl=stats["avgdl"],
-        len_sum=stats["len_sum"],
-    )
+    return InvertedIndex(doc_blocks=doc_blocks, docstore=docs, **stats)
 
 
 def save_index(index: InvertedIndex, path: str) -> None:
-    """Persist index tables (Parquet dirs; Iceberg when a catalog is up).
+    """Persist ``doc_blocks``, ``docstore`` and the ``stats`` row (Parquet
+    dirs; Iceberg when a catalog is up): nothing the blocks re-derive.
 
     ``doc_blocks`` carries an explicit ``_shard`` column (the writing
     partition id): a raw parquet re-read splits big files at row-group
@@ -135,15 +140,12 @@ def save_index(index: InvertedIndex, path: str) -> None:
         index.doc_blocks.withColumn("_shard", F.spark_partition_id()),
         f"{path}/doc_blocks",
     )
-    write_table(index.doc_meta, f"{path}/doc_meta")
-    write_table(index.term_stats, f"{path}/term_stats")
     write_table(index.docstore, f"{path}/docstore")
-    spark = index.doc_blocks.sparkSession
-    len_sum = index.len_sum if index.len_sum is not None else -1
-    spark.createDataFrame(
-        [(index.docN, float(index.avgdl), int(len_sum))],
-        "docN long, avgdl double, len_sum long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    scalars = literal_row(
+        index.doc_blocks.sparkSession, "docN long, avgdl double, len_sum long",
+        index.docN, float(index.avgdl), index.len_sum,
+    )
+    write_table(scalars, f"{path}/stats")
 
 
 def save_segment(
@@ -214,23 +216,17 @@ def _effective_max_split_bytes(spark: SparkSession, file_sizes: list[int]) -> in
 
 
 def load_index(spark: SparkSession, path: str) -> InvertedIndex:
-    from ..operators.blocks import unpack_blocks
-
+    """Open the three tables of a ``save_index`` directory (any other
+    directory there, such as an older save's ``doc_meta/``, is ignored)."""
     import os
 
-    from pyspark.errors import AnalysisException
-
     bdir = f"{path}/doc_blocks"
-    try:
-        # through Spark, not os.path: the index may live on any filesystem
-        doc_blocks = read_table(spark, bdir)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
+    doc_blocks = read_table_if_exists(spark, bdir)
+    if doc_blocks is None:
         raise ValueError(
             f"index at {path!r} has no doc_blocks table (an older save "
             "layout); rebuild the index with this version"
-        ) from e
+        )
     if not {"block_max_tf", "block_min_dl"}.issubset(set(doc_blocks.columns)):
         # pre-round-5 block schema (block_max_tfn, no serve-time extremes):
         # fail HERE with a clear message instead of an opaque missing-column
@@ -239,7 +235,12 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
             f"index at {path!r} uses an old block format (missing "
             "block_max_tf/block_min_dl); rebuild the index with this version"
         )
-    srow = spark.read.parquet(f"{path}/stats").collect()[0]
+    srow = read_table(spark, f"{path}/stats").first().asDict()
+    if srow.get("len_sum", -1) < 0:
+        raise ValueError(
+            f"index at {path!r} has no len_sum in its stats (an older save "
+            "layout); rebuild the index with this version"
+        )
     if "_shard" in doc_blocks.columns:
         # The serving invariant is only that every doc's blocks land in ONE
         # partition. A parquet split never crosses a FILE boundary: splits
@@ -265,16 +266,12 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
         else:
             n = spark.sparkContext.defaultParallelism * 4
             doc_blocks = doc_blocks.repartition(n, "_shard").drop("_shard")
-    len_sum = int(srow["len_sum"]) if "len_sum" in srow.__fields__ else -1
     return InvertedIndex(
-        postings=unpack_blocks(doc_blocks),
         doc_blocks=doc_blocks,
-        doc_meta=read_table(spark, f"{path}/doc_meta"),
-        term_stats=read_table(spark, f"{path}/term_stats"),
         docstore=read_table(spark, f"{path}/docstore"),
         docN=int(srow["docN"]),
         avgdl=float(srow["avgdl"]),
-        len_sum=None if len_sum < 0 else len_sum,
+        len_sum=int(srow["len_sum"]),
     )
 
 
@@ -292,17 +289,15 @@ def merge_indexes(
     serve time) and doclens are denormalized per posting, a merge needs NO
     repack and NO posting decode:
 
-    - blocks: pure union (partitions concatenate; each side's partitions
-      stay doc-disjoint, and the docID sets are disjoint across sides, so
-      the doc-sharded serving invariant survives);
-    - term_stats: df/cf are additive over disjoint doc sets — union +
-      one tiny vocab-sized groupBy;
-    - docN adds; avgdl = (len_sum_l + len_sum_r) / docN, EXACT when both
-      sides carry the integer len_sum (all build paths do), else a
-      float-weighted mean.
+    - blocks and docstores: pure unions (partitions concatenate; each
+      side's partitions stay doc-disjoint, and the docID sets are disjoint
+      across sides, so the doc-sharded serving invariant survives);
+    - docN and len_sum add, so avgdl = len_sum / docN is exact;
+    - doc_meta and term_stats are the merged handle's views of the unioned
+      blocks (df/cf are additive over disjoint doc sets).
 
     This is the 100-TB shape: merging a 10^12-doc repository with a fresh
-    segment costs one vocab aggregate, zero data movement. (The round-4
+    segment costs two scalar sums, zero data movement. (The round-4
     version unioned DECODED posting rows and repacked every block because
     block_max_tfn baked the merged avgdl in.)
 
@@ -318,35 +313,12 @@ def merge_indexes(
         )
         if overlap:
             raise ValueError("merge_indexes: docID sets overlap")
-    from ..operators.blocks import unpack_blocks
-
-    doc_blocks = left.doc_blocks.unionByName(right.doc_blocks)
-    dmeta = left.doc_meta.unionByName(right.doc_meta.select(*left.doc_meta.columns))
-    tstats = (
-        left.term_stats.select("term", "df", "cf")
-        .unionByName(right.term_stats.select("term", "df", "cf"))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    )
     docN = left.docN + right.docN
-    if left.len_sum is not None and right.len_sum is not None:
-        len_sum = left.len_sum + right.len_sum
-        avgdl = (len_sum / docN) if docN else 0.0
-    else:
-        len_sum = None
-        avgdl = (
-            (left.docN * left.avgdl + right.docN * right.avgdl) / docN
-            if docN
-            else 0.0
-        )
-
+    len_sum = left.len_sum + right.len_sum
     return InvertedIndex(
-        postings=unpack_blocks(doc_blocks),
-        doc_blocks=doc_blocks,
-        doc_meta=dmeta,
-        term_stats=tstats,
+        doc_blocks=left.doc_blocks.unionByName(right.doc_blocks),
         docstore=left.docstore.unionByName(right.docstore),
         docN=docN,
-        avgdl=avgdl,
+        avgdl=(len_sum / docN) if docN else 0.0,
         len_sum=len_sum,
     )

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.blocks import DEFAULT_BLOCK, DOC_META_TERM
 from ..operators.docids import assign_doc_ids
-from ..sources.tables import read_table
+from ..sources.tables import literal_row, read_table, read_table_if_exists
 from .build import InvertedIndex, load_index, merge_indexes, save_segment
 
 MANIFEST = "lineage"
@@ -45,10 +45,10 @@ def _segment_path(path: str, pid: int) -> str:
 
 
 def committed_partitions(spark: SparkSession, path: str) -> set[int]:
-    mp = _manifest_path(path)
-    if not os.path.exists(mp):
+    manifest = read_table_if_exists(spark, _manifest_path(path))
+    if manifest is None:
         return set()
-    rows = spark.read.parquet(mp).filter(F.col("status") == "done").collect()
+    rows = manifest.filter(F.col("status") == "done").collect()
     return {int(r["partition_id"]) for r in rows}
 
 
@@ -97,15 +97,14 @@ def build_partitioned(
                 .collect()[0]
             )
             wall_ms = int((time.time() - t0) * 1000)
-            spark.createDataFrame(
-                [(
-                    pid, "done", seg.docN, wall_ms, int(m["np"] or 0), int(m["nt"] or 0),
-                    int(m["pb"] or 0),
-                    round(seg.docN / max(wall_ms / 1000.0, 1e-3), 1),
-                )],
+            literal_row(
+                spark,
                 "partition_id int, status string, n_docs long, wall_ms long, "
                 "n_postings long, n_tokens_capped long, positions_bytes long, docs_per_sec double",
-            ).coalesce(1).write.mode("append").parquet(_manifest_path(path))
+                pid, "done", seg.docN, wall_ms, int(m["np"] or 0), int(m["nt"] or 0),
+                int(m["pb"] or 0),
+                round(seg.docN / max(wall_ms / 1000.0, 1e-3), 1),
+            ).write.mode("append").parquet(_manifest_path(path))
             committed_now.add(pid)
             if fail_after is not None and len(committed_now) >= fail_after:
                 raise RuntimeError(f"injected failure after {fail_after} partitions")
@@ -116,8 +115,9 @@ def build_partitioned(
 
 def finalize_index(spark: SparkSession, path: str, n_parts: int = 8) -> InvertedIndex:
     """Fold the committed segments into one index: ``merge_indexes`` over
-    ``load_index`` of each segment — metadata-only (block union, additive
-    df/cf, exact len_sum), no repack and no posting decode.
+    ``load_index`` of each segment — metadata-only (block and docstore
+    unions plus summed docN/len_sum; each load opens three tables), no
+    repack and no posting decode.
 
     Reads ONLY the manifest's committed segment directories (a wildcard
     glob would silently fold stale segments left at the same path by an

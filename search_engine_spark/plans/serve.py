@@ -843,8 +843,9 @@ def df_lookup(index, terms: list[str]) -> dict[str, float]:
     The reference daemon holds its term dictionary hot across requests
     (Indri's term lookup + indices/postcache.c); the Spark twin is a plain
     dict on the index handle. Only terms not yet seen run the term_stats
-    lookup job — a steady-state serving session pays the Spark job once per
-    NEW term, not once per query. Absent terms cache as df=0 (the dictionary
+    lookup — a term-filtered aggregate over the blocks' ``n`` counts (the
+    ``term_stats`` view) — so a steady-state serving session pays it once
+    per NEW term, not once per query. Absent terms cache as df=0 (the dictionary
     answers "not in vocabulary" without re-probing). The cache clears at
     ``_DF_CACHE_MAX`` entries so driver memory stays bounded at web-scale
     vocabularies; index handles are immutable (merge builds a new one), so

@@ -10,7 +10,9 @@ engine at a real lakehouse is a config change, not a code change.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -50,3 +52,23 @@ def read_table(spark: SparkSession, target: str) -> DataFrame:
     if iceberg_available(spark) and "/" not in target:
         return spark.read.table(target)
     return spark.read.parquet(target)
+
+
+def read_table_if_exists(spark: SparkSession, target: str) -> DataFrame | None:
+    """``read_table``, or None when no table is at ``target`` (asked through
+    Spark, not ``os.path``: it holds on every filesystem Spark reads)."""
+    try:
+        return read_table(spark, target)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e):
+            raise
+        return None
+
+
+def literal_row(spark: SparkSession, schema: str, *values) -> DataFrame:
+    """One row of ``values`` typed by the DDL ``schema``, planned in the JVM
+    (``spark.createDataFrame`` of local rows runs a Python worker task)."""
+    fields = StructType.fromDDL(schema).fields
+    return spark.range(1, numPartitions=1).select(
+        *[F.lit(v).cast(f.dataType).alias(f.name) for f, v in zip(fields, values)]
+    )

@@ -4,6 +4,10 @@ term+math routing)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from search_engine_spark.corpus import vocab_word as W
 from search_engine_spark.engine import RES_PER_PAGE, SearchEngine
 
@@ -86,3 +90,59 @@ def test_loaded_math_lr_probe_prunes_partitions(spark, tmp_path):
     pe = _mnc_per_exp(spark, eng2.math_lr_postings, "\\frac{a}{b_{3}}")
     plan = pe._jdf.queryExecution().executedPlan().toString()
     assert "lseg_bucket" in plan  # the bucket filter reached the scan
+
+
+@pytest.fixture(scope="module")
+def saved_math_engine(spark, tmp_path_factory):
+    """A small term+math engine and the directory it was saved to."""
+    docs = spark.createDataFrame(
+        [
+            (i, f"https://m/{i}", f"relation w{i % 3} [imath]E=mc^{i % 4}[/imath] energy")
+            for i in range(1, 13)
+        ],
+        "doc_id long, url string, text string",
+    )
+    eng = SearchEngine.build(spark, docs, with_math=True, id_col="doc_id")
+    path = str(tmp_path_factory.mktemp("math_engine") / "idx")
+    eng.save(path)
+    return eng, path
+
+
+def test_saved_index_holds_only_underived_tables(spark, saved_math_engine, tmp_path):
+    """save_index writes the blocks, the docstore and the scalars row and
+    nothing the blocks re-derive; SearchEngine.save adds the math tables."""
+    from search_engine_spark.plans.build import save_index
+
+    eng, path = saved_math_engine
+    save_index(eng.index, str(tmp_path / "plain"))
+    assert set(os.listdir(tmp_path / "plain")) == {"doc_blocks", "docstore", "stats"}
+    assert set(os.listdir(path)) == {
+        "doc_blocks", "docstore", "stats", "math_postings", "math_lr"
+    }
+
+
+def test_routed_mixed_query_leaves_nothing_persisted(spark, saved_math_engine):
+    """A routed mixed query (no broadcast budget) made through
+    SearchEngine.query frees its per-TeX frames itself: the caller has
+    nothing to release and the session's persisted RDDs do not grow."""
+    eng, _ = saved_math_engine
+    q = "relation [imath]E=mc^2[/imath]"
+    want = [(r["doc_id"], r["score"]) for r in eng.query(q).collect()]
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    for _ in range(3):
+        got = eng.query(q, broadcast_budget_bytes=0).collect()
+        assert [(r["doc_id"], pytest.approx(r["score"], abs=1e-9)) for r in got] == want
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
+
+
+def test_load_math_tables_through_file_uri(spark, saved_math_engine):
+    """SearchEngine.load finds the math tables through Spark, so a file://
+    URI loads them as the plain path does and mixed queries keep math."""
+    _, path = saved_math_engine
+    plain = SearchEngine.load(spark, path)
+    uri = SearchEngine.load(spark, "file://" + os.path.abspath(path))
+    assert uri.math_postings is not None and uri.math_lr_postings is not None
+    q = "relation [imath]E=mc^2[/imath]"
+    want = [(r["doc_id"], round(r["score"], 9), r["max_math"]) for r in plain.query(q).collect()]
+    got = [(r["doc_id"], round(r["score"], 9), r["max_math"]) for r in uri.query(q).collect()]
+    assert got == want and any(m > 0 for _, _, m in want)

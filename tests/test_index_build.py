@@ -239,6 +239,58 @@ def test_load_without_doc_blocks_asks_for_rebuild(spark, index200, tmp_path):
         load_index(spark, path)
 
 
+def test_loaded_index_derives_the_views(spark, index200, tmp_path):
+    """A loaded index re-derives doc_meta, term_stats and the scalars
+    exactly as the build did."""
+    from search_engine_spark.plans.build import load_index, save_index
+
+    path = str(tmp_path / "idx")
+    save_index(index200, path)
+    loaded = load_index(spark, path)
+    assert (loaded.docN, loaded.avgdl, loaded.len_sum) == (
+        index200.docN, index200.avgdl, index200.len_sum
+    )
+    assert isinstance(loaded.len_sum, int)
+    assert sorted(loaded.doc_meta.collect()) == sorted(index200.doc_meta.collect())
+    assert sorted(loaded.term_stats.collect()) == sorted(index200.term_stats.collect())
+
+
+def test_save_with_derived_tables_still_loads(spark, index200, tmp_path):
+    """An older save that also holds doc_meta/ and term_stats/ loads and
+    serves the same ranks as a save without them."""
+    from search_engine_spark.corpus import vocab_word as W
+    from search_engine_spark.plans.build import load_index, save_index
+    from search_engine_spark.plans.query import search_many
+
+    new, old = str(tmp_path / "new"), str(tmp_path / "old")
+    save_index(index200, new)
+    save_index(index200, old)
+    index200.doc_meta.write.parquet(f"{old}/doc_meta")
+    index200.term_stats.write.parquet(f"{old}/term_stats")
+    queries = {"a": (f"{W(1)} {W(2)}", "or"), "b": (f"{W(3)} {W(5)}", "and")}
+
+    def ranks(path):
+        rows = search_many(spark, load_index(spark, path), queries).collect()
+        return sorted((r["qid"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in rows)
+
+    want = ranks(new)
+    assert want and ranks(old) == want
+
+
+def test_stats_without_len_sum_asks_for_rebuild(spark, index200, tmp_path):
+    """A stats row without the exact len_sum (an older save) fails at load
+    with the same "rebuild" message as an older block layout."""
+    from search_engine_spark.plans.build import load_index, save_index
+
+    path = str(tmp_path / "idx")
+    save_index(index200, path)
+    spark.createDataFrame(
+        [(index200.docN, float(index200.avgdl))], "docN long, avgdl double"
+    ).write.mode("overwrite").parquet(f"{path}/stats")
+    with pytest.raises(ValueError, match="rebuild the index"):
+        load_index(spark, path)
+
+
 def test_loaded_index_partitions_own_disjoint_doc_runs(spark, index200, tmp_path):
     """A raw parquet re-read can split a >row-group file and land one doc's
     blocks in two partitions — save_index/load_index carry and restore the

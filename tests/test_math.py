@@ -276,12 +276,14 @@ def test_bracket_class_tokens():
     assert t.op == "sep" and len(t.children) == 2
 
 
-def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark):
+def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark, monkeypatch):
     """The broadcast mixed path (math scores broadcast into the doc-sharded
     kernel) must produce the same ranked totals as the routed combine (math
     rows cogrouped with their doc's shard), with strictly fewer Exchange
-    (shuffle) nodes in the plan."""
+    (shuffle) nodes in the plan. mixed_search returns the routed top-k
+    collected, so the routed plan is taken from ``_mixed_routed_search``."""
     from search_engine_spark.corpus import synth_corpus
+    from search_engine_spark.math import search as msearch
     from search_engine_spark.math.index import build_math_index, build_math_lr_index
     from search_engine_spark.math.search import mixed_search
     from search_engine_spark.plans.build import build_index
@@ -302,6 +304,12 @@ def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark):
     q = "see merge [imath]a+\\frac{2}{a}[/imath]"
 
     kernel_res = mixed_search(spark, idx, mp, q, math_lr_postings=lr)
+    routed = []
+    real_routed = msearch._mixed_routed_search
+    monkeypatch.setattr(
+        msearch, "_mixed_routed_search",
+        lambda *a, **kw: routed.append(real_routed(*a, **kw)) or routed[-1],
+    )
     # a 64-byte broadcast budget forces the routed combine
     frame_res = mixed_search(
         spark, idx, mp, q, math_lr_postings=lr, broadcast_budget_bytes=64
@@ -315,7 +323,7 @@ def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark):
 
     assert rows(kernel_res) == rows(frame_res)
     kp = kernel_res._jdf.queryExecution().executedPlan().toString()
-    fp = frame_res._jdf.queryExecution().executedPlan().toString()
+    fp = routed[0]._jdf.queryExecution().executedPlan().toString()
     assert kp.count("Exchange") < fp.count("Exchange"), (
         kp.count("Exchange"), fp.count("Exchange"))
 
@@ -327,15 +335,12 @@ def test_mixed_broadcast_byte_budget_fallback(spark, math_setup):
     in-kernel broadcast path returns, in both merge modes — the budget is a
     routing decision, never a semantic."""
     from search_engine_spark.math.search import mixed_search
-    from search_engine_spark.operators.dedup import release
 
     idx, mp = math_setup
     q = "frac [imath]\\frac{a}{b}[/imath]"
     for mode in ("or", "and"):
         fast = mixed_search(spark, idx, mp, q, mode=mode).collect()
-        slow_df = mixed_search(spark, idx, mp, q, mode=mode, broadcast_budget_bytes=64)
-        slow = slow_df.collect()
-        release(slow_df)  # frees the persisted per-tex frames the plan read
+        slow = mixed_search(spark, idx, mp, q, mode=mode, broadcast_budget_bytes=64).collect()
         assert fast, mode
         assert sorted(
             [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in fast], key=lambda t: t[0]
