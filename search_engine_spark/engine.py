@@ -94,22 +94,22 @@ class SearchEngine:
         hash bucket of their probe key (subpath / leaf_seg), so a loaded
         engine's keyed MNC probe prunes unrelated files at the storage
         layer — the directory-per-subpath seek of the reference
-        (math-index/dir-merge.c:74-89) expressed as partition pruning."""
+        (math-index/dir-merge.c:74-89) expressed as partition pruning.
+
+        Each bucket is ONE file (rows hash-partitioned by bucket first, not
+        one file per writing task): without its native library, Hadoop runs
+        two ``chmod`` children of the driver JVM per file a local write makes."""
         from .math.index import LR_BUCKETS, MP_BUCKETS, bucket_col
 
         save_index(self.index, path)
-        if self.math_postings is not None:
-            self.math_postings.withColumn(
-                "sp_bucket", bucket_col("subpath", MP_BUCKETS)
-            ).write.mode("overwrite").partitionBy("sp_bucket").parquet(
-                f"{path}/math_postings"
-            )
-        if self.math_lr_postings is not None:
-            self.math_lr_postings.withColumn(
-                "lseg_bucket", bucket_col("leaf_seg", LR_BUCKETS)
-            ).write.mode("overwrite").partitionBy("lseg_bucket").parquet(
-                f"{path}/math_lr"
-            )
+        for table, key, bucket, n_buckets, name in (
+            (self.math_postings, "subpath", "sp_bucket", MP_BUCKETS, "math_postings"),
+            (self.math_lr_postings, "leaf_seg", "lseg_bucket", LR_BUCKETS, "math_lr"),
+        ):
+            if table is not None:
+                table.withColumn(bucket, bucket_col(key, n_buckets)).repartition(
+                    bucket
+                ).write.mode("overwrite").partitionBy(bucket).parquet(f"{path}/{name}")
 
     def warm(self, cache_budget_bytes: int | None = None) -> "SearchEngine":
         """Daemon-start warm-up (indices.c:128-178). With a budget: the

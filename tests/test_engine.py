@@ -121,6 +121,19 @@ def test_saved_index_holds_only_underived_tables(spark, saved_math_engine, tmp_p
     }
 
 
+def test_saved_math_tables_hold_one_file_per_bucket(spark, saved_math_engine):
+    """Each bucket directory of a saved math table is one Parquet file,
+    whatever the number of tasks that computed the table."""
+    eng, path = saved_math_engine
+    assert eng.index.docstore.rdd.getNumPartitions() > 1
+    for table in ("math_postings", "math_lr"):
+        buckets = [d for d in os.listdir(f"{path}/{table}") if "=" in d]
+        assert buckets
+        for d in buckets:
+            parts = [f for f in os.listdir(f"{path}/{table}/{d}") if f.endswith(".parquet")]
+            assert len(parts) == 1, (table, d, parts)
+
+
 def test_routed_mixed_query_leaves_nothing_persisted(spark, saved_math_engine):
     """A routed mixed query (no broadcast budget) made through
     SearchEngine.query frees its per-TeX frames itself: the caller has
