@@ -61,14 +61,6 @@ def section(title: str, body: str, checks: list[tuple[str, bool]]) -> str:
     return "\n".join(lines)
 
 
-def build_math_index_placeholder(spark):
-    """Tiny math_postings frame so engine.save writes both math tables."""
-    from search_engine_spark.entry_queries import _math_docs
-    from search_engine_spark.math.index import build_math_index
-
-    return build_math_index(_math_docs(spark, "/root/testdata/sf0.001"))
-
-
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -176,15 +168,13 @@ def main() -> None:
     # seek, math-index/dir-merge.c:74-89, as storage-layer pruning)
     from search_engine_spark.engine import SearchEngine
     from search_engine_spark.math.index import LR_BUCKETS, bucket_of
-    from search_engine_spark.math.search import _mnc_per_exp
     from search_engine_spark.math.texparse import tex_lr_paths
 
-    eng = SearchEngine(spark, idx, math_lr_postings=lr,
-                       math_postings=build_math_index_placeholder(spark))
+    eng = SearchEngine(spark, idx, math_lr_postings=lr)
     eng.save(store + "_math")
     eng2 = SearchEngine.load(spark, store + "_math")
     qtex = "a+\\frac{2}{a}"
-    plan = explain_str(_mnc_per_exp(spark, eng2.math_lr_postings, qtex))
+    plan = explain_str(mnc_expr_scores(spark, eng2.math_lr_postings, qtex))
     q_keys = {s0.split("/")[0] for s0, sym in tex_lr_paths(qtex) if sym != "*"}
     bset = sorted({bucket_of(k, LR_BUCKETS) for k in q_keys})
     out.append(section(

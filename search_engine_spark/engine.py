@@ -18,7 +18,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .math.index import build_math_index, build_math_lr_index
+from .math.index import build_math_lr_index
+# unused here; perfbench/spans.py wraps engine.build_math_index by name
+from .math.index import build_math_index  # noqa: F401
 from .math.search import mixed_search, split_query
 from .operators import scoring as S
 from .plans.build import InvertedIndex, build_index, load_index, save_index
@@ -60,7 +62,6 @@ def errcode_json(code: int) -> dict:
 class SearchEngine:
     spark: SparkSession
     index: InvertedIndex
-    math_postings: DataFrame | None = None
     math_lr_postings: DataFrame | None = None
 
     # ------------------------------------------------------------- build --
@@ -69,47 +70,41 @@ class SearchEngine:
         cls, spark: SparkSession, corpus: DataFrame, with_math: bool = False, **kw
     ) -> "SearchEngine":
         """Index a corpus ``(url, text, ...)``; with_math also builds the
-        TeX subpath + MNC pathinfo tables from [imath] spans."""
+        engine's one math index, the MNC leaf-root path table ``math_lr``,
+        from the [imath] spans (math/index.build_math_lr_index)."""
         idx = build_index(spark, corpus, **kw)
-        mp = lr = None
-        if with_math:
-            docs = idx.docstore.select("doc_id", "text")
-            mp = build_math_index(docs)
-            lr = build_math_lr_index(docs)
-        return cls(spark, idx, mp, lr)
+        lr = build_math_lr_index(idx.docstore) if with_math else None
+        return cls(spark, idx, lr)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "SearchEngine":
         from .sources.tables import read_table_if_exists
 
+        # a math_postings/ directory left by an older save is not read
         return cls(
-            spark,
-            load_index(spark, path),
-            read_table_if_exists(spark, f"{path}/math_postings"),
-            read_table_if_exists(spark, f"{path}/math_lr"),
+            spark, load_index(spark, path), read_table_if_exists(spark, f"{path}/math_lr")
         )
 
     def save(self, path: str) -> None:
-        """Index tables to ``path``; the math tables are PARTITIONED BY the
-        hash bucket of their probe key (subpath / leaf_seg), so a loaded
-        engine's keyed MNC probe prunes unrelated files at the storage
-        layer — the directory-per-subpath seek of the reference
-        (math-index/dir-merge.c:74-89) expressed as partition pruning.
+        """Index tables to ``path``, plus ``math_lr`` when the engine has
+        math: it is PARTITIONED BY the hash bucket of its probe key
+        (leaf_seg), so a loaded engine's keyed MNC probe prunes unrelated
+        files at the storage layer — the directory-per-subpath seek of the
+        reference (math-index/dir-merge.c:74-89) expressed as partition
+        pruning.
 
         Each bucket is ONE file (rows hash-partitioned by bucket first, not
         one file per writing task): without its native library, Hadoop runs
         two ``chmod`` children of the driver JVM per file a local write makes."""
-        from .math.index import LR_BUCKETS, MP_BUCKETS, bucket_col
+        from .math.index import LR_BUCKETS, bucket_col
 
         save_index(self.index, path)
-        for table, key, bucket, n_buckets, name in (
-            (self.math_postings, "subpath", "sp_bucket", MP_BUCKETS, "math_postings"),
-            (self.math_lr_postings, "leaf_seg", "lseg_bucket", LR_BUCKETS, "math_lr"),
-        ):
-            if table is not None:
-                table.withColumn(bucket, bucket_col(key, n_buckets)).repartition(
-                    bucket
-                ).write.mode("overwrite").partitionBy(bucket).parquet(f"{path}/{name}")
+        if self.math_lr_postings is not None:
+            self.math_lr_postings.withColumn(
+                "lseg_bucket", bucket_col("leaf_seg", LR_BUCKETS)
+            ).repartition("lseg_bucket").write.mode("overwrite").partitionBy(
+                "lseg_bucket"
+            ).parquet(f"{path}/math_lr")
 
     def warm(self, cache_budget_bytes: int | None = None) -> "SearchEngine":
         """Daemon-start warm-up (indices.c:128-178). With a budget: the
@@ -132,10 +127,9 @@ class SearchEngine:
     def query(self, qtext: str, mode: str = "or", k: int = S.RANK_K, **kw) -> DataFrame:
         """Ranked hits; routes mixed term+math queries automatically."""
         _, texes = split_query(qtext)
-        if texes and self.math_postings is not None:
+        if texes and self.math_lr_postings is not None:
             return mixed_search(
-                self.spark, self.index, self.math_postings, qtext, mode=mode, k=k,
-                math_lr_postings=self.math_lr_postings, **kw,
+                self.spark, self.index, self.math_lr_postings, qtext, mode=mode, k=k, **kw
             )
         return search(self.spark, self.index, qtext, mode=mode, k=k, **kw)
 
@@ -247,7 +241,7 @@ class SearchEngine:
             if err is not None:
                 out[i] = err
                 continue
-            if texes and self.math_postings is not None:
+            if texes and self.math_lr_postings is not None:
                 out[i] = self.query_json(qtext, page=page, mode=mode)
                 continue
             qid = f"q{i}"

@@ -1298,8 +1298,8 @@ FROM base WHERE t = 0"""
 
 
 def _mx_mixed_query(qtext: str):
-    """Q11+Q21 mixed total through mixed_search with the DEFAULT (MNC)
-    math scoring + expression-position proximity: total = prox +
+    """Q11+Q21 mixed total through mixed_search (MNC math scoring over
+    the lr table) + expression-position proximity: total = prox +
     (1+max_math)/2*bm25 + 10000*(match_dim + [max_math>0])
     (search/search.c:253-274). Every template doc tokenizes to exactly
     (see, math_exp, and, math_exp, end), so doclen=avgdl=5, the term side
@@ -1308,7 +1308,7 @@ def _mx_mixed_query(qtext: str):
     expression is closed-form too (search/search.c:215-237)."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .math.index import build_math_index, build_math_lr_index
+        from .math.index import build_math_lr_index
         from .math.search import mixed_search
 
         docs = _math_docs(spark, sf_dir).select(
@@ -1317,11 +1317,9 @@ def _mx_mixed_query(qtext: str):
             "doc_id",
         )
         idx = build_index(spark, docs, id_col="doc_id")
-        mp = build_math_index(docs)
         lr = build_math_lr_index(docs)
         res = mixed_search(
-            spark, idx, mp, qtext, k=S.RANK_K + 64, math_lr_postings=lr,
-            lr_doc_partitioned=True,
+            spark, idx, lr, qtext, k=S.RANK_K + 64, lr_doc_partitioned=True
         )
         rounded = res.select(
             F.col("doc_id").cast("long").alias("doc_id"),

@@ -1,18 +1,21 @@
-"""Math index build: documents -> subpath posting table (reference
-math-index/ role).
+"""Math index build: documents -> math tables (reference math-index/ role).
 
-The reference materializes one filesystem directory per subpath with packed
-{exp_id, doc_id, pathinfo} records (math-index/math-posting.h:10-32,
-math-index.c:103-151). Set-oriented re-expression: one table
+The reference keeps ONE math index: a filesystem directory per subpath with
+packed {exp_id, doc_id, pathinfo} records (math-index/math-posting.h:10-32,
+math-index.c:103-151), and MNC scores from that pathinfo
+(search/mnc-score.c:264-330). Its set-oriented twin here is the ordered
+leaf-root path table ``build_math_lr_index`` -> ``math_lr``, the engine's
+only math index: ``SearchEngine`` builds, saves, loads and scores it.
 
-  math_postings(subpath STRING, is_gener BOOLEAN, doc_id LONG,
-                exp_id INT, n_paths INT)
+``build_math_index`` -> ``math_postings(subpath, is_gener, doc_id, exp_id,
+n_paths, exp_pos)`` is the subpath-set table of the standalone Q19 subpath
+operator (``search.math_expr_scores``); no engine build or save writes it.
 
-partitionable by bucket(subpath) at scale — the subpath string IS the
-directory key. Extraction mirrors the tokenizer's math-slice semantics
-(complete [imath]..[/imath] spans; everything after an unterminated open
-tag is swallowed); parse failures skip the expression like the reference's
-n_parse_err counter (indexer/index.c:82-94).
+Extraction mirrors the tokenizer's math-slice semantics (complete
+[imath]..[/imath] spans; everything after an unterminated open tag is
+swallowed); parse failures skip the expression like the reference's
+n_parse_err counter (indexer/index.c:82-94). A page with no span yields no
+rows and is never tokenized.
 """
 
 from __future__ import annotations
@@ -81,7 +84,7 @@ MATH_LR_SCHEMA = StructType(
         # matches doc paths sharing its leaf-anchored FIRST segment, a
         # wildcard (root-anchored suffix) matches doc paths sharing its
         # LAST segment — so MNC candidate generation is an equi-join probe,
-        # never a corpus scan (see search._mnc_per_exp)
+        # never a corpus scan (see search.mnc_expr_scores)
         StructField("leaf_seg", StringType(), False),  # first '/'-segment of struct
         StructField("root_seg", StringType(), False),  # last '/'-segment of struct
     ]
@@ -137,52 +140,56 @@ def _math_exp_positions_memo(text: str) -> list[int]:
     return hit
 
 
+def _lr_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """build_math_lr_index's kernel. A page's spans are found before it is
+    tokenized for their positions, so a page without math costs one
+    substring search."""
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        rows = {"doc_id": [], "exp_id": [], "struct": [], "symbol": [], "path_id": [], "n_lr": [], "exp_pos": [], "leaf_seg": [], "root_seg": []}
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            if not isinstance(text, str):
+                continue
+            texes = extract_math_spans(text)
+            if not texes:
+                continue
+            mpos = _math_exp_positions_memo(text)
+            for exp_id, tex in enumerate(texes):
+                paths = _lr_paths_cached(tex)
+                for pid, (struct, symbol) in enumerate(paths, start=1):
+                    segs = struct.split("/")
+                    rows["doc_id"].append(doc_id)
+                    rows["exp_id"].append(exp_id)
+                    rows["struct"].append(struct)
+                    rows["symbol"].append(symbol)
+                    rows["path_id"].append(pid)
+                    rows["n_lr"].append(len(paths))
+                    rows["exp_pos"].append(mpos[exp_id])
+                    rows["leaf_seg"].append(segs[0])
+                    rows["root_seg"].append(segs[-1])
+        yield pd.DataFrame(rows)
+
+
 def build_math_lr_index(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> ordered leaf-root path table for MNC scoring.
 
     One row per LEAF per expression (the reference's pathinfo records,
     math-index/math-posting.h:10-32): positions become MNC path_ids.
-    Narrow Arrow pass like build_math_index.
+    Narrow Arrow pass, no shuffle.
     """
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = {"doc_id": [], "exp_id": [], "struct": [], "symbol": [], "path_id": [], "n_lr": [], "exp_pos": [], "leaf_seg": [], "root_seg": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):
-                    continue
-                mpos = _math_exp_positions_memo(text)
-                for exp_id, tex in enumerate(extract_math_spans(text)):
-                    paths = _lr_paths_cached(tex)
-                    for pid, (struct, symbol) in enumerate(paths, start=1):
-                        segs = struct.split("/")
-                        rows["doc_id"].append(doc_id)
-                        rows["exp_id"].append(exp_id)
-                        rows["struct"].append(struct)
-                        rows["symbol"].append(symbol)
-                        rows["path_id"].append(pid)
-                        rows["n_lr"].append(len(paths))
-                        rows["exp_pos"].append(mpos[exp_id])
-                        rows["leaf_seg"].append(segs[0])
-                        rows["root_seg"].append(segs[-1])
-            yield pd.DataFrame(rows)
-
-    return docs.select("doc_id", "text").mapInPandas(extract, MATH_LR_SCHEMA)
+    return docs.select("doc_id", "text").mapInPandas(_lr_rows, MATH_LR_SCHEMA)
 
 
-# Storage bucketing of the math tables by their PROBE key (the twin of the
+# Storage bucketing of the saved lr table by its PROBE key (the twin of the
 # reference's one-directory-per-subpath layout, math-index/dir-merge.c:74-89
-# seeks only the query's directories): the lr table partitions by a hash
-# bucket of leaf_seg (the concrete-path equi-join key), math_postings by a
-# hash bucket of subpath. Query time pre-filters the bucket column with the
-# query's own bucket set -> partition pruning skips every unrelated file at
-# the storage layer. CRC32 is used because Spark (F.crc32) and Python
-# (zlib.crc32) implement the same polynomial, so the driver can compute a
-# query path's bucket without a JVM round-trip.
+# seeks only the query's directories): math_lr partitions by a hash bucket
+# of leaf_seg (the concrete-path equi-join key). Query time pre-filters the
+# bucket column with the query's own bucket set -> partition pruning skips
+# every unrelated file at the storage layer. CRC32 is used because Spark
+# (F.crc32) and Python (zlib.crc32) implement the same polynomial, so the
+# driver can compute a query path's bucket without a JVM round-trip.
 LR_BUCKETS = 64
-MP_BUCKETS = 64
 
 
 def bucket_col(col: str, n_buckets: int) -> F.Column:
@@ -196,7 +203,9 @@ def bucket_of(value: str, n_buckets: int) -> int:
 
 
 def build_math_index(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) -> math_postings. Narrow Arrow pass, no shuffle."""
+    """(doc_id, text) -> math_postings, the table of the standalone
+    subpath operator (search.math_expr_scores). Narrow Arrow pass, no
+    shuffle."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -206,8 +215,11 @@ def build_math_index(docs: DataFrame) -> DataFrame:
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if not isinstance(text, str):
                     continue
+                texes = extract_math_spans(text)
+                if not texes:
+                    continue
                 mpos = _math_exp_positions_memo(text)
-                for exp_id, tex in enumerate(extract_math_spans(text)):
+                for exp_id, tex in enumerate(texes):
                     paths = _subpaths_cached(tex)
                     for p, g in paths:
                         rows["subpath"].append(p)

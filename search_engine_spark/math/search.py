@@ -6,26 +6,26 @@ MNC bipartite match, keep each doc's max expression score, then feed those
 transient postings into the top-level OR merge beside the term postings
 (search/math-expr-search.c:150-264, math-search.c:117-209, search.c:120-135).
 
-Two scoring paths, both set-oriented:
+Mixed queries score math with MNC mark-and-cross over the engine's one
+math index, the leaf-root path table ``math_lr`` (reference
+search/mnc-score.c:264-330): prefix/suffix-match the ordered query paths
+against the lr table with keyed broadcast joins, AND-merge candidates
+(every query path matched, n_lr >= n_q), then run the bitmap
+mark-and-cross per candidate expression inside mapInPandas — the
+quadratic-ish loop only ever touches the candidate tail, never the corpus.
+Exact match scores 100*n_q (normalized to 1.0 in mixed totals).
 
-- **MNC mark-and-cross** (the DEFAULT for mixed queries when the leaf-root
-  path table is available; reference search/mnc-score.c:264-330): broadcast
-  the ordered query-path frame, prefix/suffix-match it against the lr path
-  table, AND-merge candidates (every query path matched, n_lr >= n_q), then
-  run the bitmap mark-and-cross per candidate expression inside
-  applyInPandas — the quadratic-ish loop only ever touches the candidate
-  tail, never the corpus. Exact match scores 100*n_q (normalized to 1.0 in
-  mixed totals).
-- **Containment similarity** (MNC-lite fallback over the subpath-set table
-  when no lr table is given): concrete subpath matches weigh 2, gener
-  (alpha-equivalent) matches weigh 1, scaled by an expression-size symmetry
-  penalty — a pure column aggregate.
-
-Reference read guards (hostile-query robustness): at most
-``MAX_MATH_LISTS`` = 512 subpath posting lists merge per TEX keyword
-(search/config.h:10 MAX_MERGE_POSTINGS role) and at most
-``MAX_MATH_ITEMS_PER_LIST`` = 301000 items are read per list
-(search/config.h:43 role); both truncations are deterministic.
+The standalone Q19 subpath operator (``math_expr_scores``) scores
+containment similarity over the subpath-set table of
+``index.build_math_index``: concrete subpath matches weigh 2, gener
+(alpha-equivalent) matches weigh 1, scaled by an expression-size symmetry
+penalty — a pure column aggregate. Only that operator reads the subpath
+table, and only it is bound by the reference read guards
+(hostile-query robustness): at most ``MAX_MATH_LISTS`` = 512 subpath
+posting lists merge per TEX keyword (search/config.h:10
+MAX_MERGE_POSTINGS role) and at most ``MAX_MATH_ITEMS_PER_LIST`` = 301000
+items are read per list (search/config.h:43 role); both truncations are
+deterministic.
 
 Mixed total score is the reference formula verbatim (search/search.c:253-274):
   total = prox + (1 + max_math)/2 * bm25 + 10000 * (match_dim + [max_math>0])
@@ -47,7 +47,7 @@ from ..plans import serve
 from ..plans.build import InvertedIndex
 from ..plans.query import digest_query, top_k
 from .index import extract_math_spans
-from .texparse import tex_subpaths
+from .texparse import tex_lr_paths, tex_subpaths
 
 MAX_MATH_LISTS = 512  # search/config.h:10 — max posting lists per dir-merge
 MAX_MATH_ITEMS_PER_LIST = 301_000  # search/config.h:43 — read cap per list
@@ -74,14 +74,6 @@ def _containment_per_exp(
         [(p, g, 2.0 if not g else 1.0) for p, g in qpaths],
         "subpath string, is_gener boolean, w double",
     )
-    if "sp_bucket" in math_postings.columns:
-        # storage-partitioned table (engine.save): pre-filter the query
-        # subpaths' bucket set -> partition pruning skips unrelated files
-        # (the reference opens only the query's subpath directories)
-        from .index import MP_BUCKETS, bucket_of
-
-        bset = sorted({bucket_of(p, MP_BUCKETS) for p, _ in qpaths})
-        math_postings = math_postings.where(F.col("sp_bucket").isin(bset))
     matched = math_postings.join(F.broadcast(qdf), ["subpath", "is_gener"])
     if max_items_per_list is not None:
         # reference read cap: each subpath "directory" yields at most N
@@ -112,34 +104,29 @@ def math_expr_scores(spark: SparkSession, math_postings: DataFrame, tex: str) ->
     return pe.groupBy("doc_id").agg(F.max("sim").alias("math_score"))
 
 
-def _mnc_per_exp(
+_MNC_SCHEMA = "doc_id long, mnc_score long, exp_pos_list array<int>"
+
+
+def mnc_expr_scores(
     spark: SparkSession,
     lr_postings: DataFrame,
     tex: str,
-    per_doc: bool = False,
     assume_doc_partitioned: bool = False,
-) -> DataFrame | None:
+) -> DataFrame:
     """Reference-fidelity expression ranking: the MNC mark-and-cross score
     (search/mnc-score.c, math-expr-search.c:280-360) over the ordered
     leaf-root path table (build_math_lr_index).
 
-    Dataflow: broadcast the (tiny, sorted) query-path frame; a nested-loop
-    prefix/suffix match generates per-(doc,exp) relevance rows; candidates
+    Returns (doc_id, mnc_score, exp_pos_list): one row per doc with at
+    least one positive-score expression, its max expression score and the
+    token positions of those expressions (empty for an empty query).
+
+    Dataflow: broadcast the (tiny, sorted) query-path frame; a keyed
+    prefix/suffix probe generates per-(doc,exp) relevance rows; candidates
     must match EVERY distinct query structure (the reference's AND dir
     merge) and satisfy n_qry <= n_doc paths; the bitmap mark-and-cross then
-    runs per candidate expression inside applyInPandas — the quadratic-ish
-    loop only ever touches the candidate tail, never the corpus.
-
-    Returns (doc_id, exp_id, mnc_score, exp_pos) or None for an empty query.
-
-    ``per_doc``: aggregate inside the scoring kernel instead of a downstream
-    groupBy — the stream is hash-partitioned by doc_id ONLY (every exp of a
-    doc in one partition, sorted (doc_id, exp_id) so groups still stream)
-    and each doc emits ONE row (doc_id, mnc_score = max over its
-    positive-score expressions, exp_pos_list = their positions). Removes the
-    per-doc aggregation exchange both mnc_expr_scores and mixed_search paid
-    after the kernel (guide §2.4); zero-score docs emit nothing, exactly
-    like the former ``where(mnc_score > 0)`` + groupBy.
+    runs per candidate expression in one mapInPandas pass, which also takes
+    each doc's max — no aggregation exchange after the kernel.
 
     ``assume_doc_partitioned``: the lr table came STRAIGHT from the narrow
     ``build_math_lr_index`` pass (mapInPandas over the docs frame), so every
@@ -154,11 +141,10 @@ def _mnc_per_exp(
     partial rows per doc.
     """
     from .mnc import order_query_paths
-    from .texparse import tex_lr_paths
 
     qpaths = tex_lr_paths(tex)
     if not qpaths:
-        return None
+        return spark.createDataFrame([], _MNC_SCHEMA)
     q_sorted = order_query_paths(qpaths)
     n_q = len(q_sorted)
 
@@ -232,79 +218,17 @@ def _mnc_per_exp(
         matched = matched.unionByName(b.select(*out_cols))
     qlist = list(q_sorted)
 
-    # ONE exchange, ONE Python pass: the former chain (countDistinct(q_ord)
-    # agg -> join back -> per-(doc,exp) applyInPandas) shuffled the matched
-    # rows three times and invoked Python once per candidate EXPRESSION —
-    # thousands of micro-groups, each building a 1-row pandas frame
-    # (measured 5.3-7.1s for a 5k-doc template corpus). Here the matched
-    # rows are hash-partitioned by (doc_id, exp_id) once and SORTED WITHIN
-    # the partition on that key, so the kernel processes groups
-    # STREAMINGLY: it holds one candidate expression's rows at a time and
-    # flushes completed groups between Arrow batches — worst-case task
-    # memory is max-group-size, never whole-partition-size (a hostile
+    # ONE exchange, ONE Python pass: the matched rows are hash-partitioned
+    # by doc_id (every expression of a doc in one partition) and SORTED
+    # WITHIN the partition on (doc_id, exp_id), so the kernel walks
+    # candidate expressions STREAMINGLY: it holds one expression's rows at
+    # a time and flushes finished docs between Arrow batches — worst-case
+    # task memory is max-group-size, never whole-partition-size (a hostile
     # corpus slice matching one query path cannot OOM the scorer). Each
-    # surviving group still runs the AND-merge predicate (all n_q distinct
-    # query paths present) and the mark-and-cross bitmap.
-    def score_part(batches):
-        cur_key = None
-        cur_rows: list = []
-        out_d, out_e, out_s, out_p = [], [], [], []
-
-        def _flush_group():
-            if cur_key is None or not cur_rows:
-                return
-            rws = cur_rows
-            if len({r[7] for r in rws}) != n_q:
-                return  # AND merge: every query path must match
-            # dedup by path_id in path order (a doc path can satisfy
-            # several query paths); n_lr carries the true expression size
-            seen = set()
-            dedup = []
-            for r in sorted(rws, key=lambda x: x[4]):
-                if r[4] in seen:
-                    continue
-                seen.add(r[4])
-                dedup.append((r[2], r[3], int(r[4])))
-            out_d.append(cur_key[0])
-            out_e.append(cur_key[1])
-            out_s.append(_mnc_sim_sparse(qlist, dedup, int(rws[0][5])))
-            out_p.append(int(rws[0][6]))
-
-        for pdf in batches:
-            for row in zip(
-                pdf["doc_id"].to_numpy(),
-                pdf["exp_id"].to_numpy(),
-                pdf["struct"],
-                pdf["symbol"],
-                pdf["path_id"].to_numpy(),
-                pdf["n_lr"].to_numpy(),
-                pdf["exp_pos"].to_numpy(),
-                pdf["q_ord"].to_numpy(),
-            ):
-                key = (int(row[0]), int(row[1]))
-                if key != cur_key:
-                    _flush_group()
-                    cur_key, cur_rows = key, []
-                cur_rows.append(row)
-            if out_d and len(out_d) >= 4096:
-                yield pd.DataFrame(
-                    {"doc_id": out_d, "exp_id": out_e, "mnc_score": out_s, "exp_pos": out_p}
-                )
-                out_d, out_e, out_s, out_p = [], [], [], []
-        _flush_group()
-        if out_d:
-            yield pd.DataFrame(
-                {"doc_id": out_d, "exp_id": out_e, "mnc_score": out_s, "exp_pos": out_p}
-            )
-
-    def score_doc_part(batches):
-        """per_doc mode: same streaming group walk, but doc-level rows out.
-
-        The stream is partitioned by doc_id and sorted (doc_id, exp_id), so
-        a doc's expression groups are contiguous; only docs with at least
-        one positive-score expression emit (max score + the positive
-        expressions' positions), which is exactly the former
-        where(mnc_score > 0) + groupBy(doc_id) result."""
+    # group runs the AND-merge predicate (all n_q distinct query paths
+    # present) and the mark-and-cross bitmap; only docs with a
+    # positive-score expression emit.
+    def score_docs(batches):
         cur_key = None
         cur_rows: list = []
         cur_doc = None
@@ -327,6 +251,8 @@ def _mnc_per_exp(
             rws = cur_rows
             if len({r[7] for r in rws}) != n_q:
                 return  # AND merge: every query path must match
+            # dedup by path_id in path order (a doc path can satisfy
+            # several query paths); n_lr carries the true expression size
             seen = set()
             dedup = []
             for r in sorted(rws, key=lambda x: x[4]):
@@ -372,51 +298,16 @@ def _mnc_per_exp(
                 {"doc_id": out_d, "mnc_score": out_s, "exp_pos_list": out_p}
             )
 
-    npart = spark.sparkContext.defaultParallelism
     skip_exchange = (
         assume_doc_partitioned
         and len(branches) == 1
         and "lseg_bucket" not in lr_postings.columns
     )
-    if per_doc:
-        arranged = (
-            matched
-            if skip_exchange
-            else matched.repartition(npart, "doc_id")
-        ).sortWithinPartitions("doc_id", "exp_id")
-        return arranged.mapInPandas(
-            score_doc_part,
-            "doc_id long, mnc_score long, exp_pos_list array<int>",
-        )
-    arranged = (
-        matched
-        if skip_exchange
-        else matched.repartition(npart, "doc_id", "exp_id")
-    ).sortWithinPartitions("doc_id", "exp_id")
-    return arranged.mapInPandas(
-        score_part, "doc_id long, exp_id int, mnc_score long, exp_pos int"
+    if not skip_exchange:
+        matched = matched.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    return matched.sortWithinPartitions("doc_id", "exp_id").mapInPandas(
+        score_docs, _MNC_SCHEMA
     )
-
-
-def mnc_expr_scores(
-    spark: SparkSession,
-    lr_postings: DataFrame,
-    tex: str,
-    assume_doc_partitioned: bool = False,
-) -> DataFrame:
-    """(doc_id, mnc_score) with the per-doc max MNC expression score.
-
-    The per-doc max comes out of the scoring kernel itself (per_doc mode) —
-    no aggregation exchange after the kernel. ``assume_doc_partitioned``:
-    see _mnc_per_exp (skips the pre-kernel exchange for an inline-built lr
-    table)."""
-    pe = _mnc_per_exp(
-        spark, lr_postings, tex, per_doc=True,
-        assume_doc_partitioned=assume_doc_partitioned,
-    )
-    if pe is None:
-        return spark.createDataFrame([], "doc_id long, mnc_score long")
-    return pe.select("doc_id", "mnc_score")
 
 
 def _mnc_sim_sparse(q_sorted, doc_rows, n_d: int) -> int:
@@ -496,28 +387,23 @@ _MATH_COLS = ["doc_id", "kw_idx", "math_score", "_mpos"]
 def mixed_search(
     spark: SparkSession,
     index: InvertedIndex,
-    math_postings: DataFrame,
+    math_lr_postings: DataFrame,
     qtext: str,
     mode: str = "or",
     k: int = S.RANK_K,
     with_prox: bool = True,
-    math_lr_postings: DataFrame | None = None,
     broadcast_budget_bytes: int = MAX_BROADCAST_MATH_BYTES,
     lr_doc_partitioned: bool = False,
 ) -> DataFrame:
     """Full mixed term+math query -> top-k
     (doc_id, bm25, match_dim, max_math, prox, score).
 
-    Math scoring: with ``math_lr_postings`` (build_math_lr_index output)
-    the math component IS the reference MNC mark-and-cross ranking
-    (search/mnc-score.c:264-330), normalized so an exact expression match
-    scores 1.0 (= 100*n_q raw). Without the lr table the containment
-    similarity is the fallback. The round-2 containment-pre-rank + left-
-    semi restriction is GONE: containment requires an exact (subpath,
-    is_gener) overlap while MNC matches leaf-anchored prefixes, so the
-    pre-rank dropped docs whose expressions strictly extend every query
-    subpath (e.g. query \\frac{a}{b} vs doc \\frac{a}{b}+c); MNC's own
-    n_lr >= n_q + AND dir-merge pruning bounds the candidate tail instead.
+    Math scoring: the math component IS the reference MNC mark-and-cross
+    ranking (search/mnc-score.c:264-330) over ``math_lr_postings``
+    (build_math_lr_index output), normalized so an exact expression match
+    scores 1.0 (= 100*n_q raw). MNC's own n_lr >= n_q + AND dir-merge
+    pruning bounds the candidate tail. ``lr_doc_partitioned``: see
+    ``mnc_expr_scores``'s ``assume_doc_partitioned``.
 
     Proximity: matched expression positions join the term positions as one
     extra keyword per TEX keyword (reference search/search.c:215-237) — a
@@ -532,6 +418,9 @@ def mixed_search(
     the term side pays ZERO shuffle (_mixed_shard_search); otherwise each
     math candidate is routed to the shard that owns its doc id
     (_mixed_routed_search), which is also how a math-only query is scored.
+    On ONE serving shard either kernel sees every block of each query term,
+    so it takes term idf from the blocks' ``n`` counts (serve._block_idf)
+    and no df lookup runs; past one shard idf comes from serve.df_lookup.
     A routed query with term keywords comes back as its collected top-k
     in a local frame: its persisted per-TeX frames are freed before the
     return, so the caller has nothing to release.
@@ -542,40 +431,17 @@ def mixed_search(
     # per-TEX-keyword per-doc frames: (doc_id, kw_idx, math_score, [exp_pos...])
     per_tex: list[DataFrame] = []
     for ti, tex in enumerate(texes):
-        kw_idx = F.lit(n_terms + ti).alias("kw_idx")
-        if math_lr_postings is not None:
-            from .texparse import tex_lr_paths
-
-            n_q = len(tex_lr_paths(tex))
-            if n_q == 0:
-                continue
-            # per_doc kernel mode: the per-doc max + matched positions come
-            # out of the scoring kernel — no groupBy exchange here
-            pe = _mnc_per_exp(
-                spark, math_lr_postings, tex, per_doc=True,
-                assume_doc_partitioned=lr_doc_partitioned,
-            )
-            if pe is None:
-                continue
-            mdf = pe.select(
-                "doc_id",
-                kw_idx,
-                (F.col("mnc_score") / F.lit(100.0 * n_q)).alias("math_score"),
-                F.col("exp_pos_list").alias("_mpos"),
-            )
-        else:
-            pe = _containment_per_exp(spark, math_postings, tex)
-            if pe is None:
-                continue
-            mdf = (
-                pe.where(F.col("sim") > 0)
-                .groupBy("doc_id")
-                .agg(
-                    F.max("sim").alias("math_score"),
-                    F.collect_list("exp_pos").alias("_mpos"),
-                )
-                .select("doc_id", kw_idx, "math_score", "_mpos")
-            )
+        n_q = len(tex_lr_paths(tex))
+        if n_q == 0:
+            continue
+        mdf = mnc_expr_scores(
+            spark, math_lr_postings, tex, assume_doc_partitioned=lr_doc_partitioned
+        ).select(
+            "doc_id",
+            F.lit(n_terms + ti).alias("kw_idx"),
+            (F.col("mnc_score") / F.lit(100.0 * n_q)).alias("math_score"),
+            F.col("exp_pos_list").alias("_mpos"),
+        )
         if terms:
             # the byte-budget measurement job and the collect (or the routed
             # plan) then share one evaluation
@@ -584,13 +450,17 @@ def mixed_search(
 
     if not terms and not per_tex:
         return spark.createDataFrame([], _MIXED_SCHEMA)
+    serving, n_shards = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
     kws = []
     if terms:
-        dfmap = serve.df_lookup(index, terms)
-        kws = [
-            (i, t, S.idf(dfmap.get(t, 0.0), float(index.docN)))
-            for i, t in enumerate(terms)
-        ]
+        if n_shards <= 1:
+            kws = [(i, t, None) for i, t in enumerate(terms)]  # idf from the blocks
+        else:
+            dfmap = serve.df_lookup(index, terms)
+            kws = [
+                (i, t, S.idf(dfmap.get(t, 0.0), float(index.docN)))
+                for i, t in enumerate(terms)
+            ]
         # byte-budget the candidate payload IN-PLAN (count + position
         # volume over the cached frames) BEFORE collecting anything; only a
         # payload that provably fits is materialized for the broadcast
@@ -607,9 +477,11 @@ def mixed_search(
             minfo = _minfo(r for mdf in per_tex for r in mdf.collect())
             for mdf in per_tex:
                 mdf.unpersist()
-            return _mixed_shard_search(spark, index, kws, mode, minfo, k, with_prox)
+            return _mixed_shard_search(
+                spark, index, serving, kws, mode, minfo, k, with_prox
+            )
 
-    out = _mixed_routed_search(spark, index, kws, mode, per_tex, k, with_prox)
+    out = _mixed_routed_search(spark, index, serving, kws, mode, per_tex, k, with_prox)
     if not terms:
         return out
     # the routed plan reads the persisted per-tex frames: collect its <= k
@@ -681,10 +553,15 @@ def _solo_frame(minfo: dict[int, list], with_prox: bool, skip=frozenset()) -> pd
     return pd.DataFrame(rows, columns=_MIXED_COLS).astype(_MIXED_DTYPES)
 
 
-def _score_shard(batches, kws, mode, k, with_prox, avgdl, channel) -> pd.DataFrame | None:
+def _score_shard(batches, kws, mode, k, with_prox, avgdl, docN, channel) -> pd.DataFrame | None:
     """One shard's term blocks + math channel -> its local top-k plus every
-    term-matched math doc (the serving scorer), or None without term hits."""
-    decoded = serve._decode_partition(batches, want_pos=with_prox)
+    term-matched math doc (the serving scorer), or None without term hits.
+    Keywords without an idf (one serving shard: these blocks are every
+    block of each term) take it from the blocks' ``n`` counts."""
+    pdfs = [pdf for pdf in batches if not pdf.empty]
+    if any(idf is None for _, _, idf in kws):
+        [(_, kws, _)] = serve._block_idf([("q", kws, mode)], pdfs, docN)
+    decoded = serve._decode_partition(pdfs, want_pos=with_prox)
     if not decoded:
         return None
     for _, res in serve._batch_score_shard(
@@ -707,7 +584,8 @@ def _score_shard(batches, kws, mode, k, with_prox, avgdl, channel) -> pd.DataFra
 def _mixed_shard_search(
     spark: SparkSession,
     index: InvertedIndex,
-    kws: list[tuple[int, str, float]],
+    serving: DataFrame,
+    kws: list[tuple[int, str, float | None]],
     mode: str,
     minfo: dict[int, list],
     k: int,
@@ -728,13 +606,12 @@ def _mixed_shard_search(
     mode='and' keeps reference semantics (all term keywords required; math
     optional) so no math-only branch applies.
     """
-    avgdl = float(index.avgdl)
+    avgdl, docN = float(index.avgdl), float(index.docN)
     bc = spark.sparkContext.broadcast(_math_channel(minfo))
-    serving, _ = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
     blocks = serving.filter(serve.sql_in("term", {t for _, t, _ in kws}))
 
     def kernel(batches):
-        out = _score_shard(batches, kws, mode, k, with_prox, avgdl, bc.value)
+        out = _score_shard(batches, kws, mode, k, with_prox, avgdl, docN, bc.value)
         if out is not None:
             yield out
 
@@ -755,7 +632,8 @@ def _mixed_shard_search(
 def _mixed_routed_search(
     spark: SparkSession,
     index: InvertedIndex,
-    kws: list[tuple[int, str, float]],
+    serving: DataFrame,
+    kws: list[tuple[int, str, float | None]],
     mode: str,
     per_tex: list[DataFrame],
     k: int,
@@ -776,7 +654,7 @@ def _mixed_routed_search(
     """
     from ..plans.cache import partition_doc_ranges, run_owner
 
-    avgdl = float(index.avgdl)
+    avgdl, docN = float(index.avgdl), float(index.docN)
     solo = mode != "and" or not kws
     math_rows = per_tex[0]
     for mdf in per_tex[1:]:
@@ -785,7 +663,7 @@ def _mixed_routed_search(
     def score(blocks: pd.DataFrame, mrows: pd.DataFrame) -> pd.DataFrame:
         minfo = _minfo(mrows[_MATH_COLS].itertuples(index=False, name=None))
         out = _score_shard(
-            [blocks], kws, mode, k, with_prox, avgdl, _math_channel(minfo)
+            [blocks], kws, mode, k, with_prox, avgdl, docN, _math_channel(minfo)
         )
         frames = [] if out is None else [out]
         if solo:
@@ -800,7 +678,6 @@ def _mixed_routed_search(
         )
         return top_k(local, k).select(*_MIXED_COLS)
 
-    serving, _ = serve.serving_coalesce(index.doc_blocks, docN=index.docN)
     blocks = serving.filter(serve.sql_in("term", {t for _, t, _ in kws}))
     # the runs of the query terms' blocks suffice: a math doc outside them
     # has no query-term posting and is scored math-only

@@ -56,8 +56,8 @@ def test_engine_build_save_load_math(spark, tmp_path):
 
 
 def test_loaded_math_lr_probe_prunes_partitions(spark, tmp_path):
-    """engine.save partitions the math tables by the probe key's hash
-    bucket; a loaded engine's MNC candidate scan must carry the bucket
+    """engine.save partitions math_lr by the probe key's hash bucket; a
+    loaded engine's MNC candidate scan must carry the bucket
     filter (partition pruning — the directory-per-subpath seek of
     math-index/dir-merge.c:74-89) and return the same hits as the unsaved
     engine."""
@@ -73,7 +73,6 @@ def test_loaded_math_lr_probe_prunes_partitions(spark, tmp_path):
     eng.save(path)
     eng2 = SearchEngine.load(spark, path)
     assert "lseg_bucket" in eng2.math_lr_postings.columns
-    assert "sp_bucket" in eng2.math_postings.columns
 
     q = "formula [imath]\\frac{a}{b_{3}}[/imath]"
     fresh = [(r["doc_id"], round(r["score"], 6)) for r in eng.query(q).collect()]
@@ -85,9 +84,9 @@ def test_loaded_math_lr_probe_prunes_partitions(spark, tmp_path):
     assert [(r["doc_id"], round(r["score"], 6)) for r in claimed] == fresh
 
     # plan-level check: the lr scan is partition-pruned by the bucket set
-    from search_engine_spark.math.search import _mnc_per_exp
+    from search_engine_spark.math.search import mnc_expr_scores
 
-    pe = _mnc_per_exp(spark, eng2.math_lr_postings, "\\frac{a}{b_{3}}")
+    pe = mnc_expr_scores(spark, eng2.math_lr_postings, "\\frac{a}{b_{3}}")
     plan = pe._jdf.queryExecution().executedPlan().toString()
     assert "lseg_bucket" in plan  # the bucket filter reached the scan
 
@@ -110,28 +109,50 @@ def saved_math_engine(spark, tmp_path_factory):
 
 def test_saved_index_holds_only_underived_tables(spark, saved_math_engine, tmp_path):
     """save_index writes the blocks, the docstore and the scalars row and
-    nothing the blocks re-derive; SearchEngine.save adds the math tables."""
+    nothing the blocks re-derive; SearchEngine.save adds the one math
+    table, math_lr."""
     from search_engine_spark.plans.build import save_index
 
     eng, path = saved_math_engine
     save_index(eng.index, str(tmp_path / "plain"))
     assert set(os.listdir(tmp_path / "plain")) == {"doc_blocks", "docstore", "stats"}
-    assert set(os.listdir(path)) == {
-        "doc_blocks", "docstore", "stats", "math_postings", "math_lr"
-    }
+    assert set(os.listdir(path)) == {"doc_blocks", "docstore", "stats", "math_lr"}
 
 
 def test_saved_math_tables_hold_one_file_per_bucket(spark, saved_math_engine):
-    """Each bucket directory of a saved math table is one Parquet file,
-    whatever the number of tasks that computed the table."""
+    """Each bucket directory of the saved math_lr table is one Parquet
+    file, whatever the number of tasks that computed the table."""
     eng, path = saved_math_engine
     assert eng.index.docstore.rdd.getNumPartitions() > 1
-    for table in ("math_postings", "math_lr"):
-        buckets = [d for d in os.listdir(f"{path}/{table}") if "=" in d]
-        assert buckets
-        for d in buckets:
-            parts = [f for f in os.listdir(f"{path}/{table}/{d}") if f.endswith(".parquet")]
-            assert len(parts) == 1, (table, d, parts)
+    buckets = [d for d in os.listdir(f"{path}/math_lr") if "=" in d]
+    assert buckets
+    for d in buckets:
+        parts = [f for f in os.listdir(f"{path}/math_lr/{d}") if f.endswith(".parquet")]
+        assert len(parts) == 1, (d, parts)
+
+
+def test_save_with_math_postings_still_loads(spark, saved_math_engine, tmp_path):
+    """An index saved with the old subpath table beside math_lr loads, its
+    math_postings/ directory is not read, and it answers a mixed query as
+    a save without that directory does."""
+    import shutil
+
+    from search_engine_spark.math.index import bucket_col, build_math_index
+
+    eng, path = saved_math_engine
+    old = str(tmp_path / "old_save")
+    shutil.copytree(path, old)
+    build_math_index(eng.index.docstore).withColumn(
+        "sp_bucket", bucket_col("subpath", 64)
+    ).write.partitionBy("sp_bucket").parquet(f"{old}/math_postings")
+
+    loaded = SearchEngine.load(spark, old)
+    assert not hasattr(loaded, "math_postings")
+    q = "relation [imath]E=mc^2[/imath]"
+    want = [(r["doc_id"], round(r["score"], 9), r["max_math"])
+            for r in SearchEngine.load(spark, path).query(q).collect()]
+    got = [(r["doc_id"], round(r["score"], 9), r["max_math"]) for r in loaded.query(q).collect()]
+    assert got == want and any(m > 0 for _, _, m in want)
 
 
 def test_routed_mixed_query_leaves_nothing_persisted(spark, saved_math_engine):
@@ -149,12 +170,12 @@ def test_routed_mixed_query_leaves_nothing_persisted(spark, saved_math_engine):
 
 
 def test_load_math_tables_through_file_uri(spark, saved_math_engine):
-    """SearchEngine.load finds the math tables through Spark, so a file://
-    URI loads them as the plain path does and mixed queries keep math."""
+    """SearchEngine.load finds math_lr through Spark, so a file:// URI
+    loads it as the plain path does and mixed queries keep math."""
     _, path = saved_math_engine
     plain = SearchEngine.load(spark, path)
     uri = SearchEngine.load(spark, "file://" + os.path.abspath(path))
-    assert uri.math_postings is not None and uri.math_lr_postings is not None
+    assert uri.math_lr_postings is not None
     q = "relation [imath]E=mc^2[/imath]"
     want = [(r["doc_id"], round(r["score"], 9), r["max_math"]) for r in plain.query(q).collect()]
     got = [(r["doc_id"], round(r["score"], 9), r["max_math"]) for r in uri.query(q).collect()]

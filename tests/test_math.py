@@ -1,7 +1,9 @@
 """Math index + expression search golden tests, modeled on the reference's
 tests/cases/math-rank suite (alpha-equivalence, commutativity,
 non-commutative fractions, wildcards): each case is a query plus docs in
-expected rank order (HIT lines) and docs that must not outrank them.
+expected rank order (HIT lines) and docs that must not outrank them. The
+mixed-query cases score with MNC over the lr table, the engine's one math
+index; the subpath-table cases cover the standalone Q19 operator.
 """
 
 from __future__ import annotations
@@ -9,7 +11,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from search_engine_spark.math.index import build_math_index, extract_math_spans
+from search_engine_spark.math.index import (
+    build_math_index,
+    build_math_lr_index,
+    extract_math_spans,
+)
 from search_engine_spark.math.search import math_expr_scores, mixed_search, split_query
 from search_engine_spark.math.texparse import tex_parse, tex_subpaths
 from search_engine_spark.plans.build import build_index
@@ -50,22 +56,26 @@ MATH_DOCS = [
 KEY_TO_ID = {k: i + 1 for i, (k, _) in enumerate(MATH_DOCS)}
 
 
-@pytest.fixture(scope="module")
-def math_setup(spark):
-    docs = spark.createDataFrame(
+def _math_docs(spark):
+    return spark.createDataFrame(
         [(i + 1, f"https://m.local/{i:04d}", t) for i, (_, t) in enumerate(MATH_DOCS)],
         "doc_id long, url string, text string",
     )
-    mp = build_math_index(docs).cache()
-    mp.count()
+
+
+@pytest.fixture(scope="module")
+def math_setup(spark):
+    docs = _math_docs(spark)
+    lr = build_math_lr_index(docs).cache()
+    lr.count()
     idx = build_index(spark, docs, id_col="doc_id")
     idx.doc_blocks.cache().count()
-    return idx, mp
+    return idx, lr
 
 
 def _ranking(spark, math_setup, qtex):
-    idx, mp = math_setup
-    res = mixed_search(spark, idx, mp, f"[imath]{qtex}[/imath]").collect()
+    idx, lr = math_setup
+    res = mixed_search(spark, idx, lr, f"[imath]{qtex}[/imath]").collect()
     return [(r["doc_id"], r["max_math"]) for r in res if r["max_math"] > 0]
 
 
@@ -98,8 +108,8 @@ def test_wildcard_case(spark, math_setup):
 
 
 def test_mixed_term_plus_math(spark, math_setup):
-    idx, mp = math_setup
-    res = mixed_search(spark, idx, mp, "frac [imath]\\frac{a}{b}[/imath]").collect()
+    idx, lr = math_setup
+    res = mixed_search(spark, idx, lr, "frac [imath]\\frac{a}{b}[/imath]").collect()
     top = res[0]
     # doc frac_ab matches both the term 'frac' and the expression:
     # match_dim = 1 (term) + 1 (math) => +20000
@@ -108,8 +118,8 @@ def test_mixed_term_plus_math(spark, math_setup):
     assert res[0]["max_math"] > res[1]["max_math"] or res[0]["score"] > res[1]["score"]
 
 
-def test_math_only_doc_scoring(spark, math_setup):
-    idx, mp = math_setup
+def test_math_only_doc_scoring(spark):
+    mp = build_math_index(_math_docs(spark))
     scores = math_expr_scores(spark, mp, "x^2=y").collect()
     best = max(scores, key=lambda r: r["math_score"])
     assert best["doc_id"] == KEY_TO_ID["unrelated"]
@@ -128,21 +138,11 @@ def test_split_query():
 
 
 def test_mixed_search_mnc_rerank(spark, math_setup):
-    """math_lr_postings switches the math component to the MNC fidelity
-    score: exact expression match normalizes to max_math == 1.0 and the
-    commutative twin stays tied (mark-and-cross is order-free on ADD)."""
-    from search_engine_spark.math.index import build_math_lr_index
-    from search_engine_spark.math.search import mixed_search
-
-    idx, mp = math_setup
-    docs = spark.createDataFrame(
-        [(i + 1, f"https://m.local/{i:04d}", t) for i, (_, t) in enumerate(MATH_DOCS)],
-        "doc_id long, url string, text string",
-    )
-    lr = build_math_lr_index(docs).cache()
-    res = mixed_search(
-        spark, idx, mp, "[imath]a+\\frac 1 a[/imath]", math_lr_postings=lr
-    ).collect()
+    """The math component is the MNC fidelity score: exact expression
+    match normalizes to max_math == 1.0 and the commutative twin stays tied
+    (mark-and-cross is order-free on ADD)."""
+    idx, lr = math_setup
+    res = mixed_search(spark, idx, lr, "[imath]a+\\frac 1 a[/imath]").collect()
     scores = {r["doc_id"]: r["max_math"] for r in res if r["max_math"] > 0}
     assert scores[KEY_TO_ID["exact"]] == 1.0
     assert scores[KEY_TO_ID["commut"]] == 1.0
@@ -284,10 +284,7 @@ def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark, monkeypatc
     collected, so the routed plan is taken from ``_mixed_routed_search``."""
     from search_engine_spark.corpus import synth_corpus
     from search_engine_spark.math import search as msearch
-    from search_engine_spark.math.index import build_math_index, build_math_lr_index
-    from search_engine_spark.math.search import mixed_search
     from search_engine_spark.plans.build import build_index
-    from pyspark.sql import functions as F
 
     docs = synth_corpus(spark, 150, n_parts=4).withColumn(
         "text",
@@ -299,11 +296,10 @@ def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark, monkeypatc
         ),
     ).cache()
     idx = build_index(spark, docs)
-    mp = build_math_index(idx.docstore)
     lr = build_math_lr_index(idx.docstore)
     q = "see merge [imath]a+\\frac{2}{a}[/imath]"
 
-    kernel_res = mixed_search(spark, idx, mp, q, math_lr_postings=lr)
+    kernel_res = mixed_search(spark, idx, lr, q)
     routed = []
     real_routed = msearch._mixed_routed_search
     monkeypatch.setattr(
@@ -311,9 +307,7 @@ def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark, monkeypatc
         lambda *a, **kw: routed.append(real_routed(*a, **kw)) or routed[-1],
     )
     # a 64-byte broadcast budget forces the routed combine
-    frame_res = mixed_search(
-        spark, idx, mp, q, math_lr_postings=lr, broadcast_budget_bytes=64
-    )
+    frame_res = mixed_search(spark, idx, lr, q, broadcast_budget_bytes=64)
 
     def rows(df):
         return [
@@ -334,16 +328,92 @@ def test_mixed_broadcast_byte_budget_fallback(spark, math_setup):
     math candidate to its doc's serving shard and return EXACTLY what the
     in-kernel broadcast path returns, in both merge modes — the budget is a
     routing decision, never a semantic."""
-    from search_engine_spark.math.search import mixed_search
-
-    idx, mp = math_setup
+    idx, lr = math_setup
     q = "frac [imath]\\frac{a}{b}[/imath]"
     for mode in ("or", "and"):
-        fast = mixed_search(spark, idx, mp, q, mode=mode).collect()
-        slow = mixed_search(spark, idx, mp, q, mode=mode, broadcast_budget_bytes=64).collect()
+        fast = mixed_search(spark, idx, lr, q, mode=mode).collect()
+        slow = mixed_search(spark, idx, lr, q, mode=mode, broadcast_budget_bytes=64).collect()
         assert fast, mode
         assert sorted(
             [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in fast], key=lambda t: t[0]
         ) == sorted(
             [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in slow], key=lambda t: t[0]
         ), mode
+
+
+def test_lr_rows_skip_pages_without_math(spark, monkeypatch):
+    """build_math_lr_index emits one row per leaf-root path with the
+    expression's token position; a page without a complete span (no span,
+    an unterminated tag, null text) emits nothing and is never tokenized."""
+    import pandas as pd
+
+    from search_engine_spark.math import index as MI
+    from search_engine_spark.math.texparse import tex_lr_paths
+
+    pages = [
+        (1, "plain words only"),
+        (2, "see [imath]a[/imath] and [imath]b+c[/imath] end"),
+        (3, "x [imath]a^2[/imath] y [imath]oops never closed"),
+        (4, "[imath]unterminated from the start"),
+        (5, None),
+    ]
+    want = sorted(
+        (doc, exp, struct, sym, pid, len(paths), pos, struct.split("/")[0], struct.split("/")[-1])
+        for doc, exp, tex, pos in [(2, 0, "a", 1), (2, 1, "b+c", 3), (3, 0, "a^2", 1)]
+        for paths in [tex_lr_paths(tex)]
+        for pid, (struct, sym) in enumerate(paths, start=1)
+    )
+    df = spark.createDataFrame(pages, "doc_id long, text string")
+    got = sorted(tuple(r) for r in MI.build_math_lr_index(df).collect())
+    assert got == want
+
+    tokenized = []
+    real = MI._math_exp_positions_memo
+    monkeypatch.setattr(
+        MI, "_math_exp_positions_memo", lambda t: tokenized.append(t) or real(t)
+    )
+    pdf = pd.DataFrame({"doc_id": [d for d, _ in pages], "text": [t for _, t in pages]})
+    rows = pd.concat(list(MI._lr_rows(iter([pdf]))))
+    assert sorted(rows.itertuples(index=False, name=None)) == want
+    assert tokenized == [pages[1][1], pages[2][1]]
+
+
+def test_mixed_search_one_shard_takes_idf_from_blocks(spark, math_setup, monkeypatch):
+    """On one serving shard a mixed query takes term idf from the blocks'
+    n counts and runs no df lookup; its answers equal a two-shard run's,
+    which looks df up, in both merge modes and on both math paths."""
+    from search_engine_spark.plans import serve
+
+    idx, lr = math_setup
+    q = "frac doc [imath]\\frac{a}{b}[/imath]"
+
+    def answers():
+        return {
+            (mode, budget): [
+                (r["doc_id"], round(r["score"], 9), round(r["max_math"], 9), round(r["prox"], 9))
+                for r in mixed_search(
+                    spark, idx, lr, q, mode=mode, broadcast_budget_bytes=budget
+                ).collect()
+            ]
+            for mode in ("or", "and")
+            for budget in (64 << 20, 64)
+        }
+
+    real_lookup = serve.df_lookup
+
+    def no_lookup(*a, **kw):
+        raise AssertionError("df_lookup ran on one serving shard")
+
+    monkeypatch.setattr(serve, "df_lookup", no_lookup)
+    assert serve.serving_coalesce(idx.doc_blocks, docN=idx.docN)[1] == 1
+    one = answers()
+
+    looked_up = []
+    monkeypatch.setattr(
+        serve, "df_lookup", lambda *a, **kw: looked_up.append(a) or real_lookup(*a, **kw)
+    )
+    monkeypatch.setenv("SPARK_GRAFT_SERVE_SHARDS", "2")
+    assert serve.serving_coalesce(idx.doc_blocks, docN=idx.docN)[1] == 2
+    two = answers()
+    assert looked_up
+    assert one == two and all(one.values())

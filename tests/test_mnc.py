@@ -76,7 +76,7 @@ def test_mark_and_cross_consumption():
 )
 def test_golden_case_spark(spark, name, query, hits, nots):
     """Distributed twin: same ranking through build_math_lr_index +
-    mnc_expr_scores (candidate AND-join + per-expression applyInPandas)."""
+    mnc_expr_scores (candidate AND-join + the per-doc mark-and-cross kernel)."""
     from search_engine_spark.math.index import build_math_lr_index
     from search_engine_spark.math.search import mnc_expr_scores
 
@@ -99,7 +99,7 @@ def test_mnc_candidate_gen_is_keyed_join(spark):
     subpath directories, math-index/dir-merge.c:74-89). Covers both the
     concrete (leaf_seg) and wildcard-with-trail (root_seg) branches."""
     from search_engine_spark.math.index import build_math_lr_index
-    from search_engine_spark.math.search import _mnc_per_exp
+    from search_engine_spark.math.search import mnc_expr_scores
 
     df = spark.createDataFrame(
         [(0, "doc [imath]a + \\frac 1 a = a[/imath] end"),
@@ -108,7 +108,7 @@ def test_mnc_candidate_gen_is_keyed_join(spark):
     )
     lr = build_math_lr_index(df)
     for q in ("a + \\frac 1 a = a", "f(x) = \\qvar{x} + \\frac \\qvar{x} 2"):
-        pe = _mnc_per_exp(spark, lr, q)
+        pe = mnc_expr_scores(spark, lr, q)
         plan = pe._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" not in plan, (q, plan)
 
