@@ -11,6 +11,8 @@ Prints the properties the 1000-executor story rests on, WITH the actual
   (PushedFilters) and the scan reads only the posting-block columns;
 - MNC candidate generation: broadcast hash equi-joins, NO
   BroadcastNestedLoopJoin (the round-3 scale-killer, since replaced);
+- mixed term + TeX query: one cogrouped kernel over the term blocks and
+  the math rows routed to their doc's shard, nothing persisted;
 - dedup LSH: hash-partitioned aggregates, no all-pairs joins.
 
 Run: ``python scripts/plan_audit.py > PLANS.md`` (the committed PLANS.md
@@ -189,7 +191,39 @@ def main() -> None:
         ],
     ))
 
-    # --- 3b. subpath expression search (Q19): broadcast AND-join ----------
+    # --- 3b. mixed term + TeX query: one routed plan ----------------------
+    # the math rows meet their doc's shard blocks in one cogrouped kernel;
+    # nothing is persisted or collected before the plan runs
+    from search_engine_spark.math.search import mixed_search
+
+    mdocs = _math_docs(spark, "/root/testdata/sf0.001").select(
+        F.format_string("https://math.local/doc%010d", F.col("doc_id")).alias("url"),
+        "text",
+        "doc_id",
+    )
+    save_index(build_index(spark, mdocs, id_col="doc_id"), store + "_mixed")
+    midx = load_index(spark, store + "_mixed")
+    plan = explain_str(
+        mixed_search(spark, midx, build_math_lr_index(mdocs), "see [imath]a+\\frac{2}{a}[/imath]")
+    )
+    names = _node_names(plan)
+    out.append(section(
+        "Mixed term + TeX query (math rows routed to their doc's shard)",
+        plan,
+        [
+            ("ONE cogrouped kernel (FlatMapCoGroupsInPandas) scores term "
+             "blocks and math rows together",
+             names.count("FlatMapCoGroupsInPandas") == 1),
+            ("the MNC probe is a BroadcastHashJoin, no "
+             "BroadcastNestedLoopJoin",
+             "BroadcastHashJoin" in names
+             and "BroadcastNestedLoopJoin" not in plan),
+            ("nothing persisted: no InMemoryTableScan",
+             "InMemoryTableScan" not in plan),
+        ],
+    ))
+
+    # --- 3c. subpath expression search (Q19): broadcast AND-join ----------
     from search_engine_spark.math.index import build_math_index
     from search_engine_spark.math.search import math_expr_scores
 

@@ -32,6 +32,8 @@ Mixed total score is the reference formula verbatim (search/search.c:253-274):
 Proximity merges term-keyword positions with MATCHED expression positions
 (exp_pos, one extra keyword per TEX keyword — search/search.c:215-237,
 indexer/index.c:149-151 gives each math expression a token position).
+A mixed query is one lazy plan: each doc's math row meets that doc's
+serving-shard term blocks in one cogrouped kernel (``mixed_search``).
 """
 
 from __future__ import annotations
@@ -360,27 +362,13 @@ def split_query(qtext: str) -> tuple[list[str], list[str]]:
     return terms, texes
 
 
-# Above this BYTE budget the per-doc math results are not collected for a
-# broadcast into the term kernel; each math candidate is routed to the
-# serving shard that owns its doc id instead (_mixed_routed_search) — a
-# hostile query matching a large corpus slice (or one with pathological
-# position lists) must not materialize on the driver. The budget is
-# measured IN-PLAN before anything is collected (count + sum(size(_mpos))
-# over the cached per-doc frames), so the driver never holds an unmeasured
-# payload — the round-4 row-count cap could admit 200k rows of arbitrarily
-# long position lists. The reference holds math score postings as transient
-# in-memory lists under the same kind of read caps (math-expr-search.c
-# transient postings + config.h read limits).
-MAX_BROADCAST_MATH_BYTES = 64 << 20
-_MDOC_BYTES = 48  # per-doc payload overhead (key + score + list header)
-_MPOS_BYTES = 8  # per matched-expression position
-
 _MIXED_SCHEMA = (
     "doc_id long, bm25 double, match_dim double, max_math double, "
     "prox double, score double"
 )
 _MIXED_COLS = ["doc_id", "bm25", "match_dim", "max_math", "prox", "score"]
 _MIXED_DTYPES = dict(zip(_MIXED_COLS, ["int64"] + ["float64"] * 5))
+_MATH_SCHEMA = "doc_id long, kw_idx int, math_score double, _mpos array<int>"
 _MATH_COLS = ["doc_id", "kw_idx", "math_score", "_mpos"]
 
 
@@ -392,7 +380,6 @@ def mixed_search(
     mode: str = "or",
     k: int = S.RANK_K,
     with_prox: bool = True,
-    broadcast_budget_bytes: int = MAX_BROADCAST_MATH_BYTES,
     lr_doc_partitioned: bool = False,
 ) -> DataFrame:
     """Full mixed term+math query -> top-k
@@ -409,21 +396,16 @@ def mixed_search(
     extra keyword per TEX keyword (reference search/search.c:215-237) — a
     doc whose only adjacency is term<->math gets prox != ln 0.3.
 
-    Serving shape: every term-bearing doc is scored by the doc-sharded
-    serving scorer (plans/serve._batch_score_shard) with a per-doc math
-    channel — the reference merges its transient math postings into the
-    same DAAT loop as the term iterators (search/search.c:374). When the
-    math candidate payload fits ``broadcast_budget_bytes`` (measured
-    in-plan BEFORE any collect) the channel is BROADCAST to every shard and
-    the term side pays ZERO shuffle (_mixed_shard_search); otherwise each
-    math candidate is routed to the shard that owns its doc id
-    (_mixed_routed_search), which is also how a math-only query is scored.
-    On ONE serving shard either kernel sees every block of each query term,
-    so it takes term idf from the blocks' ``n`` counts (serve._block_idf)
-    and no df lookup runs; past one shard idf comes from serve.df_lookup.
-    A routed query with term keywords comes back as its collected top-k
-    in a local frame: its persisted per-TeX frames are freed before the
-    return, so the caller has nothing to release.
+    Serving shape: one lazy plan. Each math candidate row goes to the
+    serving shard that owns its doc (_mixed_routed_search), where the
+    doc-sharded serving scorer (plans/serve._batch_score_shard) runs with
+    a per-doc math channel — the reference merges its transient math
+    postings into the same DAAT loop as the term iterators
+    (search/search.c:374). Nothing is persisted or collected here, so the
+    caller has nothing to release. On ONE serving shard the kernel sees
+    every block of each query term, so it takes term idf from the blocks'
+    ``n`` counts (serve._block_idf) and no df lookup runs; past one shard
+    idf comes from serve.df_lookup.
     """
     terms, texes = split_query(qtext)
     n_terms = len(terms)
@@ -434,19 +416,16 @@ def mixed_search(
         n_q = len(tex_lr_paths(tex))
         if n_q == 0:
             continue
-        mdf = mnc_expr_scores(
-            spark, math_lr_postings, tex, assume_doc_partitioned=lr_doc_partitioned
-        ).select(
-            "doc_id",
-            F.lit(n_terms + ti).alias("kw_idx"),
-            (F.col("mnc_score") / F.lit(100.0 * n_q)).alias("math_score"),
-            F.col("exp_pos_list").alias("_mpos"),
+        per_tex.append(
+            mnc_expr_scores(
+                spark, math_lr_postings, tex, assume_doc_partitioned=lr_doc_partitioned
+            ).select(
+                "doc_id",
+                F.lit(n_terms + ti).alias("kw_idx"),
+                (F.col("mnc_score") / F.lit(100.0 * n_q)).alias("math_score"),
+                F.col("exp_pos_list").alias("_mpos"),
+            )
         )
-        if terms:
-            # the byte-budget measurement job and the collect (or the routed
-            # plan) then share one evaluation
-            mdf = mdf.persist()
-        per_tex.append(mdf)
 
     if not terms and not per_tex:
         return spark.createDataFrame([], _MIXED_SCHEMA)
@@ -461,37 +440,9 @@ def mixed_search(
                 (i, t, S.idf(dfmap.get(t, 0.0), float(index.docN)))
                 for i, t in enumerate(terms)
             ]
-        # byte-budget the candidate payload IN-PLAN (count + position
-        # volume over the cached frames) BEFORE collecting anything; only a
-        # payload that provably fits is materialized for the broadcast
-        spent = 0
-        for mdf in per_tex:
-            m = mdf.agg(
-                F.count(F.lit(1)).alias("nd"),
-                F.coalesce(F.sum(F.size("_mpos")), F.lit(0)).alias("np"),
-            ).collect()[0]
-            spent += int(m["nd"]) * _MDOC_BYTES + int(m["np"]) * _MPOS_BYTES
-            if spent > broadcast_budget_bytes:
-                break
-        if spent <= broadcast_budget_bytes:
-            minfo = _minfo(r for mdf in per_tex for r in mdf.collect())
-            for mdf in per_tex:
-                mdf.unpersist()
-            return _mixed_shard_search(
-                spark, index, serving, kws, mode, minfo, k, with_prox
-            )
-
-    out = _mixed_routed_search(spark, index, serving, kws, mode, per_tex, k, with_prox)
-    if not terms:
-        return out
-    # the routed plan reads the persisted per-tex frames: collect its <= k
-    # rows and free the frames here, so no caller holds them past the query
-    try:
-        top = out.toPandas()
-    finally:
-        for mdf in per_tex:
-            mdf.unpersist()
-    return spark.createDataFrame(top, _MIXED_SCHEMA)
+    return _mixed_routed_search(
+        spark, index, serving, n_shards, kws, mode, per_tex, k, with_prox
+    )
 
 
 def _minfo(rows) -> dict[int, list]:
@@ -581,58 +532,11 @@ def _score_shard(batches, kws, mode, k, with_prox, avgdl, docN, channel) -> pd.D
     return None
 
 
-def _mixed_shard_search(
-    spark: SparkSession,
-    index: InvertedIndex,
-    serving: DataFrame,
-    kws: list[tuple[int, str, float | None]],
-    mode: str,
-    minfo: dict[int, list],
-    k: int,
-    with_prox: bool,
-) -> DataFrame:
-    """Mixed serving with the math channel BROADCAST to every shard (zero
-    term-side shuffle).
-
-    ``minfo``: doc_id -> [max_math, [(kw_idx, [positions...])...]]. Each
-    shard decodes its term blocks once, scores the COMPLETE reference total
-    per doc and emits its local top-k PLUS every math-matched doc it
-    term-matched (so the math-only branch can be deduped exactly: a kernel
-    row exists for every term∩math doc, and a kernel row always carries the
-    true total). Rows moved per query: n_shards*k + |math∩term| — same
-    order as term-only serving. Math-only docs (no term postings anywhere)
-    become a tiny locally built frame with bm25=1; a doc-keyed priority
-    window keeps the kernel row when both exist.
-    mode='and' keeps reference semantics (all term keywords required; math
-    optional) so no math-only branch applies.
-    """
-    avgdl, docN = float(index.avgdl), float(index.docN)
-    bc = spark.sparkContext.broadcast(_math_channel(minfo))
-    blocks = serving.filter(serve.sql_in("term", {t for _, t, _ in kws}))
-
-    def kernel(batches):
-        out = _score_shard(batches, kws, mode, k, with_prox, avgdl, docN, bc.value)
-        if out is not None:
-            yield out
-
-    local = blocks.mapInPandas(kernel, _MIXED_SCHEMA)
-    if mode != "and" and minfo:
-        solo = spark.createDataFrame(_solo_frame(minfo, with_prox), _MIXED_SCHEMA)
-        w = Window.partitionBy("doc_id").orderBy("_prio")
-        local = (
-            local.withColumn("_prio", F.lit(0))
-            .unionByName(solo.withColumn("_prio", F.lit(1)))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_prio", "_rn")
-        )
-    return top_k(local, k).select(*_MIXED_COLS)
-
-
 def _mixed_routed_search(
     spark: SparkSession,
     index: InvertedIndex,
     serving: DataFrame,
+    n_shards: int,
     kws: list[tuple[int, str, float | None]],
     mode: str,
     per_tex: list[DataFrame],
@@ -641,24 +545,26 @@ def _mixed_routed_search(
 ) -> DataFrame:
     """Mixed serving with each math candidate ROUTED to its doc's shard.
 
-    For a math candidate set too large to broadcast: every math row goes to
-    the serving shard that owns its doc id — the doc-id runs of
-    plans/cache.partition_doc_ranges over the serving layout — and the
-    shard's term blocks meet it in one cogrouped pandas kernel that runs
-    the same scorer as the broadcast path. Both sides are keyed by the
-    same content lookup (a block's first doc id pins its shard), so each
-    doc is scored by exactly one group and no dedup window is needed:
-    term-matched docs get the full mixed total, math-only docs bm25 = 1.
-    A math-only query (no term keywords) has no term side and spreads its
-    math rows over hash buckets of the doc id instead.
+    Every math row goes to the serving shard that owns its doc id — the
+    doc-id runs of plans/cache.partition_doc_ranges over the serving
+    layout — and the shard's term blocks meet it in one cogrouped pandas
+    kernel that runs the serving scorer with the math channel. Both sides
+    are keyed by the same content lookup (a block's first doc id pins its
+    shard), so each doc is scored by exactly one group and no dedup window
+    is needed: term-matched docs get the full mixed total, math-only docs
+    bm25 = 1. On ONE serving shard every doc is on shard 0, so both sides
+    take that constant key and no doc-id runs are computed. A math-only
+    query (no term keywords) has no term side and spreads its math rows
+    over hash buckets of the doc id instead.
     """
-    from ..plans.cache import partition_doc_ranges, run_owner
-
     avgdl, docN = float(index.avgdl), float(index.docN)
     solo = mode != "and" or not kws
-    math_rows = per_tex[0]
-    for mdf in per_tex[1:]:
-        math_rows = math_rows.unionByName(mdf)
+    if per_tex:
+        math_rows = per_tex[0]
+        for mdf in per_tex[1:]:
+            math_rows = math_rows.unionByName(mdf)
+    else:  # term keywords only: every TEX keyword parsed to no path
+        math_rows = spark.createDataFrame([], _MATH_SCHEMA)
 
     def score(blocks: pd.DataFrame, mrows: pd.DataFrame) -> pd.DataFrame:
         minfo = _minfo(mrows[_MATH_COLS].itertuples(index=False, name=None))
@@ -679,16 +585,22 @@ def _mixed_routed_search(
         return top_k(local, k).select(*_MIXED_COLS)
 
     blocks = serving.filter(serve.sql_in("term", {t for _, t, _ in kws}))
-    # the runs of the query terms' blocks suffice: a math doc outside them
-    # has no query-term posting and is scored math-only
-    owner = run_owner(partition_doc_ranges(blocks))
+    if n_shards <= 1:
+        blocks = blocks.withColumn("_shard", F.lit(0))
+        math_rows = math_rows.withColumn("_shard", F.lit(0))
+    else:
+        from ..plans.cache import partition_doc_ranges, run_owner
 
-    @F.pandas_udf("long")
-    def shard_of(doc: pd.Series) -> pd.Series:
-        return pd.Series(owner(doc.to_numpy()))
+        # the runs of the query terms' blocks suffice: a math doc outside
+        # them has no query-term posting and is scored math-only
+        owner = run_owner(partition_doc_ranges(blocks))
 
-    blocks = blocks.withColumn("_shard", shard_of("first_doc_id"))
-    math_rows = math_rows.withColumn("_shard", shard_of("doc_id"))
+        @F.pandas_udf("long")
+        def shard_of(doc: pd.Series) -> pd.Series:
+            return pd.Series(owner(doc.to_numpy()))
+
+        blocks = blocks.withColumn("_shard", shard_of("first_doc_id"))
+        math_rows = math_rows.withColumn("_shard", shard_of("doc_id"))
     local = (
         blocks.groupBy("_shard")
         .cogroup(math_rows.groupBy("_shard"))

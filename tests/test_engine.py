@@ -156,15 +156,15 @@ def test_save_with_math_postings_still_loads(spark, saved_math_engine, tmp_path)
 
 
 def test_routed_mixed_query_leaves_nothing_persisted(spark, saved_math_engine):
-    """A routed mixed query (no broadcast budget) made through
-    SearchEngine.query frees its per-TeX frames itself: the caller has
-    nothing to release and the session's persisted RDDs do not grow."""
+    """A mixed query made through SearchEngine.query persists nothing: the
+    caller has nothing to release and the session's persisted RDDs do not
+    grow."""
     eng, _ = saved_math_engine
     q = "relation [imath]E=mc^2[/imath]"
     want = [(r["doc_id"], r["score"]) for r in eng.query(q).collect()]
     persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
     for _ in range(3):
-        got = eng.query(q, broadcast_budget_bytes=0).collect()
+        got = eng.query(q).collect()
         assert [(r["doc_id"], pytest.approx(r["score"], abs=1e-9)) for r in got] == want
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
 

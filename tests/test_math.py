@@ -276,14 +276,13 @@ def test_bracket_class_tokens():
     assert t.op == "sep" and len(t.children) == 2
 
 
-def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark, monkeypatch):
-    """The broadcast mixed path (math scores broadcast into the doc-sharded
-    kernel) must produce the same ranked totals as the routed combine (math
-    rows cogrouped with their doc's shard), with strictly fewer Exchange
-    (shuffle) nodes in the plan. mixed_search returns the routed top-k
-    collected, so the routed plan is taken from ``_mixed_routed_search``."""
+def test_mixed_search_one_shard_equals_four_shards(spark, monkeypatch):
+    """With a third of the docs holding math across 4 partitions, a mixed
+    query served on one shard (constant cogroup key) ranks exactly as on
+    four serving shards, where every math row is routed to its doc's shard
+    through the doc-id runs (plans/cache.run_owner)."""
     from search_engine_spark.corpus import synth_corpus
-    from search_engine_spark.math import search as msearch
+    from search_engine_spark.plans import serve
     from search_engine_spark.plans.build import build_index
 
     docs = synth_corpus(spark, 150, n_parts=4).withColumn(
@@ -299,46 +298,64 @@ def test_mixed_kernel_matches_frame_combine_and_sheds_shuffles(spark, monkeypatc
     lr = build_math_lr_index(idx.docstore)
     q = "see merge [imath]a+\\frac{2}{a}[/imath]"
 
-    kernel_res = mixed_search(spark, idx, lr, q)
-    routed = []
-    real_routed = msearch._mixed_routed_search
-    monkeypatch.setattr(
-        msearch, "_mixed_routed_search",
-        lambda *a, **kw: routed.append(real_routed(*a, **kw)) or routed[-1],
-    )
-    # a 64-byte broadcast budget forces the routed combine
-    frame_res = mixed_search(spark, idx, lr, q, broadcast_budget_bytes=64)
+    def rows():
+        return {
+            mode: [
+                (r["doc_id"], round(r["score"], 6), round(r["max_math"], 6), round(r["prox"], 6))
+                for r in mixed_search(spark, idx, lr, q, mode=mode).collect()
+            ]
+            for mode in ("or", "and")
+        }
 
-    def rows(df):
-        return [
-            (r["doc_id"], round(r["score"], 6), round(r["max_math"], 6), round(r["prox"], 6))
-            for r in df.collect()
-        ]
-
-    assert rows(kernel_res) == rows(frame_res)
-    kp = kernel_res._jdf.queryExecution().executedPlan().toString()
-    fp = routed[0]._jdf.queryExecution().executedPlan().toString()
-    assert kp.count("Exchange") < fp.count("Exchange"), (
-        kp.count("Exchange"), fp.count("Exchange"))
+    assert serve.serving_coalesce(idx.doc_blocks, docN=idx.docN)[1] == 1
+    one = rows()
+    monkeypatch.setenv("SPARK_GRAFT_SERVE_SHARDS", "4")
+    assert serve.serving_coalesce(idx.doc_blocks, docN=idx.docN)[1] == 4
+    four = rows()
+    assert one == four
+    assert sum(m > 0 for _, _, m, _ in one["or"]) > 10
 
 
-def test_mixed_broadcast_byte_budget_fallback(spark, math_setup):
-    """A math payload exceeding the broadcast byte budget (here: a 64-byte
-    budget, standing in for a pathological-position corpus) must route each
-    math candidate to its doc's serving shard and return EXACTLY what the
-    in-kernel broadcast path returns, in both merge modes — the budget is a
-    routing decision, never a semantic."""
+def test_mixed_and_mode_keeps_the_or_rows_holding_every_term(spark, math_setup):
+    """AND mode requires every term keyword and leaves math optional: its
+    rows are exactly the OR-mode rows (same score and max_math) whose
+    tokenized text holds every term keyword, while OR mode also returns
+    math-only docs that AND mode drops."""
+    from search_engine_spark.plans.query import digest_query
+
     idx, lr = math_setup
-    q = "frac [imath]\\frac{a}{b}[/imath]"
+    q = "see [imath]\\frac{a}{b}[/imath]"
+    terms, _ = split_query(q)
+    text = {r["doc_id"]: r["text"] for r in idx.docstore.collect()}
+
+    def rows(mode):
+        return {
+            r["doc_id"]: (round(r["score"], 9), round(r["max_math"], 9))
+            for r in mixed_search(spark, idx, lr, q, mode=mode).collect()
+        }
+
+    by_or, by_and = rows("or"), rows("and")
+    assert by_and
+    assert by_and == {
+        d: v for d, v in by_or.items() if set(terms) <= set(digest_query(text[d]))
+    }
+    assert any(d not in by_and and m > 0 for d, (_, m) in by_or.items())
+
+
+def test_mixed_term_query_with_pathless_tex_ranks_terms_only(spark, math_setup):
+    """A TeX keyword that yields no leaf-root path adds no math channel: the
+    query ranks as its term keywords alone, in both merge modes."""
+    from search_engine_spark.plans import serve
+
+    idx, lr = math_setup
     for mode in ("or", "and"):
-        fast = mixed_search(spark, idx, lr, q, mode=mode).collect()
-        slow = mixed_search(spark, idx, lr, q, mode=mode, broadcast_budget_bytes=64).collect()
-        assert fast, mode
-        assert sorted(
-            [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in fast], key=lambda t: t[0]
-        ) == sorted(
-            [(r["doc_id"], round(r["score"], 9), round(r["max_math"], 9)) for r in slow], key=lambda t: t[0]
-        ), mode
+        got = mixed_search(spark, idx, lr, "frac [imath]\\text{hi}[/imath]", mode=mode).collect()
+        want = serve.shard_search(spark, idx, {"q": ("frac", mode)}).orderBy("rank").collect()
+        assert want, mode
+        assert [(r["doc_id"], round(r["score"], 9)) for r in got] == [
+            (r["doc_id"], round(r["score"], 9)) for r in want
+        ], mode
+        assert all(r["max_math"] == 0 for r in got), mode
 
 
 def test_lr_rows_skip_pages_without_math(spark, monkeypatch):
@@ -380,23 +397,21 @@ def test_lr_rows_skip_pages_without_math(spark, monkeypatch):
 
 def test_mixed_search_one_shard_takes_idf_from_blocks(spark, math_setup, monkeypatch):
     """On one serving shard a mixed query takes term idf from the blocks'
-    n counts and runs no df lookup; its answers equal a two-shard run's,
-    which looks df up, in both merge modes and on both math paths."""
-    from search_engine_spark.plans import serve
+    n counts, runs no df lookup and computes no doc-id runs (every doc is
+    on shard 0); its answers equal a two-shard run's, which looks df up
+    and routes math rows by the runs, in both merge modes."""
+    from search_engine_spark.plans import cache, serve
 
     idx, lr = math_setup
     q = "frac doc [imath]\\frac{a}{b}[/imath]"
 
     def answers():
         return {
-            (mode, budget): [
+            mode: [
                 (r["doc_id"], round(r["score"], 9), round(r["max_math"], 9), round(r["prox"], 9))
-                for r in mixed_search(
-                    spark, idx, lr, q, mode=mode, broadcast_budget_bytes=budget
-                ).collect()
+                for r in mixed_search(spark, idx, lr, q, mode=mode).collect()
             ]
             for mode in ("or", "and")
-            for budget in (64 << 20, 64)
         }
 
     real_lookup = serve.df_lookup
@@ -404,16 +419,24 @@ def test_mixed_search_one_shard_takes_idf_from_blocks(spark, math_setup, monkeyp
     def no_lookup(*a, **kw):
         raise AssertionError("df_lookup ran on one serving shard")
 
+    def no_ranges(*a, **kw):
+        raise AssertionError("partition_doc_ranges ran on one serving shard")
+
+    real_ranges = cache.partition_doc_ranges
     monkeypatch.setattr(serve, "df_lookup", no_lookup)
+    monkeypatch.setattr(cache, "partition_doc_ranges", no_ranges)
     assert serve.serving_coalesce(idx.doc_blocks, docN=idx.docN)[1] == 1
     one = answers()
 
-    looked_up = []
+    looked_up, ranged = [], []
     monkeypatch.setattr(
         serve, "df_lookup", lambda *a, **kw: looked_up.append(a) or real_lookup(*a, **kw)
+    )
+    monkeypatch.setattr(
+        cache, "partition_doc_ranges", lambda *a: ranged.append(a) or real_ranges(*a)
     )
     monkeypatch.setenv("SPARK_GRAFT_SERVE_SHARDS", "2")
     assert serve.serving_coalesce(idx.doc_blocks, docN=idx.docN)[1] == 2
     two = answers()
-    assert looked_up
+    assert looked_up and ranged
     assert one == two and all(one.values())

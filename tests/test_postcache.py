@@ -205,10 +205,8 @@ def test_attach_survives_split_conf_drift(spark, index200, tmp_path):
 
 def test_warm_mixed_query_equals_cold(spark, monkeypatch):
     """Mixed term+math and math-only queries on a warmed engine score as
-    on a cold one, through both mixed paths (math broadcast into the shard
-    kernel, and math rows routed to their doc's shard). Two serving shards
-    and ONE math doc: the other shard's hits come from term blocks alone,
-    with no math row routed there."""
+    on a cold one. Two serving shards and ONE math doc: the other shard's
+    hits come from term blocks alone, with no math row routed there."""
     from search_engine_spark.plans.cache import partition_doc_ranges
     from search_engine_spark.plans.serve import serving_coalesce
 
@@ -231,17 +229,14 @@ def test_warm_mixed_query_equals_cold(spark, monkeypatch):
     q = "common formula [imath]\\frac{a}{b}[/imath]"
     q_math = "[imath]\\frac{a}{b}[/imath]"
 
-    def ranked(qtext, **kw):
-        return [(r["doc_id"], round(r["score"], 6)) for r in eng.query(qtext, **kw).collect()]
+    def ranked(qtext):
+        return [(r["doc_id"], round(r["score"], 6)) for r in eng.query(qtext).collect()]
 
     cold = ranked(q)
     assert len(cold) == 60 and cold[0][0] == 5 and cold[0][1] > 20000
-    assert ranked(q, broadcast_budget_bytes=0) == cold
     cold_math = ranked(q_math)
     assert [d for d, _ in cold_math] == [5]
     eng.warm(1 << 20)
     assert "common" in eng.index.hot_postings
     assert ranked(q) == cold
-    assert ranked(q, broadcast_budget_bytes=0) == cold
     assert ranked(q_math) == cold_math
-    assert ranked(q_math, broadcast_budget_bytes=0) == cold_math
